@@ -4,15 +4,9 @@
 #   SPARK_DRIVER_MEM=24g dev/run_main.sh graft.Bench [args...]
 # Env passthrough: SPARK_GRAFT_SF_DIR, GRAFT_BENCH_* etc. are plain env
 # vars and reach the JVM unchanged; GRAFT_JAVA_OPTS adds raw JVM flags.
-# GRAFT_TEST_CP=1 adds the test classpath (probe mains live in test scope).
 set -euo pipefail
 MAIN="$1"; shift
 CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
-if [ "${GRAFT_TEST_CP:-}" = "1" ]; then
-  TJARS=$(find /root/.cache/coursier -name "scalatest*.jar" -o -name "scalactic*.jar" \
-          -o -name "scalacheck*.jar" 2>/dev/null | tr '\n' ':')
-  CP="/root/repo/target/scala-2.13/test-classes:$CP:$TJARS"
-fi
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \

@@ -171,7 +171,8 @@ object GraftSession {
       // corpus (12.3 M bench shingles, 90 M bits requested, 67.1 M
       // granted), the prefilter's survivor stream grew 70× (846 k → 59.2 M
       // rows) and the downstream exact semi-join inherited the spill —
-      // D1517Probe attributed most of d17's fifth-decade growth here. 2^30
+      // most of d17's fifth-decade growth sat here (SCALE.md "Every >10×
+      // row attributed"). 2^30
       // keeps the filter honest to ~147 M items (a plausible benchmark-
       // suite ceiling) while capping the broadcast at 128 MiB; the bit
       // count actually allocated is still demand-sized from n.

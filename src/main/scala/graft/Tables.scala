@@ -33,6 +33,17 @@ object Tables {
       case _ => df
     }
 
+  /** On-disk bytes of a corpus table (`getContentSummary`, so a
+    * directory-shaped table sums its part files); None when the size
+    * cannot be read. Callers choose their own fallback for None.
+    */
+  private[graft] def tableBytes(s: SparkSession, d: String, table: String): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(s"$d/$table.parquet")
+    try Some(p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength)
+    catch { case scala.util.control.NonFatal(_) => None }
+  }
+
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = t(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame = t(s, d, "customer")

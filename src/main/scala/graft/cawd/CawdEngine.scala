@@ -326,8 +326,7 @@ object CawdEngine {
       .toDF())
 
   /** Same check over an already cover-filtered chunk-content relation with
-    * at least (file, seq, content) — e.g. the c06 export table, so the
-    * DuckDB oracle and this digest consume byte-identical input.
+    * at least (file, seq, content).
     */
   def reconstructionCheckRows(chunkRows: DataFrame): DataFrame = {
     val spark = chunkRows.sparkSession

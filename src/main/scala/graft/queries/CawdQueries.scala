@@ -126,10 +126,11 @@ object CawdQueries {
     }),
 
     // S7: byte-identity reconstruction over both formats. The cover-filtered
-    // chunk contents are materialized, the streaming SHA-1 digest consumes
-    // the EXPORT, and the DuckDB oracle re-verifies every chunk's bytes
-    // against `read_blob` slices of the original files at the cumulative
-    // offset — an independent byte-level check of the same relation.
+    // chunk contents are materialized and SHA-1-digested in the same pass
+    // that writes the export, and the DuckDB oracle re-verifies every
+    // chunk's bytes against `read_blob` slices of the original files at the
+    // cumulative offset — an independent byte-level check of the same
+    // relation.
     "c06_reconstruction" -> ((s, d) => {
       val orcDir = ensureOrcFixtures(s, d)
       val orc = CawdEngine.chunkFiles(s, CawdEngine.listFiles(orcDir, ".orc"),
@@ -159,40 +160,20 @@ object CawdQueries {
       val exportOpts = Map(
         "compression" -> "uncompressed",
         "parquet.block.size" -> (16L * 1024 * 1024).toString)
-      // Fused shape (round 16, default): digest the cover content AS the
-      // export is written (per-run partial digests to a sidecar, content
-      // never crosses an exchange), then verify each partial against the
+      // Fused shape (round 16): digest the cover content AS the export is
+      // written (per-run partial digests to a sidecar, content never
+      // crosses an exchange), then verify each partial against the
       // original file's byte range — CawdEngine.digestingExportWrite
-      // scaladoc has the full argument; the old four-pass shape stays
-      // runnable via -Dgraft.c06.fused=0 (the CostCenterProbe comparison
-      // arm). The DuckDB oracle independently verifies the export's bytes
-      // against read_blob slices of the originals either way.
-      if (!sys.props.get("graft.c06.fused").contains("0")) {
-        val out = CawdExport.dir(d, "c06")
-        CawdExport.materializeVia(d, "c06",
-          CawdEngine.digestingExportWrite(cover, _, exportOpts))
-        CawdEngine.identityFromDigests(s, out)
-          .withColumn("file", base(col("file")))
-          .orderBy("file")
-      } else {
-      CawdExport.materializeDf(s, d, "c06", cover.drop("start"), exportOpts)
-      // Reassembly runs on a memory-bounded child session (same incident):
-      // (a) the vectorized reader sizes batches by ROW COUNT, so the
-      // session's 1024-row blob batches can transiently hold ~1 GB per scan
-      // task — 16 rows caps a worst-case 16 MB-chunk batch at ~256 MB;
-      // (b) the digest's repartition(file) sort ran 32-way, each reduce task
-      // externally sorting MB-wide rows — 8 partitions bounds concurrent
-      // sort memory at the cost of nothing (the stage is I/O-bound and the
-      // file count per corpus is small). On a real cluster the same knobs
-      // are per-job scan/shuffle sizing, not session-wide constants.
-      val c = graft.GraftSession.child(s, "c06-reassembly",
-        shufflePartitions = Some(8))
-      c.conf.set("spark.sql.parquet.columnarReaderBatchSize", "16")
-      val tbl = c.read.parquet(CawdExport.dir(d, "c06"))
-      CawdEngine.reconstructionCheckRows(tbl)
+      // scaladoc has the full argument. It replaced a four-pass
+      // write/re-read/sort/digest shape at 4.2× (SCALE.md "Round 16: c06
+      // fused"). The DuckDB oracle independently verifies the export's
+      // bytes against read_blob slices of the originals.
+      val out = CawdExport.dir(d, "c06")
+      CawdExport.materializeVia(d, "c06",
+        CawdEngine.digestingExportWrite(cover, _, exportOpts))
+      CawdEngine.identityFromDigests(s, out)
         .withColumn("file", base(col("file")))
         .orderBy("file")
-      }
     }),
 
     // Content-defined chunking baseline (gear/FastCDC, [[CdcChunker]]):

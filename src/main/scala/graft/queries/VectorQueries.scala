@@ -33,7 +33,8 @@ object VectorQueries {
     * later, exactly like the fixed IVF nprobe did before its C^0.65
     * schedule).
     *
-    * Corpus-size correction first (round 8, E02NbProbe): the gate corpora
+    * Corpus-size correction first (round 8, SCALE.md "Corpus-size
+    * correction"): the gate corpora
     * hold N = 200 k (100×, np = 13) and N = 2 M (1000×, np = 16) vectors —
     * round 7's notes said 5 M/50 M, which mis-located the anchors. The
     * measured anchors are:
@@ -298,11 +299,6 @@ object VectorQueries {
        |${rerankCtes(spark, "cand")}""".stripMargin
   }
 
-  // private[graft]: R17Probe re-runs the shipped e02/e04 SQL on a child
-  // session with a different shuffle-partition posture
-  private[graft] def e02SqlSpark: String = e02Sql(spark = true)
-  private[graft] def e04SqlSpark: String = e04Sql(spark = true)
-
   /** Exact-rerank tail shared by the probe→candidate indexes (e02 LSH,
     * e03/e07 IVF): score each (q_id, n_id) candidate with exact cosine,
     * keep top-[[TopK]] per probe. The SPARK join shape is scale-load-
@@ -382,7 +378,8 @@ object VectorQueries {
     // BALANCED CPU-dense stages, so cores+2 partitions (the rows rule's
     // fifth-decade value, 34) schedules a full 32-task wave plus a 2-task
     // straggler wave — near-2× wall on the dominant stage. Measured
-    // (R17Probe e04parts, fifth decade, paired warm legs): 34 partitions
+    // (SCALE.md "Wave quantization", fifth decade, paired warm legs): 34
+    // partitions
     // 45.8/42.9 s vs 32 partitions 34.5/35.5 s — e04 back in its
     // r15/r16 33-37 s band, and e03/e06/e07 carried the same drift.
     // Rounding DOWN to a multiple of cores keeps the rows-derived scale
@@ -396,8 +393,7 @@ object VectorQueries {
       shufflePartitions = Some(parts))
   }
 
-  // private[graft]: R16Probe decomposes e05 over the same registered views
-  private[graft] def registerEmbeddings(s: SparkSession, d: String): SparkSession = {
+  private def registerEmbeddings(s: SparkSession, d: String): SparkSession = {
     // dense entry: every query here does per-cell/per-plane kernel math
     // over the vectors — parallelism must follow rows, not parquet bytes
     // (Tables.spread scaladoc; the sf10 e03/e07 superlinear finding)
@@ -738,9 +734,8 @@ object VectorQueries {
     * build reads the centroid view registered one line above, so a cold
     * build evaluates training exactly once across the two tables.
     */
-  // private[graft]: R16Probe decomposes e05 over the persisted index views
-  private[graft] def ivfIndexViews(s: SparkSession, d: String,
-                                   trainSample: Boolean): String = {
+  private def ivfIndexViews(s: SparkSession, d: String,
+                            trainSample: Boolean): String = {
     val sfx = if (trainSample) "s" else "f"
     val key = graft.cawd.CawdExport.corpusContentKey(s,
       Seq(s"$d/embeddings.parquet"),

@@ -22,17 +22,21 @@ import graft.{GraftSession, SparkEntry}
   * would reintroduce the OOM visible only at the fifth decade. This spec
   * runs the REAL c06 query path (so it guards the shipped writeOptions,
   * not a copy) and asserts every column chunk footer in the export reports
-  * UNCOMPRESSED.
+  * UNCOMPRESSED. The same run's result rows are checked too: one row per
+  * source file, each byte-identical.
   */
 class CawdExportCodecSpec extends AnyFunSuite {
 
-  test("c06 content export is written with UNCOMPRESSED column chunks") {
-    val spark = GraftSession.get("c06-codec-spec")
-    val sfDir = "/root/testdata/sf0.001"
-    // force the export write through the shipped query (memoized per JVM,
-    // so this is free if another spec already ran c06 this session)
-    SparkEntry.queries("c06_reconstruction")(spark, sfDir).count()
+  private lazy val spark = GraftSession.get("c06-codec-spec")
+  private val sfDir = "/root/testdata/sf0.001"
 
+  // runs the shipped query once; the export write it forces is memoized
+  // per JVM, so this is cheap if another spec already ran c06
+  private lazy val c06Rows =
+    SparkEntry.queries("c06_reconstruction")(spark, sfDir).collect()
+
+  test("c06 content export is written with UNCOMPRESSED column chunks") {
+    assert(c06Rows.nonEmpty)
     val out = new Path(CawdExport.dir(sfDir, "c06"))
     val conf = new Configuration()
     val fs = out.getFileSystem(conf)
@@ -50,5 +54,17 @@ class CawdExportCodecSpec extends AnyFunSuite {
     assert(offending.isEmpty,
       "c06 export has compressed column chunks (direct-ByteBuffer OOM " +
         s"regression at the 1000x corpus): ${offending.take(5).mkString(", ")}")
+  }
+
+  test("c06 returns one byte-identical row per source file") {
+    val orcDir = graft.queries.CawdQueries.ensureOrcFixtures(spark, sfDir)
+    val sources = (CawdEngine.listFiles(orcDir, ".orc") ++
+      CawdEngine.listFiles(sfDir, ".parquet"))
+      .map { case (f, _) => new Path(f).getName }.sorted
+    assert(sources.nonEmpty, s"no source files under $sfDir")
+    val files = c06Rows.map(_.getAs[String]("file")).toSeq.sorted
+    assert(files == sources)
+    val broken = c06Rows.filterNot(_.getAs[Boolean]("identical"))
+    assert(broken.isEmpty, s"c06 reports non-identical files: ${broken.mkString(", ")}")
   }
 }

@@ -80,12 +80,12 @@ class SemDedupCapSpec extends AnyFunSuite {
   test("cellExpr retune knob: finer clustering drops a subset of the " +
     "all-pairs reference; default is the production sqrt(N)") {
     // round-11 retune seam: semanticDedupSql(cellExpr = ...) sweeps the
-    // cell count (E05CellProbe measures the cost/quality tradeoff at 2 M
-    // vectors). Property: ANY clustering's drop set is a subset of the
-    // uncapped single-cell (all-pairs) reference — dropping needs a
-    // smaller-id cos≥t neighbor in the SAME cell, and the single cell
-    // contains every pair — so raising the exponent can only lose dups,
-    // never invent them.
+    // cell count (the cost/quality tradeoff at 2 M vectors is in SCALE.md
+    // "e05 cell-count retune measured"). Property: ANY clustering's drop
+    // set is a subset of the uncapped single-cell (all-pairs) reference —
+    // dropping needs a smaller-id cos≥t neighbor in the SAME cell, and the
+    // single cell contains every pair — so raising the exponent can only
+    // lose dups, never invent them.
     makeEmbeddings()
     // cellExpr must be AGGREGATE-shaped (it selects FROM embeddings into
     // a scalar subquery) — a bare literal would return one row per vector
