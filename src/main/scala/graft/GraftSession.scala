@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Shared SparkSession factory so every main/test runs with identical,
   * scale-appropriate settings.
   *
-  * - `spark.sql.shuffle.partitions` = core count (local mode); on a real
-  *   cluster this is left to AQE coalescing, which is enabled.
+  * - `spark.sql.shuffle.partitions` = core count ([[Sizing.localCores]]);
+  *   queries whose shuffles outgrow it run on a [[child]] sized by
+  *   [[Sizing]], never by AQE coalescing alone (see `get`).
   * - `spark.sql.legacy.parquet.nanosAsLong`: the driver corpus's
   *   `events.ts` column is TIMESTAMP(NANOS) (written by pyarrow), which
   *   Spark 4 cannot map natively; we read it as nanos-since-epoch LONG and
@@ -100,8 +101,7 @@ object GraftSession {
   }
 
   def get(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(2, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = Sizing.localCores
     val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
@@ -116,8 +116,9 @@ object GraftSession {
       // same parallelism-follows-rows-not-bytes rule as Tables.spread.
       // The cost is some spill headroom on truly large shuffles at 100×
       // local scale (q07's window sort) — the right cluster-side fix is
-      // sizing shuffle.partitions per job, not a session-wide constant.
-      .config("spark.sql.shuffle.partitions", cpus)
+      // sizing shuffle.partitions per job on a Sizing-sized child, not a
+      // session-wide constant.
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

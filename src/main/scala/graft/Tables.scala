@@ -76,14 +76,10 @@ object Tables {
     * 14.2 s, vs d26 doing MORE winnow work in 4 s above a spread).
     */
   def spread(df: DataFrame, rowsPerSlice: Long, memoKey: String = ""): DataFrame = {
-    val sc = df.sparkSession.sparkContext
     val rows =
       if (memoKey.isEmpty) df.count()              // metadata-cheap on parquet
       else rowCountMemo.computeIfAbsent(memoKey, _ => df.count()).longValue()
-    val slices = rows / rowsPerSlice + 1
-    val target = math.max(sc.defaultParallelism.toLong,
-      math.min(slices, 64L * sc.defaultParallelism)).toInt
-    df.repartition(target)
+    df.repartition(Sizing.spread(rows, rowsPerSlice, Sizing.cores(df.sparkSession)))
   }
 
   /** Row counts per corpus file, memoized for the JVM's lifetime: ~30 dense

@@ -68,7 +68,7 @@ object CawdEngine {
                  orcMode: OrcChunker.Mode = OrcChunker.StripeColumn,
                  withContent: Boolean = false): Dataset[FileChunk] = {
     import spark.implicits._
-    val n = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
+    val n = graft.Sizing.chunkTasks(files.size, graft.Sizing.cores(spark))
     chunkFileDs(spark.createDataset(files).repartition(n), fmt, orcMode, withContent)
   }
 
@@ -247,7 +247,7 @@ object CawdEngine {
                   bufferSize: Int = 4096,
                   withContent: Boolean = false): Dataset[FileChunk] = {
     import spark.implicits._
-    val n = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
+    val n = graft.Sizing.chunkTasks(files.size, graft.Sizing.cores(spark))
     spark.createDataset(files).repartition(n).flatMap { case (path, rank) =>
       val p = new Path(path)
       val fs = p.getFileSystem(new Configuration())
@@ -526,9 +526,8 @@ object CawdEngine {
         }
         ps.iterator
       } // (file, startOff, bytes, sha)
-    val n = math.max(1, spark.sparkContext.defaultParallelism)
     ranged
-      .repartition(n)
+      .repartition(graft.Sizing.cores(spark))
       .map { case (file, off, len, sha) =>
         val p = new Path(file)
         val fs = p.getFileSystem(new Configuration())

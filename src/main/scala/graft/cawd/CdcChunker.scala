@@ -138,7 +138,7 @@ object CdcChunker {
   def chunkFiles(spark: SparkSession, files: Seq[(String, Int)],
                  withContent: Boolean = false): Dataset[FileChunk] = {
     import spark.implicits._
-    val n = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
+    val n = graft.Sizing.chunkTasks(files.size, graft.Sizing.cores(spark))
     // file lengths resolved ON EXECUTORS (one serial driver-side RPC per
     // file would be the exact startup bottleneck the structural planner
     // avoids), then exploded into ~SplitBytes segment work units
@@ -152,7 +152,7 @@ object CdcChunker {
           (path, rank, s, math.min(s + CawdEngine.SplitBytes, len), len)
         }
       }
-      .repartition(spark.sparkContext.defaultParallelism)
+      .repartition(graft.Sizing.cores(spark))
     // candidate rows (path, rank, fileLen, cutPos); the segment at offset 0
     // also emits a cutPos = -1 sentinel so every file — including ones with
     // no candidates at all — reaches the stage-2 group

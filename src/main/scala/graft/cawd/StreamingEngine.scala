@@ -256,7 +256,7 @@ object StreamingEngine {
     // listing then happens driver-side instead of as a per-trigger Spark
     // job, and foreachBatch inherits the same conf. File count per batch
     // is unknown here; processBatch re-sizes shuffle partitions per batch.
-    val sess = latencySession(spark, spark.sparkContext.defaultParallelism)
+    val sess = latencySession(spark, graft.Sizing.cores(spark))
     // child sessions carry a private SQLConf that does not see parent
     // runtime confs — carry the caller's rank-strategy tuning across
     spark.conf.getOption(MaxWindowRankFilesKey)
@@ -329,8 +329,8 @@ object StreamingEngine {
   private val ListingThreshold = 4096
   private def latencySession(spark: SparkSession, nFiles: Int): SparkSession =
     graft.GraftSession.child(spark, "stream-latency", aqe = false,
-      shufflePartitions = Some(
-        math.min(spark.sparkContext.defaultParallelism, math.max(2, nFiles))),
+      shufflePartitions =
+        Some(graft.Sizing.streamLatency(nFiles, graft.Sizing.cores(spark))),
       listingThreshold = Some(ListingThreshold))
 
   /** One micro-batch: rank new files after everything already seen, chunk,
@@ -367,14 +367,14 @@ object StreamingEngine {
     val sess =
       if (small) latencySession(spark, headPaths.length)
       else graft.GraftSession.child(spark, "stream-backfill", aqe = true,
-        shufflePartitions = Some(spark.sparkContext.defaultParallelism),
+        shufflePartitions = Some(graft.Sizing.cores(spark)),
         listingThreshold = Some(ListingThreshold))
     val ranked: org.apache.spark.sql.Dataset[(String, Int)] =
       if (small) {
         val pairs = headPaths.sortBy(_.getBytes("UTF-8"))(Utf8Order).zipWithIndex
         // chunking parallelism follows the FILE count (a chunker walks one
         // file sequentially; tasks beyond nFiles only add launch overhead)
-        val slices = math.min(spark.sparkContext.defaultParallelism, pairs.length)
+        val slices = graft.Sizing.chunkTasks(pairs.length, graft.Sizing.cores(spark))
         sess.createDataset(sess.sparkContext.parallelize(pairs.toSeq, slices))(
           org.apache.spark.sql.Encoders.product[(String, Int)])
       } else
@@ -391,7 +391,7 @@ object StreamingEngine {
             .sortBy(_.getBytes("UTF-8"))(Utf8Order, scala.reflect.classTag[Array[Byte]])
             .zipWithIndex()
             .map { case (p, i) => (p, i.toInt) }
-            .repartition(spark.sparkContext.defaultParallelism))
+            .repartition(graft.Sizing.cores(spark)))
           .toDF("path", "fileRank")
           .as[(String, Int)](org.apache.spark.sql.Encoders.product[(String, Int)])
     // ORC streams dedup with the NAIVE vocabulary, so chunk in Naive mode
@@ -457,7 +457,7 @@ object StreamingEngine {
     // same session (round-7 advice) — distinct tags give distinct
     // sessions, so neither resizes the other's shuffles.
     val sess = graft.GraftSession.child(spark, "stream-stats", aqe = false,
-      shufflePartitions = Some(spark.sparkContext.defaultParallelism),
+      shufflePartitions = Some(graft.Sizing.cores(spark)),
       listingThreshold = Some(ListingThreshold))
     Stats.rollup(sess.read.option("basePath", statsDir).parquet(statsDir)
       .drop("batch_id"))

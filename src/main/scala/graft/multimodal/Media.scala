@@ -497,7 +497,7 @@ object Media {
     * the shuffle cannot change results.
     */
   private def spread[T](media: Dataset[T]): Dataset[T] = {
-    val target = media.sparkSession.sparkContext.defaultParallelism
+    val target = graft.Sizing.cores(media.sparkSession)
     if (media.rdd.getNumPartitions >= target) media
     else media.repartition(target)
   }

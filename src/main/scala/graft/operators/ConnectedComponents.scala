@@ -165,8 +165,7 @@ object ConnectedComponents {
     // a previous subgraph's partition count never leaks into this one).
     // DataFrames cross the boundary via their checkpointed RDDs.
     val loop = graft.GraftSession.child(s, "cc-loop", aqe = false,
-      shufflePartitions =
-        Some(Math.min(200L, Math.max(8L, n / 250000L)).toInt))
+      shufflePartitions = Some(graft.Sizing.ccLoop(n)))
     def inLoop(e: DataFrame): DataFrame = loop.createDataFrame(e.rdd, e.schema)
     // map-side pre-contraction: start the loop from locally-collapsed stars
     var cur = inLoop(preContract(edges).localCheckpoint(true))

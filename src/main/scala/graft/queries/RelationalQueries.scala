@@ -8,14 +8,13 @@ import graft.Tables._
 /** Relational / aggregation query pack.
   *
   * Per-job shuffle sizing: [[sizedForInput]] below runs a query on a
-  * [[graft.GraftSession.child]] whose `spark.sql.shuffle.partitions`
-  * follows the compressed bytes of the table feeding its dominant
-  * exchange (32 MB per partition — the same budget as the scan splits),
-  * floored at the core count. GraftSession pins a cores-sized constant
+  * [[graft.GraftSession.child]] whose `spark.sql.shuffle.partitions` is
+  * [[graft.Sizing.forInput]] of the compressed bytes of the table feeding
+  * its dominant exchange. GraftSession pins a cores-sized constant
   * session-wide because AQE's byte-targeted coalescing collapses this
   * engine's CPU-dense small-byte shuffles; queries whose shuffles are
-  * genuinely BIG (q08's near-input-cardinality pair aggregate) are the
-  * other side of that trade and size themselves here.
+  * genuinely BIG (q04's big join, q08's near-input-cardinality pair
+  * aggregate) are the other side of that trade and size themselves here.
   *
   * Mirrors the reference's dataflow-operator semantics (SURVEY.md §2) on the
   * driver corpus: per-group metric rollups (`common/TransferStats.java:49-72`,
@@ -43,8 +42,8 @@ import graft.Tables._
 object RelationalQueries {
 
   /** Child session with shuffle partitions sized from the given table's
-    * compressed bytes at `bytesPerPartition` (default 32 MB; min: core
-    * count). AQE stays ON: the estimate is deliberately coarse (compressed
+    * compressed bytes at `bytesPerPartition` ([[graft.Sizing.forInput]]:
+    * default 32 MB, floor: core count). AQE stays ON: the estimate is deliberately coarse (compressed
     * input vs wider shuffle rows), and coalescing/skew-split corrects it at
     * runtime — these are exactly the big-shuffle plans AQE is good at,
     * unlike the small-byte CPU-dense plans the session-wide constant
@@ -54,10 +53,10 @@ object RelationalQueries {
     */
   private[graft] def sizedForInput(s: SparkSession, tag: String,
                                    d: String, table: String,
-                                   bytesPerPartition: Long = 32L * 1024 * 1024): SparkSession = {
+                                   bytesPerPartition: Long =
+                                     graft.Sizing.InputBytesPerPartition): SparkSession = {
     val bytes = graft.Tables.tableBytes(s, d, table).getOrElse(0L)
-    val parts = math.max(s.sparkContext.defaultParallelism.toLong,
-      bytes / bytesPerPartition).toInt
+    val parts = graft.Sizing.forInput(bytes, bytesPerPartition, graft.Sizing.cores(s))
     // corpus dir folded into the tag: children memoize per tag and carry a
     // MUTABLE SQLConf, so two concurrent runs over different corpora must
     // not share one child and race its shuffle sizing (round-8 advice)

@@ -129,39 +129,16 @@ object StreamingQueries {
     }
   }
 
-  /** Shared memory-sink harness: start the query against a uniquely-named
-    * sink, drain it (AvailableNow inside `start`), project + materialize
-    * the sink table, drop the view.
-    *
-    * While the stream runs, shuffle partitions drop to `stateParts`
-    * (default 8): stateful operators create one state store (and one
-    * checkpoint file tree) per shuffle partition per micro-batch, and most
-    * of these local-mode drains hold kilobytes of state per partition — 32
-    * near-empty stores are pure overhead. The EXCEPTION is a query whose
-    * state is corpus-sized: s05's interval join buffers every click+view
-    * row (39.8 M rows / 8.5 GB at the fifth decade), and its cost measured
-    * as state-store update time (round 14, SCALE.md "s05 probed the way
-    * s01 was") — 439 s
-    * of summed per-task updates serialized onto 8 stores ≈ 55 s of wall —
-    * with micro-batch machinery at 0.77 s. Such a query passes
-    * `stateParts = defaultParallelism` so the state work spreads across
-    * every core, exactly like a cluster deployment would size it. The
-    * session default is restored before the sink table is materialized.
+  /** Drain state stores for a query whose per-ROW state work scales with
+    * input (s05's symmetric join buffer, s04's per-row dedup probe, s06's
+    * per-user fold): [[graft.Sizing.drainState]] of the events bytes. The
+    * 8-store pin would serialize that work onto a quarter of the cores at
+    * the fifth decade; input-proportional sizing is how a cluster
+    * deployment would set spark.sql.shuffle.partitions for the same stream.
     */
-  /** State-store count sized from the events table's bytes at the
-    * relational 32 MB-per-partition budget, capped at core count, floored
-    * at the drain default 8. For a drain whose per-ROW state work scales
-    * with input (s05's symmetric join buffer, s04's per-row dedup probe,
-    * s06's per-user fold), the 8-store pin serializes that work onto a
-    * quarter of the cores at the fifth decade; input-proportional sizing
-    * is exactly how a cluster deployment would set
-    * spark.sql.shuffle.partitions for the same stream.
-    */
-  private def sizedStateParts(s: SparkSession, d: String): Int = {
-    val bytes = graft.Tables.tableBytes(s, d, "events").getOrElse(0L)
-    math.max(8L, math.min(s.sparkContext.defaultParallelism.toLong,
-      bytes / (32L * 1024 * 1024))).toInt
-  }
+  private def sizedStateParts(s: SparkSession, d: String): Int =
+    graft.Sizing.drainState(graft.Tables.tableBytes(s, d, "events").getOrElse(0L),
+      graft.Sizing.cores(s))
 
   /** State-store provider for the drains. Default: Spark's default
     * (HDFSBackedStateStoreProvider — all state on-heap). Round 14 measured
@@ -190,19 +167,41 @@ object StreamingQueries {
       case fqcn => fqcn
     }
 
-  private def drainToMemory(s: SparkSession, prefix: String,
-      start: String => org.apache.spark.sql.streaming.StreamingQuery,
+  /** Shared memory-sink harness: start the query against a uniquely-named
+    * sink, drain it (AvailableNow inside `start`), project + materialize
+    * the sink table, drop the view.
+    *
+    * Everything runs on a [[graft.GraftSession.child]] tagged with the
+    * query prefix and the corpus dir, never on the caller's session: `start`
+    * builds its stream on the child it is handed, and the sink is read and
+    * dropped there. The child's conf is constant per tag — `stateParts`
+    * shuffle partitions (one state store and checkpoint tree per partition
+    * per micro-batch), the `GRAFT_STREAM_STATE_PROVIDER` provider, and the
+    * checkpoint root `$scratchRoot/ckpt`, under which Spark places each
+    * named query at `<root>/<queryName>` — so concurrent queries on the
+    * caller's session never see a drain's settings. AQE is on as in the
+    * caller's default posture; streaming execution disables it for the
+    * micro-batches anyway, so it only shapes the sink read.
+    *
+    * `stateParts` defaults to [[graft.Sizing.DrainStateParts]]: most of
+    * these local-mode drains hold kilobytes of state per partition, and 32
+    * near-empty stores are pure overhead. A query whose state is
+    * corpus-sized passes [[sizedStateParts]]: s05's interval join buffers
+    * every click+view row (39.8 M rows / 8.5 GB at the fifth decade), and
+    * its cost measured as state-store update time (round 14, SCALE.md "s05
+    * probed the way s01 was") — 439 s of summed per-task updates serialized
+    * onto 8 stores ≈ 55 s of wall — with micro-batch machinery at 0.77 s.
+    */
+  private def drainToMemory(s: SparkSession, prefix: String, d: String,
+      start: (SparkSession, String) => org.apache.spark.sql.streaming.StreamingQuery,
       project: DataFrame => DataFrame,
-      stateParts: Int = 8): DataFrame = {
+      stateParts: Int = graft.Sizing.DrainStateParts): DataFrame = {
+    val cs = graft.GraftSession.child(s, s"drain-$prefix:$d", aqe = true,
+      shufflePartitions = Some(stateParts))
+    cs.conf.set("spark.sql.streaming.checkpointLocation", s"$scratchRoot/ckpt")
+    stateProviderClass.foreach(
+      cs.conf.set("spark.sql.streaming.stateStore.providerClass", _))
     val name = s"${prefix}_${UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = s"$scratchRoot/ckpt/$name"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevCkpt = s.conf.getOption("spark.sql.streaming.checkpointLocation")
-    val prevProv = s.conf.getOption(providerKey)
-    s.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-    s.conf.set("spark.sql.streaming.checkpointLocation", ckpt)
-    stateProviderClass.foreach(s.conf.set(providerKey, _))
     // non-empty-source guard via listener, NOT recentProgress: the progress
     // ring buffer holds only the last ~100 entries, so a drain with many
     // trailing empty micro-batches could roll every nonzero entry off and
@@ -218,9 +217,9 @@ object StreamingQueries {
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
         if (qid != null && e.id == qid) drained.countDown()
     }
-    s.streams.addListener(listener)
+    cs.streams.addListener(listener)
     try {
-      val query = start(name)
+      val query = start(cs, name)
       qid = query.id // set long before termination can post (drain runs async)
       query.awaitTermination()
       // audit hook: the drained stream's last micro-batch physical plan —
@@ -240,20 +239,11 @@ object StreamingQueries {
       if (inputRows.get() == 0L) throw new IllegalStateException(
         s"$prefix: streaming source matched no input rows — wrong data layout?")
     } finally {
-      s.streams.removeListener(listener)
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevCkpt match {
-        case Some(v) => s.conf.set("spark.sql.streaming.checkpointLocation", v)
-        case None => s.conf.unset("spark.sql.streaming.checkpointLocation")
-      }
-      if (stateProviderClass.isDefined) prevProv match {
-        case Some(v) => s.conf.set(providerKey, v)
-        case None => s.conf.unset(providerKey)
-      }
-      releaseStreamScratch(ckpt)
+      cs.streams.removeListener(listener)
+      releaseStreamScratch(s"$scratchRoot/ckpt/$name")
     }
-    val out = project(s.table(name)).localCheckpoint(true)
-    s.catalog.dropTempView(name)
+    val out = project(cs.table(name)).localCheckpoint(true)
+    cs.catalog.dropTempView(name)
     out
   }
 
@@ -289,8 +279,8 @@ object StreamingQueries {
     // memory sink. With AvailableNow the final result equals the batch
     // aggregation, so the streaming machinery (file source, window(),
     // stateful agg) gets a value-level oracle.
-    "s02_streaming_window" -> ((s, d) => drainToMemory(s, "s02",
-      name => eventsStream(s, d)
+    "s02_streaming_window" -> ((s, d) => drainToMemory(s, "s02", d,
+      (cs, name) => eventsStream(cs, d)
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -311,7 +301,6 @@ object StreamingQueries {
     // batch, and the max-(n) row per key is the final state (counts are
     // monotone).
     "s03_stateful_running_totals" -> ((s, d) => {
-      import s.implicits._
       // s03's five keys mean the stateful exchange lands every event row on
       // ≤5 tasks regardless of store count. The accumulation is associative
       // and order-independent by design (Long micros), so a partition-local
@@ -320,9 +309,10 @@ object StreamingQueries {
       // by ~|batch|/5·parts. Measured 22.1 → 2.7 s warm at the fifth
       // decade against the per-row shape (SCALE.md "s03's 5-key exchange
       // pre-folded").
-      drainToMemory(s, "s03",
-        name => {
-          eventsStream(s, d)
+      drainToMemory(s, "s03", d,
+        (cs, name) => {
+          import cs.implicits._
+          eventsStream(cs, d)
             .select(col("event_type"),
               round(col("value") * 1e6, 0).cast("long").as("micros"))
             .as[(String, Long)]
@@ -361,8 +351,8 @@ object StreamingQueries {
     // of 32 partitions), an 18 % exchange cut that cannot pay for a
     // ~2.5 M-tuple set per task. Revisit only if the corpus becomes
     // key-clustered (e.g. source-partitioned by user).
-    "s04_streaming_distinct" -> ((s, d) => drainToMemory(s, "s04",
-      name => eventsStream(s, d)
+    "s04_streaming_distinct" -> ((s, d) => drainToMemory(s, "s04", d,
+      (cs, name) => eventsStream(cs, d)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
         .writeStream.outputMode("append")
@@ -382,14 +372,14 @@ object StreamingQueries {
     // Watermarks on BOTH sides + the time bound let the engine evict
     // buffered state at scale; with AvailableNow the inner join emits
     // exactly the batch interval-join result, so it gets a full oracle.
-    "s05_stream_stream_join" -> ((s, d) => drainToMemory(s, "s05",
-      name => {
-        val clicks = eventsStream(s, d)
+    "s05_stream_stream_join" -> ((s, d) => drainToMemory(s, "s05", d,
+      (cs, name) => {
+        val clicks = eventsStream(cs, d)
           .filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("click_ts"))
           .withWatermark("click_ts", "1 hour")
-        val views = eventsStream(s, d)
+        val views = eventsStream(cs, d)
           .filter(col("event_type") === "view")
           .select(col("event_id").as("view_id"), col("user_id").as("view_user"),
             col("ts").as("view_ts"))
@@ -427,31 +417,33 @@ object StreamingQueries {
     // the update-mode sink. Production variant: EventTimeTimeout to evict
     // users idle past the watermark.
     "s06_streaming_sessions" -> ((s, d) => {
-      import s.implicits._
       val gapUs = 1800000000L
-      drainToMemory(s, "s06",
-        name => eventsStream(s, d)
-          .select(col("user_id"), unix_micros(col("ts")).as("us"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState[SessState, (Long, Long, Long, Long)](
-            org.apache.spark.sql.streaming.OutputMode.Update(),
-            org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
-            (user: Long, it: Iterator[(Long, Long)],
-             state: org.apache.spark.sql.streaming.GroupState[SessState]) =>
-              var st = state.getOption.getOrElse(SessState(0L, 0L, 0L, 0L, 0L))
-              it.map(_._2).toArray.sorted.foreach { us =>
-                st = sessStep(st, us, gapUs)
-              }
-              state.update(st)
-              Iterator((user, st.nSessions, st.nEvents,
-                math.max(st.maxLen, st.curLen)))
-          }
-          .toDF("user_id", "n_sessions", "n_events", "max_session_len")
-          .writeStream.outputMode("update")
-          .format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start(),
+      drainToMemory(s, "s06", d,
+        (cs, name) => {
+          import cs.implicits._
+          eventsStream(cs, d)
+            .select(col("user_id"), unix_micros(col("ts")).as("us"))
+            .as[(Long, Long)]
+            .groupByKey(_._1)
+            .flatMapGroupsWithState[SessState, (Long, Long, Long, Long)](
+              org.apache.spark.sql.streaming.OutputMode.Update(),
+              org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
+              (user: Long, it: Iterator[(Long, Long)],
+               state: org.apache.spark.sql.streaming.GroupState[SessState]) =>
+                var st = state.getOption.getOrElse(SessState(0L, 0L, 0L, 0L, 0L))
+                it.map(_._2).toArray.sorted.foreach { us =>
+                  st = sessStep(st, us, gapUs)
+                }
+                state.update(st)
+                Iterator((user, st.nSessions, st.nEvents,
+                  math.max(st.maxLen, st.curLen)))
+            }
+            .toDF("user_id", "n_sessions", "n_events", "max_session_len")
+            .writeStream.outputMode("update")
+            .format("memory").queryName(name)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+        },
         _.groupBy(col("user_id"))
           .agg(max(struct(col("n_events"), col("n_sessions"),
             col("max_session_len"))).as("st"))
@@ -475,15 +467,13 @@ object StreamingQueries {
     // projects the final rows out of the update-mode sink; the result
     // equals batch d15 exactly. Production adds a watermark on an ingest
     // timestamp to bound the aggregation state.
-    "s07_stream_static_decontam" -> ((s, d) => {
+    "s07_stream_static_decontam" -> ((s, d) =>
       // the static benchmark side is the persisted per-corpus shingle set
       // (shared with d15/d17) — the production deployment would load the
       // fixed benchmark index, not re-derive it per stream start
-      val bench = TextQueries.benchShingles(s, d)
-      val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      drainToMemory(s, "s07",
-        name => s.readStream
-          .schema(docsSchema)
+      drainToMemory(s, "s07", d,
+        (cs, name) => cs.readStream
+          .schema(cs.read.parquet(s"$d/documents.parquet").schema)
           .option("pathGlobFilter", "documents.parquet")
           .parquet(d)
           .filter(col("source") =!= "src0")
@@ -491,7 +481,7 @@ object StreamingQueries {
           .select(col("doc_id"), col("source"),
             explode(expr(
               s"array_distinct(${TextQueries.shingle5Expr})")).as("s5"))
-          .join(broadcast(bench), Seq("s5"))
+          .join(broadcast(TextQueries.benchShingles(cs, d)), Seq("s5"))
           .groupBy(col("doc_id"), col("source"))
           .agg(count(lit(1)).as("n_shared_shingles"))
           .writeStream.outputMode("update")
@@ -500,8 +490,7 @@ object StreamingQueries {
           .start(),
         _.groupBy(col("doc_id"), col("source"))
           .agg(max(col("n_shared_shingles")).as("n_shared_shingles"))
-          .orderBy("doc_id"))
-    }),
+          .orderBy("doc_id"))),
 
     "s01_streaming_dedup" -> ((s, d) => {
       val conf = new Configuration()

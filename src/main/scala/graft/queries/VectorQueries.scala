@@ -372,20 +372,17 @@ object VectorQueries {
   private def denseSession(spark: SparkSession, d: String): SparkSession = {
     val rows = graft.Tables.memoizedCount(
       embeddings(spark, d), s"$d/embeddings.parquet")
-    val cores = spark.sparkContext.defaultParallelism
-    val raw = math.max(4L, math.min(64L * cores, rows / 65536L + 4))
-    // Full waves once past the core count: these AQE-off plans have a few
-    // BALANCED CPU-dense stages, so cores+2 partitions (the rows rule's
-    // fifth-decade value, 34) schedules a full 32-task wave plus a 2-task
-    // straggler wave — near-2× wall on the dominant stage. Measured
-    // (SCALE.md "Wave quantization", fifth decade, paired warm legs): 34
-    // partitions
-    // 45.8/42.9 s vs 32 partitions 34.5/35.5 s — e04 back in its
-    // r15/r16 33-37 s band, and e03/e06/e07 carried the same drift.
-    // Rounding DOWN to a multiple of cores keeps the rows-derived scale
-    // adaption (50 M vectors → 736) and never touches sub-core counts
-    // (sf0.1 stays at 4).
-    val parts = (if (raw >= cores) raw / cores * cores else raw).toInt
+    // Full waves once past the core count (Sizing.denseVectors): these
+    // AQE-off plans have a few BALANCED CPU-dense stages, so cores+2
+    // partitions (the rows rule's fifth-decade value, 34) schedules a full
+    // 32-task wave plus a 2-task straggler wave — near-2× wall on the
+    // dominant stage. Measured (SCALE.md "Wave quantization", fifth
+    // decade, paired warm legs): 34 partitions 45.8/42.9 s vs 32
+    // partitions 34.5/35.5 s — e04 back in its r15/r16 33-37 s band, and
+    // e03/e06/e07 carried the same drift. Rounding DOWN to a multiple of
+    // cores keeps the rows-derived scale adaption (50 M vectors → 736) and
+    // never touches sub-core counts (sf0.1 stays at 4).
+    val parts = graft.Sizing.denseVectors(rows, graft.Sizing.cores(spark))
     // corpus dir folded into the tag (the round-8 advice sizedForInput
     // follows): children memoize per tag with a mutable SQLConf, and two
     // corpora must not race one child's partition sizing

@@ -211,8 +211,7 @@ private[sources] class ChunkScan(props: Map[String, String], required: StructTyp
       files.flatMap { case (f, r) => planOne(f, r) }.toArray
     else {
       val spark = org.apache.spark.sql.SparkSession.active
-      val slices = math.min(files.length,
-        spark.sparkContext.defaultParallelism * 4)
+      val slices = graft.Sizing.planSlices(files.length, graft.Sizing.cores(spark))
       logInfo(s"graft-chunks: planning ${files.length} files distributed " +
         s"($slices slices)")
       spark.sparkContext
