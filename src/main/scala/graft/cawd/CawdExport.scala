@@ -1,21 +1,31 @@
 package graft.cawd
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
 
-/** Materializes chunk tables as plain parquet so an external SQL engine
-  * (the driver's DuckDB oracle) can re-derive the dedup decision and the
-  * stats rollup INDEPENDENTLY of this engine's Spark plans.
+import scala.util.control.NonFatal
+
+import org.apache.commons.io.IOUtils
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+
+/** The one way to write a table under [[Root]]: [[write]] runs the
+  * caller's write body into a per-(corpus, tag) directory, under a
+  * per-directory lock, and reuses the result only when its content key
+  * matches — the chunk-store rule (a chunk is reused iff its key is
+  * already stored) applied to whole exports. (s01's streaming sink is the
+  * one other writer: it appends a partition per micro-batch.)
   *
-  * The reference never had a correctness oracle for its core capability
-  * (SURVEY.md §5 — log eyeballing only). Here the contract is: the chunker
-  * (byte-level, unit/property-tested) emits a chunk relation
-  * `(file, fileRank, seq, chunkType, start, size, colId, colType,
-  * parentSeq, sig)`; everything downstream — first-occurrence dedup,
-  * hierarchical cascade, byte accounting, two-level stats rollup — is pure
-  * relational algebra over that table, so a second engine can recompute it
-  * from the same parquet and value-compare.
+  * Two kinds of export go through it:
+  *   - engine-derived tables (the c-pack chunk tables, c06/c07) pass no
+  *     key and are rewritten on every call, because their freshness is
+  *     exactly what the external DuckDB oracle checks: the chunk relation
+  *     is re-derived independently of this engine's Spark plans;
+  *   - tables that are a pure function of corpus INPUT (fingerprints,
+  *     media blobs/features, IVF index, e01, the ORC fixtures) pass a
+  *     [[corpusContentKey]] and are built once per corpus, not once per
+  *     JVM: a corpus regenerated in place changes the key and rebuilds,
+  *     and a derivation change must bump the caller's version tag.
   */
 object CawdExport {
 
@@ -27,111 +37,41 @@ object CawdExport {
   def dir(sfDir: String, tag: String): String =
     s"$Root/${new Path(sfDir).getName}/$tag"
 
-  /** Write the chunk table (basename file, hex signature, no content) under
-    * [[dir]] and read it back, so the Spark-side query and the DuckDB
-    * oracle compute from byte-identical input.
-    */
-  def materialize(spark: SparkSession, sfDir: String, tag: String,
-                  chunks: Dataset[FileChunk]): DataFrame =
-    materializeChunkDf(spark, sfDir, tag, chunks.toDF())
+  private val MarkerName = "_GRAFT_CONTENT_KEY"
 
-  /** Same, for an untyped chunk relation (e.g. the `graft-chunks` DSv2
-    * source) with at least the FileChunk columns.
-    */
-  def materializeChunkDf(spark: SparkSession, sfDir: String, tag: String,
-                         chunkDf: DataFrame): DataFrame = {
-    val out = dir(sfDir, tag)
-    chunkDf
-      .filter(col("parentSeq") =!= -2) // timing side-channel rows are not data
-      .select(
-        regexp_replace(col("file"), ".*/", "").as("file"),
-        col("fileRank"), col("seq"), col("chunkType"), col("start"),
-        col("size"), col("colId"), col("colType"), col("parentSeq"),
-        lower(hex(col("signature"))).as("sig"))
-      .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out).withColumnRenamed("sig", "signature")
-  }
+  private val locks = new ConcurrentHashMap[String, AnyRef]()
 
-  /** Write an arbitrary DataFrame (e.g. the media blob table) under [[dir]]
-    * and read it back. Memoized per JVM: the input is a pure function of
-    * (sfDir, tag) — the media table is deterministically derived from the
-    * documents table — so queries sharing an export (m01-m05 all consume
-    * `media`) pay the expensive encode+write exactly once per session
-    * instead of once per query. A failed write retries on the next call.
+  /** Build-or-reuse the export [[dir]]`(sfDir, tag)` and return that
+    * directory. Callers of one directory run one after another. With
+    * `key = Some(k)` the directory is reused when its marker reads `k`;
+    * otherwise (and always for `key = None`) the directory is deleted,
+    * `body(dir)` writes it, and the marker is written last, so it is also
+    * the completion marker: a body that throws leaves no marker behind.
     */
-  def materializeDf(spark: SparkSession, sfDir: String, tag: String,
-                    df: DataFrame,
-                    writeOptions: Map[String, String] = Map.empty): DataFrame = {
-    materializeVia(sfDir, tag, out =>
-      df.write.mode("overwrite").options(writeOptions).parquet(out))
-    spark.read.parquet(dir(sfDir, tag))
-  }
-
-  /** The memo/once-per-session machinery of [[materializeDf]] with the
-    * write step delegated — for exports whose write is not a plain
-    * `df.write` (c06's fused digest-through-write computes per-range
-    * content digests in the same pass that writes the export).
-    */
-  def materializeVia(sfDir: String, tag: String,
-                     write: String => Unit): Unit = {
-    val out = dir(sfDir, tag)
-    // complete-before-read: a concurrent second caller with the same tag
-    // blocks on the winner's write instead of reading a half-written dir
-    val task = new java.util.concurrent.FutureTask[Unit](() => write(out))
-    val prior = writtenDf.putIfAbsent(out, task)
-    val winner = if (prior == null) { task.run(); task } else prior
-    try winner.get()
-    catch { case e: Throwable => writtenDf.remove(out, winner); throw e }
-  }
-
-  /** Forget memoized exports. [[graft.Bench]] calls this between the
-    * warm-up and timed passes so the timed pass re-pays the encode+write
-    * it is supposed to measure.
-    */
-  def resetMemo(): Unit = writtenDf.clear()
-
-  private val writtenDf = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.FutureTask[Unit]]()
-
-  /** Cross-SESSION persistent variant of [[materializeDf]], for exports
-    * that are a pure function of corpus INPUT (the media blob/feature
-    * tables) — NOT for engine-derived tables like c06/c07, whose freshness
-    * is exactly what the oracle checks. A real pipeline materializes a
-    * decode pass once per corpus, not once per job: at the 100× corpus the
-    * full media decode is ~307 s that every new JVM re-paid. The export
-    * dir carries a `_GRAFT_CONTENT_KEY` marker; when the caller's
-    * `contentKey` (corpus content hash + derivation version) matches and
-    * the write completed (`_SUCCESS`), the table is reused without
-    * evaluating `df` at all. A corpus regenerated in place (driver rounds
-    * reuse /tmp paths) changes the hash and forces a rebuild; a codec or
-    * feature change must bump the caller's version tag.
-    */
-  def materializePersistentDf(spark: SparkSession, sfDir: String, tag: String,
-                              contentKey: String, df: => DataFrame): DataFrame = {
+  def write(spark: SparkSession, sfDir: String, tag: String,
+            key: Option[String])(body: String => Unit): String = {
     val out = dir(sfDir, tag)
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(out, "_GRAFT_CONTENT_KEY")
+    val marker = new Path(out, MarkerName)
     // any failure reading the marker (missing, truncated, checksum-corrupt
     // sidecar) means "not valid" and forces a rebuild — a damaged marker
     // must never poison the query, only cost a recompute
-    def diskValid: Boolean =
-      try fs.exists(marker) && fs.exists(new Path(out, "_SUCCESS")) && {
+    def markerReads(k: String): Boolean =
+      try {
         val in = fs.open(marker)
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          "UTF-8") == contentKey
-        finally in.close()
-      } catch { case scala.util.control.NonFatal(_) => false }
-    val task = new java.util.concurrent.FutureTask[Unit](() =>
-      if (!diskValid) {
-        df.write.mode("overwrite").parquet(out) // drops any stale marker too
-        val os = fs.create(marker, true)
-        try os.write(contentKey.getBytes("UTF-8")) finally os.close()
-      })
-    val prior = writtenDf.putIfAbsent(out, task)
-    val winner = if (prior == null) { task.run(); task } else prior
-    try winner.get()
-    catch { case e: Throwable => writtenDf.remove(out, winner); throw e }
-    spark.read.parquet(out)
+        try new String(IOUtils.toByteArray(in), UTF_8) == k finally in.close()
+      } catch { case NonFatal(_) => false }
+    locks.computeIfAbsent(out, _ => new AnyRef).synchronized {
+      if (!key.exists(markerReads)) {
+        fs.delete(new Path(out), true)
+        body(out)
+        key.foreach { k =>
+          val os = fs.create(marker, true)
+          try os.write(k.getBytes(UTF_8)) finally os.close()
+        }
+      }
+    }
+    out
   }
 
   /** Content hash of the corpus files feeding a persistent export: md5 over
@@ -180,6 +120,5 @@ object CawdExport {
     s"$version:${parts.mkString(";")}"
   }
 
-  private val corpusKeyMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val corpusKeyMemo = new ConcurrentHashMap[String, String]()
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cawd._
 
@@ -22,38 +22,49 @@ import graft.cawd._
   */
 object CawdQueries {
 
-  /** Fixed root (like [[CawdExport.Root]], not `java.io.tmpdir`): the c06
-    * oracle's `read_blob` must name the same absolute path the fixtures
-    * are written to.
-    */
-  val OrcFixtureRoot = "/tmp/graft-orc-fixtures"
-
-  /** Deterministic ORC fixtures: testdata tables re-written as single ORC
-    * files under [[OrcFixtureRoot]] (one dir per sf). Sorted
-    * single-partition writes → byte-stable files per round.
+  /** Deterministic ORC fixtures: the nation/region/supplier/customer
+    * tables re-written as single ORC files `<table>.orc` under the
+    * [[CawdExport]] dir `orc` of the corpus. Sorted single-partition
+    * writes → byte-stable files; keyed by the four source tables' content,
+    * so a corpus regenerated in place rewrites them.
     */
   def ensureOrcFixtures(spark: SparkSession, sfDir: String): String = {
-    val sfName = sfDir.replaceAll(".*/", "")
-    val outDir = s"$OrcFixtureRoot/$sfName"
-    val conf = new Configuration()
-    val out = new Path(outDir)
-    val fs = out.getFileSystem(conf)
     val tables = Seq("nation" -> "n_nationkey", "region" -> "r_regionkey",
       "supplier" -> "s_suppkey", "customer" -> "c_custkey")
-    val missing = tables.filter { case (t, _) => !fs.exists(new Path(outDir, s"$t.orc")) }
-    missing.foreach { case (t, key) =>
-      val tmp = new Path(outDir, s"_tmp_$t")
-      spark.read.parquet(s"$sfDir/$t.parquet")
-        .orderBy(col(key)).coalesce(1)
-        .write.mode("overwrite").orc(tmp.toString)
-      val part = fs.listStatus(tmp).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".orc"))
-        .getOrElse(sys.error(s"no orc part file written for $t"))
-      fs.rename(part, new Path(outDir, s"$t.orc"))
-      fs.delete(tmp, true)
+    val key = CawdExport.corpusContentKey(spark,
+      tables.map { case (t, _) => s"$sfDir/$t.parquet" }, "orc-fixtures-v1")
+    CawdExport.write(spark, sfDir, "orc", Some(key)) { outDir =>
+      val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      tables.foreach { case (t, k) =>
+        val tmp = new Path(outDir, s"_tmp_$t")
+        spark.read.parquet(s"$sfDir/$t.parquet")
+          .orderBy(col(k)).coalesce(1)
+          .write.orc(tmp.toString)
+        val part = fs.listStatus(tmp).map(_.getPath)
+          .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".orc"))
+          .getOrElse(sys.error(s"no orc part file written for $t"))
+        fs.rename(part, new Path(outDir, s"$t.orc"))
+        fs.delete(tmp, true)
+      }
     }
-    outDir
   }
+
+  /** Write a chunk relation (at least the FileChunk columns, e.g. the
+    * `graft-chunks` DSv2 source) as the `tag` export — basename file, hex
+    * signature, no content — and read it back, so the Spark-side query and
+    * the DuckDB oracle compute from byte-identical input.
+    */
+  private def chunkTable(s: SparkSession, sfDir: String, tag: String,
+                         chunks: Dataset[_]): DataFrame =
+    s.read.parquet(CawdExport.write(s, sfDir, tag, None)(chunks.toDF()
+      .filter(col("parentSeq") =!= -2) // timing side-channel rows are not data
+      .select(
+        regexp_replace(col("file"), ".*/", "").as("file"),
+        col("fileRank"), col("seq"), col("chunkType"), col("start"),
+        col("size"), col("colId"), col("colType"), col("parentSeq"),
+        lower(hex(col("signature"))).as("sig"))
+      .write.parquet(_)))
+      .withColumnRenamed("sig", "signature")
 
   private def base(c: org.apache.spark.sql.Column) =
     regexp_replace(c, ".*/", "")
@@ -74,7 +85,7 @@ object CawdQueries {
     }
     val chunked = CawdEngine.chunkFiles(s, CawdEngine.listFiles(srcDir, suffix), fmt, orcMode)
     val chunks = if (duplicate) CawdEngine.withDuplicates(chunked) else chunked
-    val tbl = CawdExport.materialize(s, sfDir, tag, chunks)
+    val tbl = chunkTable(s, sfDir, tag, chunks)
     val status = Dedup.flatStatus(tbl, dedupable, smallThreshold)
     Stats.rollup(Stats.fromStatus(status)).orderBy("file", "metric")
   }
@@ -86,7 +97,7 @@ object CawdQueries {
     // oracle verifies here.
     "c01_parquet_chunk_table" -> ((s, d) => {
       val chunks = s.read.format("graft-chunks").load(d)
-      CawdExport.materializeChunkDf(s, d, "c01", chunks)
+      chunkTable(s, d, "c01", chunks)
         .groupBy(col("file"), col("chunkType"))
         .agg(count(lit(1)).as("n_chunks"), sum(col("size")).as("bytes"))
         .orderBy("file", "chunkType")
@@ -120,7 +131,7 @@ object CawdQueries {
       val orcDir = ensureOrcFixtures(s, d)
       val chunked = CawdEngine.chunkFiles(s, CawdEngine.listFiles(orcDir, ".orc"),
         CawdEngine.Orc, OrcChunker.StripeColumn)
-      val tbl = CawdExport.materialize(s, d, "c05", CawdEngine.withDuplicates(chunked))
+      val tbl = chunkTable(s, d, "c05", CawdEngine.withDuplicates(chunked))
       val status = Dedup.hierarchicalStatus(tbl)
       Stats.rollup(Stats.fromStatus(status, emitSizes = true)).orderBy("file", "metric")
     }),
@@ -168,8 +179,7 @@ object CawdQueries {
       // write/re-read/sort/digest shape at 4.2× (SCALE.md "Round 16: c06
       // fused"). The DuckDB oracle independently verifies the export's
       // bytes against read_blob slices of the originals.
-      val out = CawdExport.dir(d, "c06")
-      CawdExport.materializeVia(d, "c06",
+      val out = CawdExport.write(s, d, "c06", None)(
         CawdEngine.digestingExportWrite(cover, _, exportOpts))
       CawdEngine.identityFromDigests(s, out)
         .withColumn("file", base(col("file")))
@@ -182,8 +192,7 @@ object CawdQueries {
     // c03's to see what format awareness buys (the reference's thesis).
     "c09_cdc_dedup_warm" -> ((s, d) => {
       val chunked = CdcChunker.chunkFiles(s, CawdEngine.listFiles(d, ".parquet"))
-      val tbl = CawdExport.materialize(s, d, "c09",
-        CawdEngine.withDuplicates(chunked))
+      val tbl = chunkTable(s, d, "c09", CawdEngine.withDuplicates(chunked))
       val status = Dedup.flatStatus(tbl, ChunkType.cdcDedupable, 0L)
       Stats.rollup(Stats.fromStatus(status)).orderBy("file", "metric")
     }),
@@ -201,8 +210,8 @@ object CawdQueries {
         val fs = p.getFileSystem(new Configuration())
         (p.getName, fs.getFileStatus(p).getLen)
       }
-      CawdExport.materializeDf(s, d, "c07",
-        s.createDataset(sizes).toDF("file", "bytes"))
+      CawdExport.write(s, d, "c07", None)(
+        s.createDataset(sizes).toDF("file", "bytes").write.parquet(_))
       CawdEngine.plainFrames(s, files).toDF()
         .groupBy(base(col("file")).as("file"))
         .agg(sum(col("size")).as("transfer_bytes"), count(lit(1)).as("frames"))
@@ -248,7 +257,7 @@ object CawdQueries {
          |orig AS (
          |  SELECT filename, hex(content) AS h, size AS fsize
          |  FROM read_blob(['/root/testdata/sf0.01/*.parquet',
-         |                  '${CawdQueries.OrcFixtureRoot}/sf0.01/*.orc'])),
+         |                  '${CawdExport.dir("sf0.01", "orc")}/*.orc'])),
          |chk AS (
          |  SELECT o.path, g.fsize, o.size,
          |    substring(g.h, CAST(o.cumoff * 2 + 1 AS BIGINT),

@@ -97,8 +97,8 @@ object MediaQueries {
     */
   private def mediaExport(s: SparkSession, d: String): DataFrame =
     if (blobsPersisted(s, d))
-      CawdExport.materializePersistentDf(s, d, "media", corpusKey(s, d),
-        Media.mediaTable(s, documentsDense(s, d)).toDF())
+      s.read.parquet(CawdExport.write(s, d, "media", Some(corpusKey(s, d)))(
+        Media.mediaTable(s, documentsDense(s, d)).write.parquet(_)))
     else Media.mediaTable(s, documentsDense(s, d)).toDF()
 
   /** Decoded features, persisted across sessions like the blob table:
@@ -111,10 +111,11 @@ object MediaQueries {
     * (corpus hash + version) decides validity, not session lifetime.
     */
   private def features(s: SparkSession, d: String): DataFrame =
-    CawdExport.materializePersistentDf(s, d, "media_features",
-      corpusKey(s, d), {
+    s.read.parquet(CawdExport.write(s, d, "media_features",
+      Some(corpusKey(s, d))) { out =>
         import s.implicits._
-        Media.extractFeatures(mediaExport(s, d).as[Media.MediaRow]).toDF()
+        Media.extractFeatures(mediaExport(s, d).as[Media.MediaRow])
+          .write.parquet(out)
       })
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.cawd.CawdExport
 
 /** Training-data text pipeline pack over the `documents` table: exact and
   * near deduplication (MinHash+LSH, SimHash, n-gram Jaccard), language ID,
@@ -126,7 +127,7 @@ object TextQueries {
     */
   private val FingerprintVersion = "fp-v1"
   private def fpCorpusKey(s: SparkSession, d: String): String =
-    graft.cawd.CawdExport.corpusContentKey(s, Seq(s"$d/documents.parquet"),
+    CawdExport.corpusContentKey(s, Seq(s"$d/documents.parquet"),
       FingerprintVersion)
 
   /** Build-side session for the persistent fingerprint exports: shuffle
@@ -163,8 +164,8 @@ object TextQueries {
     * + [[FingerprintVersion]]), never by session lifetime.
     */
   private[graft] def rankedShingles(s: SparkSession, d: String): DataFrame =
-    graft.cawd.CawdExport.materializePersistentDf(s, d, "shingle_rank",
-      fpCorpusKey(s, d), {
+    s.read.parquet(CawdExport.write(s, d, "shingle_rank",
+      Some(fpCorpusKey(s, d))) { out =>
         val b = fpBuild(s, d)
         val sh = docShingles(documentsDense(b, d))
         val dfreq = sh.groupBy("s").agg(count(lit(1)).as("df"))
@@ -175,6 +176,7 @@ object TextQueries {
           .select(col("doc_id"), col("s"),
             row_number().over(w.orderBy(col("df"), col("s"))).as("rnk"),
             count(lit(1)).over(w).as("n"))
+          .write.parquet(out)
       })
 
   /** MinHash LSH band table (doc_id, band, bkey), persisted per corpus
@@ -183,10 +185,10 @@ object TextQueries {
     * generation — one fingerprint build per corpus, three pipelines.
     */
   private[graft] def minhashBandsOf(s: SparkSession, d: String): DataFrame =
-    graft.cawd.CawdExport.materializePersistentDf(s, d, "minhash_bands",
-      fpCorpusKey(s, d),
+    s.read.parquet(CawdExport.write(s, d, "minhash_bands",
+      Some(fpCorpusKey(s, d)))(
       minhashBands(rankedShingles(fpBuild(s, d), d)
-        .select(col("doc_id"), col("s"))))
+        .select(col("doc_id"), col("s"))).write.parquet(_)))
 
   /** VERIFIED near-dup pair set (ida, idb, jaccard ≥ [[JaccardThreshold]])
     * — the MinHash-LSH candidate join plus exact-Jaccard verification,
@@ -198,8 +200,8 @@ object TextQueries {
     * it rebuilds rather than silently serving pairs at the old cut.
     */
   private[graft] def neardupPairs(s: SparkSession, d: String): DataFrame =
-    graft.cawd.CawdExport.materializePersistentDf(s, d, "neardup_pairs",
-      fpCorpusKey(s, d) + s":j=$JaccardThreshold", {
+    s.read.parquet(CawdExport.write(s, d, "neardup_pairs",
+      Some(fpCorpusKey(s, d) + s":j=$JaccardThreshold")) { out =>
         val b = fpBuild(s, d)
         val sh = rankedShingles(b, d).select(col("doc_id"), col("s"))
         val bands = minhashBandsOf(b, d)
@@ -209,6 +211,7 @@ object TextQueries {
               col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb")).distinct()
         jaccardOf(sh, Some(cands)).filter(col("jaccard") >= JaccardThreshold)
+          .write.parquet(out)
       })
 
   /** EXACT Jaccard pair set via PPJoin prefix filtering (ida, idb,
@@ -239,8 +242,8 @@ object TextQueries {
     * bump the derivation version in the content key when it lands).
     */
   private[graft] def jaccardPairsPersisted(s: SparkSession, d: String): DataFrame =
-    graft.cawd.CawdExport.materializePersistentDf(s, d, "jaccard_pairs",
-      fpCorpusKey(s, d) + s":ppjoin:j=$JaccardThreshold", {
+    s.read.parquet(CawdExport.write(s, d, "jaccard_pairs",
+      Some(fpCorpusKey(s, d) + s":ppjoin:j=$JaccardThreshold")) { out =>
       // ONE persisted table serves every downstream role (prefix
       // candidates, both verify sides, set sizes) — see [[rankedShingles]]
       val ranked = rankedShingles(fpBuild(s, d), d)
@@ -265,6 +268,7 @@ object TextQueries {
           round(col("common").cast("double") /
             (col("na") + col("nb") - col("common")), 6).as("jaccard"))
         .filter(col("jaccard") >= JaccardThreshold)
+        .write.parquet(out)
     })
 
   /** Persisted per-corpus BENCHMARK shingle set: the distinct 5-gram
@@ -275,13 +279,14 @@ object TextQueries {
     * it materializes once per corpus under the content-key contract.
     */
   private[graft] def benchShingles(s: SparkSession, d: String): DataFrame =
-    graft.cawd.CawdExport.materializePersistentDf(s, d, "bench_shingles",
-      fpCorpusKey(s, d) + ":bench5:src0",
+    s.read.parquet(CawdExport.write(s, d, "bench_shingles",
+      Some(fpCorpusKey(s, d) + ":bench5:src0"))(
       documentsDense(fpBuild(s, d), d)
         .filter(col("source") === "src0")
         .select(split(col("text"), " ").as("w"))
         .select(explode(expr(shingle5Expr)).as("s5"))
-        .distinct())
+        .distinct()
+        .write.parquet(_)))
 
   /** Persisted serialized Bloom filter over [[benchShingles]] (one binary
     * row), built by Spark's native BloomFilterAggregate over xxhash64(s5)
@@ -303,8 +308,8 @@ object TextQueries {
     // rebuild, per the file's schedule-change-bumps-the-key contract.
     val maxBits = s.conf.getOption(
       "spark.sql.optimizer.runtime.bloomFilter.maxNumBits").getOrElse("67108864")
-    graft.cawd.CawdExport.materializePersistentDf(s, d, "bench_bloom",
-      fpCorpusKey(s, d) + s":bench5:src0:fpp3:maxbits=$maxBits", {
+    s.read.parquet(CawdExport.write(s, d, "bench_bloom",
+      Some(fpCorpusKey(s, d) + s":bench5:src0:fpp3:maxbits=$maxBits")) { out =>
         val bench = benchShingles(s, d)
         val nItems = math.max(bench.count(), 1L)
         // m = ceil(-n·ln(p) / ln(2)^2) optimal bits at fpp = 3%
@@ -313,6 +318,7 @@ object TextQueries {
             (math.log(2) * math.log(2))).toLong)
         bench.agg(call_function("graft_bloom_agg", xxhash64(col("s5")),
           lit(nItems), lit(nBits)).as("bf"))
+          .write.parquet(out)
       }).head().getAs[Array[Byte]]("bf")
   }
 
@@ -440,14 +446,15 @@ object TextQueries {
     * keeps every downstream filter in the scan.
     */
   private[graft] def simhashesOf(s: SparkSession, d: String): DataFrame =
-    graft.cawd.CawdExport.materializePersistentDf(s, d, "simhash_fp",
-      fpCorpusKey(s, d), {
+    s.read.parquet(CawdExport.write(s, d, "simhash_fp",
+      Some(fpCorpusKey(s, d))) { out =>
         val sh = documentsDense(s, d)
           .select(col("doc_id"), expr("simhash_fp(text)").as("sh"))
         // two Projects on purpose: sh is non-cheap and referenced four
         // times, which blocks CollapseProject from quadrupling the kernel
         sh.select(col("doc_id"), col("sh")(0).as("b0"), col("sh")(1).as("b1"),
           col("sh")(2).as("b2"), col("sh")(3).as("b3"))
+          .write.parquet(out)
       })
 
   private[graft] def simhashSql(spark: Boolean): String = {
@@ -795,8 +802,8 @@ object TextQueries {
     // (corpus, k) like the fingerprint family: a KMV sketch is exactly
     // the once-per-corpus artifact a real pipeline materializes.
     "d14_vocab_kmv_sketch" -> ((s, d) =>
-      graft.cawd.CawdExport.materializePersistentDf(s, d, "kmv_sketch",
-        fpCorpusKey(s, d) + s":kmv:k=$KmvK:v2", {
+      s.read.parquet(CawdExport.write(s, d, "kmv_sketch",
+        Some(fpCorpusKey(s, d) + s":kmv:k=$KmvK:v2")) { out =>
           documents(s, d).createOrReplaceTempView("documents")
           val rawSql =
             s"""SELECT lang, md5(s) AS h
@@ -815,7 +822,7 @@ object TextQueries {
           val counts = s.sql(
             s"""SELECT lang, count(DISTINCT unhex(h)) AS n
                |FROM ($rawSql) raw GROUP BY lang""".stripMargin).collect()
-          if (counts.isEmpty)
+          (if (counts.isEmpty)
             s.sql("SELECT '' AS lang, CAST(0 AS BIGINT) AS exact_distinct, " +
               "CAST(0 AS BIGINT) AS kmv_estimate WHERE false")
           else {
@@ -850,7 +857,7 @@ object TextQueries {
                  |    ELSE CAST(round(($KmvK - 1) / ${hexFractionSql("kth_h", "instr")}, 0)
                  |      AS BIGINT) END AS kmv_estimate
                  |FROM kth""".stripMargin)
-          }
+          }).write.parquet(out)
         })),
 
     // Decontamination (benchmark-overlap detection): flag every training

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables._
+import graft.cawd.CawdExport
 
 /** Similarity-search pack over the `embeddings` table (`Array[Float]` dim
   * 64): brute-force cosine top-k as the exactness baseline, plus two
@@ -657,7 +658,7 @@ object VectorQueries {
     * every run — at the 1000× corpus (2 M vectors) three trainings per
     * suite plus one per Recall run, several hundred seconds each. The
     * index persists as two tables under the e01/kmv content-key contract
-    * ([[graft.cawd.CawdExport.materializePersistentDf]]):
+    * ([[graft.cawd.CawdExport.write]]):
     *
     *   - `ivf_centroids_{f|s}` (cell, cvec, cnrm): the final trained
     *     centroid list cl_last — C = ceil(√N) rows of 64 doubles, built by
@@ -734,14 +735,14 @@ object VectorQueries {
   private def ivfIndexViews(s: SparkSession, d: String,
                             trainSample: Boolean): String = {
     val sfx = if (trainSample) "s" else "f"
-    val key = graft.cawd.CawdExport.corpusContentKey(s,
+    val key = CawdExport.corpusContentKey(s,
       Seq(s"$d/embeddings.parquet"),
       s"ivf:$sfx:iters=$IvfIterations:cells=sqrtN:v1")
-    graft.cawd.CawdExport.materializePersistentDf(s, d, s"ivf_centroids_$sfx",
-      key, s.sql(ivfCentroidsSqlSpark(trainSample)))
+    s.read.parquet(CawdExport.write(s, d, s"ivf_centroids_$sfx", Some(key))(
+      s.sql(ivfCentroidsSqlSpark(trainSample)).write.parquet(_)))
       .createOrReplaceTempView(s"ivf_centroids_$sfx")
-    graft.cawd.CawdExport.materializePersistentDf(s, d, s"ivf_assign_$sfx",
-      key, s.sql(ivfAssignFromCentroidsSql(sfx)))
+    s.read.parquet(CawdExport.write(s, d, s"ivf_assign_$sfx", Some(key))(
+      s.sql(ivfAssignFromCentroidsSql(sfx)).write.parquet(_)))
       .createOrReplaceTempView(s"ivf_assign_$sfx")
     sfx
   }
@@ -1036,10 +1037,10 @@ object VectorQueries {
     // still re-derives the exact answer independently in DuckDB.
     "e01_cosine_topk" -> ((s, d) => {
       val ds = registerEmbeddings(s, d)
-      graft.cawd.CawdExport.materializePersistentDf(ds, d, "e01_exact",
-        graft.cawd.CawdExport.corpusContentKey(ds,
-          Seq(s"$d/embeddings.parquet"), s"e01:k=$TopK:probe500:v1"),
-        ds.sql(e01Sql(spark = true)))
+      val key = CawdExport.corpusContentKey(ds,
+        Seq(s"$d/embeddings.parquet"), s"e01:k=$TopK:probe500:v1")
+      ds.read.parquet(CawdExport.write(ds, d, "e01_exact", Some(key))(
+        ds.sql(e01Sql(spark = true)).write.parquet(_)))
     }),
 
     // OR-construction sign-LSH top-k: multi-band candidate union + exact

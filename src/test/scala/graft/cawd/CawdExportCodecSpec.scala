@@ -30,8 +30,7 @@ class CawdExportCodecSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.get("c06-codec-spec")
   private val sfDir = "/root/testdata/sf0.001"
 
-  // runs the shipped query once; the export write it forces is memoized
-  // per JVM, so this is cheap if another spec already ran c06
+  // runs the shipped query once; both tests below read this run's export
   private lazy val c06Rows =
     SparkEntry.queries("c06_reconstruction")(spark, sfDir).collect()
 
@@ -66,5 +65,34 @@ class CawdExportCodecSpec extends AnyFunSuite {
     assert(files == sources)
     val broken = c06Rows.filterNot(_.getAs[Boolean]("identical"))
     assert(broken.isEmpty, s"c06 reports non-identical files: ${broken.mkString(", ")}")
+  }
+
+  /** Two corpora with one basename share the c06 export directory; each
+    * run must still report exactly its own corpus's files.
+    */
+  test("c06 over two corpora of one basename reports each corpus's own files") {
+    val fs = new Path(sfDir).getFileSystem(new Configuration())
+    def copyCorpus(skip: Set[String]): String = {
+      val dst = new Path(
+        java.nio.file.Files.createTempDirectory("c06-basename").toString, "sf0.001")
+      fs.mkdirs(dst)
+      fs.listStatus(new Path(sfDir)).map(_.getPath)
+        .filterNot(p => skip(p.getName))
+        .foreach(p => org.apache.hadoop.fs.FileUtil.copy(
+          fs, p, fs, new Path(dst, p.getName), false, new Configuration()))
+      dst.toString
+    }
+    val a = copyCorpus(Set.empty)
+    val b = copyCorpus(Set("lineitem.parquet"))
+    for (corpus <- Seq(a, b)) {
+      val rows = SparkEntry.queries("c06_reconstruction")(spark, corpus).collect()
+      val orcDir = graft.queries.CawdQueries.ensureOrcFixtures(spark, corpus)
+      val sources = (CawdEngine.listFiles(orcDir, ".orc") ++
+        CawdEngine.listFiles(corpus, ".parquet"))
+        .map { case (f, _) => new Path(f).getName }.sorted
+      assert(rows.map(_.getAs[String]("file")).toSeq.sorted == sources,
+        s"c06 over $corpus")
+      assert(rows.forall(_.getAs[Boolean]("identical")))
+    }
   }
 }

@@ -86,7 +86,6 @@ class DecontamParitySpec extends AnyFunSuite {
     val before = rows(TextQueries.benchShingles(spark, dir))
     val bloomBefore = TextQueries.benchBloomBytes(spark, dir).toSeq
     writeDocs(spark, dir, "v2")
-    graft.cawd.CawdExport.resetMemo() // a fresh JVM has no in-memory memo
     val after = rows(TextQueries.benchShingles(spark, dir))
     val bloomAfter = TextQueries.benchBloomBytes(spark, dir).toSeq
     assert(before != after, "changed corpus bytes must rebuild bench_shingles")

@@ -65,8 +65,6 @@ class FingerprintShareSpec extends AnyFunSuite {
       .orderBy("doc_id", "band").collect().toSeq
     // regenerate the corpus AT THE SAME PATH (what a driver round does)
     writeCorpus(spark, dir, "v2")
-    // a fresh JVM has no in-memory memo; simulate it
-    graft.cawd.CawdExport.resetMemo()
     val after = TextQueries.minhashBandsOf(spark, dir)
       .orderBy("doc_id", "band").collect().toSeq
     assert(before != after,
