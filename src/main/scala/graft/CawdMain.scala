@@ -13,7 +13,9 @@ import graft.cawd._
   * Usage:
   *   runMain graft.CawdMain <mode> <inputDir> [destDir] [--duplicate] [--store=DIR]
   *
-  *   mode ∈ plain | orc-naive | orc-column | orc-sp | parquet | cdc
+  *   mode ∈ plain | orc-naive | orc-column | orc-sp | parquet | cdc —
+  *   every mode but `plain` is a [[graft.cawd.Variant]] run through
+  *   [[graft.cawd.CawdEngine.dedupStats]].
   *   --duplicate re-sends every file as a byte-identical copy (the
   *   README's warm-store experiment). `cdc` is the content-defined
   *   chunking baseline ([[graft.cawd.CdcChunker]]) over any file type.
@@ -23,50 +25,35 @@ import graft.cawd._
   *   server store, as successive CLI invocations.
   */
 object CawdMain {
+  private def fail(msg: String): Nothing = {
+    System.err.println(msg); sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
     val pos = args.filterNot(_.startsWith("--"))
-    if (pos.length < 2) {
-      System.err.println(
-        "usage: CawdMain <plain|orc-naive|orc-column|orc-sp|parquet|cdc> <inputDir> [destDir] [--duplicate]")
-      sys.exit(2)
-    }
+    if (pos.length < 2)
+      fail(s"usage: CawdMain <${("plain" +: Variant.all.map(_.name)).mkString("|")}> " +
+        "<inputDir> [destDir] [--duplicate] [--store=DIR]")
     val mode = pos(0)
     val inDir = pos(1)
     val dest = pos.lift(2)
     val duplicate = args.contains("--duplicate")
     val storeDir = args.collectFirst { case a if a.startsWith("--store=") =>
       a.stripPrefix("--store=") }
+    // None = the plain baseline, which frames every file and dedups nothing
+    val variant = if (mode == "plain") None
+      else Some(Variant.byName(mode).getOrElse(fail(s"unknown mode '$mode'")))
+    if (variant.isEmpty && storeDir.nonEmpty)
+      fail(s"--store is not supported for mode '$mode'")
+    val files = CawdEngine.listFiles(inDir, variant.fold("")(_.suffix))
     val spark = GraftSession.get(s"graft-cawd-$mode")
 
-    def flatWithStore(dir: String, dedupable: Set[String], threshold: Long,
-                      chunker: => org.apache.spark.sql.Dataset[FileChunk]) = {
-      val base = chunker
-      val chunks = if (duplicate) CawdEngine.withDuplicates(base) else base
-      CawdEngine.incrementalFlatDedup(spark, dir, chunks, dedupable, threshold)
-    }
-
-    val stats = (mode, storeDir) match {
-      case ("orc-naive", Some(sd)) =>
-        flatWithStore(sd, ChunkType.naiveOrcDedupable, 0L,
-          CawdEngine.chunkFiles(spark, CawdEngine.listFiles(inDir, ".orc"),
-            CawdEngine.Orc, OrcChunker.Naive))
-      case ("orc-column", Some(sd)) =>
-        flatWithStore(sd, ChunkType.columnOrcDedupable, 50L,
-          CawdEngine.chunkFiles(spark, CawdEngine.listFiles(inDir, ".orc"),
-            CawdEngine.Orc, OrcChunker.ColumnBased))
-      case ("parquet", Some(sd)) =>
-        flatWithStore(sd, ChunkType.parquetDedupable, 0L,
-          CawdEngine.chunkFiles(spark, CawdEngine.listFiles(inDir, ".parquet"),
-            CawdEngine.Parquet))
-      case ("cdc", Some(sd)) =>
-        flatWithStore(sd, ChunkType.cdcDedupable, 0L,
-          CdcChunker.chunkFiles(spark, CawdEngine.listFiles(inDir, "")))
-      case (m, Some(_)) =>
-        System.err.println(s"--store is not supported for mode '$m'"); sys.exit(2); null
-      case (_, None) => mode match {
-      case "plain" =>
-        val perFile = CawdEngine.plainFrames(spark,
-          CawdEngine.listFiles(inDir, "")).toDF()
+    val stats = variant match {
+      case Some(v) =>
+        try CawdEngine.dedupStats(spark, v, files, duplicate, storeDir)
+        catch { case e: IllegalArgumentException => fail(e.getMessage) }
+      case None =>
+        val perFile = CawdEngine.plainFrames(spark, files).toDF()
           .groupBy(col("file"))
           .agg(sum(col("size")).as("transfer"), count(lit(1)).as("frames"))
         Stats.rollup(perFile
@@ -75,48 +62,16 @@ object CawdMain {
           .unionByName(perFile
             .select(col("file"), lit("Frames").as("metric"),
               col("frames").cast("double").as("value"), lit(Metric.Count).as("unit"))))
-      case "orc-naive" =>
-        CawdEngine.flatDedupStats(spark, inDir, CawdEngine.Orc, duplicate,
-          OrcChunker.Naive)
-      case "orc-column" =>
-        CawdEngine.flatDedupStats(spark, inDir, CawdEngine.Orc, duplicate,
-          OrcChunker.ColumnBased, smallThreshold = 50L)
-      case "orc-sp" =>
-        CawdEngine.hierarchicalDedupStats(spark, inDir, duplicate)
-      case "parquet" =>
-        CawdEngine.flatDedupStats(spark, inDir, CawdEngine.Parquet, duplicate)
-      case "cdc" =>
-        val base = CdcChunker.chunkFiles(spark, CawdEngine.listFiles(inDir, ""))
-        val chunks = if (duplicate) CawdEngine.withDuplicates(base) else base
-        Stats.rollup(Stats.fromStatus(
-          Dedup.flatStatus(chunks.toDF(), ChunkType.cdcDedupable)))
-      case other =>
-        System.err.println(s"unknown mode '$other'"); sys.exit(2); null
-      }
     }
     stats.orderBy("file", "metric").show(10000, truncate = false)
 
     dest.foreach { out =>
       // plain mode framed EVERY file, so reconstruction must too — the
-      // frame table IS its chunk table; structural modes re-chunk with
-      // content for the ordered write
-      val chunks = mode match {
-        case "plain" =>
-          CawdEngine.plainFrames(spark, CawdEngine.listFiles(inDir, ""),
-            withContent = true)
-        case "cdc" =>
-          CdcChunker.chunkFiles(spark, CawdEngine.listFiles(inDir, ""),
-            withContent = true)
-        case _ =>
-          val (fmt, suffix, orcMode) = mode match {
-            case "parquet"    => (CawdEngine.Parquet, ".parquet", OrcChunker.Naive)
-            case "orc-naive"  => (CawdEngine.Orc, ".orc", OrcChunker.Naive)
-            case "orc-column" => (CawdEngine.Orc, ".orc", OrcChunker.ColumnBased)
-            case _            => (CawdEngine.Orc, ".orc", OrcChunker.StripeColumn)
-          }
-          CawdEngine.chunkFiles(spark,
-            CawdEngine.listFiles(inDir, suffix), fmt, orcMode, withContent = true)
-      }
+      // frame table IS its chunk table; the variants re-chunk with content
+      // for the ordered write
+      val chunks = variant.fold(
+        CawdEngine.plainFrames(spark, files, withContent = true))(
+        _.chunk(spark, files, withContent = true))
       CawdEngine.reconstructTo(chunks, out).show(10000, truncate = false)
     }
     spark.stop()

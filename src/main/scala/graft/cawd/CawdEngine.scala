@@ -2,11 +2,13 @@ package graft.cawd
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 
 /** End-to-end batch pipelines: directory scan → structural chunking →
-  * signature dedup → transfer stats / reconstruction.
+  * signature dedup ([[dedupStats]], one pipeline for every [[Variant]]) →
+  * transfer stats / reconstruction.
   *
   * Mirrors the reference's client/server flow (SURVEY.md §3) as ONE
   * declarative plan: the sorted-directory file stream
@@ -32,16 +34,37 @@ object CawdEngine {
   case object Orc     extends Format
   case object Parquet extends Format
 
-  /** S5/O1: list files under `dir` with `suffix`, lexicographically sorted —
-    * order defines store-warming semantics (`SpeedupClient.java:102`).
+  /** S5/O1: list files under `dir` with `suffix`, sorted in UTF-8 byte
+    * order — order defines store-warming semantics
+    * (`SpeedupClient.java:102`), and the streaming engine ranks each
+    * micro-batch in the same order, so CLI and stream runs that grow one
+    * store agree.
     */
   def listFiles(dir: String, suffix: String): Seq[(String, Int)] = {
     val conf = new Configuration()
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     val files = fs.listStatus(p).filter(_.isFile).map(_.getPath.toString)
-      .filter(_.endsWith(suffix)).sorted
+      .filter(_.endsWith(suffix)).sortBy(_.getBytes("UTF-8"))(Utf8Order)
     files.zipWithIndex.toSeq
+  }
+
+  /** UTF-8 byte (unsigned lexicographic) ordering — identical to Spark's
+    * UTF8String binary collation (`orderBy` on a path column). Java
+    * `String.compareTo` compares UTF-16 units, which diverges from byte
+    * order for paths mixing U+E000–U+FFFF with supplementary chars.
+    */
+  private[cawd] object Utf8Order extends Ordering[Array[Byte]] {
+    def compare(a: Array[Byte], b: Array[Byte]): Int = {
+      var i = 0
+      val n = math.min(a.length, b.length)
+      while (i < n) {
+        val c = (a(i) & 0xff) - (b(i) & 0xff)
+        if (c != 0) return c
+        i += 1
+      }
+      a.length - b.length
+    }
   }
 
   /** Target bytes of file content hashed per task. At 100 TB a 10 GB file
@@ -171,72 +194,65 @@ object CawdEngine {
       c.copy(file = c.file + "+copy", fileRank = c.fileRank + shift)))
   }
 
-  /** Full naive/column pipeline on parquet or ORC inputs: chunk → flat dedup
-    * → per-file + global stat rollup.
-    */
-  def flatDedupStats(spark: SparkSession, dir: String, fmt: Format,
-                     duplicate: Boolean = false,
-                     orcMode: OrcChunker.Mode = OrcChunker.Naive,
-                     smallThreshold: Long = 0L): DataFrame = {
-    val (suffix, dedupable) = fmt match {
-      case Parquet => (".parquet", ChunkType.parquetDedupable)
-      case Orc => (".orc", orcMode match {
-        case OrcChunker.Naive => ChunkType.naiveOrcDedupable
-        case _                => ChunkType.columnOrcDedupable
-      })
-    }
-    val base = chunkFiles(spark, listFiles(dir, suffix), fmt, orcMode)
-    val chunks = (if (duplicate) withDuplicates(base) else base).cache()
-    val status = Dedup.flatStatus(chunks.toDF(), dedupable, smallThreshold)
-    Stats.rollup(Stats.fromStatus(status).unionByName(timingStats(chunks)))
-  }
-
-  /** Hierarchical s+p pipeline on ORC inputs (SURVEY.md §2.4 J5). */
-  def hierarchicalDedupStats(spark: SparkSession, dir: String,
-                             duplicate: Boolean = false): DataFrame = {
-    val base = chunkFiles(spark, listFiles(dir, ".orc"), Orc, OrcChunker.StripeColumn)
-    val chunks = (if (duplicate) withDuplicates(base) else base).cache()
-    val status = Dedup.hierarchicalStatus(chunks.toDF())
-    Stats.rollup(Stats.fromStatus(status, emitSizes = true)
-      .unionByName(timingStats(chunks)))
-  }
-
-  /** Incremental flat dedup against a persisted signature store (the
-    * reference's long-lived server store as a batch API): probe ALL
-    * existing batch partitions at `storeDir`, append this run's first
-    * occurrences under the next NEGATIVE batch id, and return the stats
-    * rollup.
+  /** The batch dedup pipeline of every [[Variant]]: chunk `files` (each
+    * followed by a byte-identical copy with `duplicate`), decide every
+    * chunk's status, and roll up the per-file + global stats, timing rows
+    * included.
     *
-    * Batch-mode partitions descend from -1 while the streaming engine's
-    * ascend from 0 (checkpoint-derived), so the two id sequences can never
-    * collide — a resumed stream retrying micro-batch N overwrites only
-    * `batch=N`, and its probe (`batch < N`) always includes every
-    * batch-mode partition. One store can therefore be grown by CLI runs,
-    * library calls, and the streaming engine interchangeably.
+    * With `storeDir` the run is incremental against a persisted signature
+    * store (the reference's long-lived server store as a batch API): chunks
+    * probe ALL existing batch partitions first, and this run's first
+    * occurrences are appended under the next NEGATIVE batch id. Batch-mode
+    * partitions descend from -1 while the streaming engine's ascend from 0
+    * (checkpoint-derived), so the two id sequences can never collide — a
+    * resumed stream retrying micro-batch N overwrites only `batch=N`, and
+    * its probe (`batch < N`) always includes every batch-mode partition.
+    * One store can therefore be grown by CLI runs, library calls, and the
+    * streaming engine interchangeably. Only [[Variant.Flat]] variants take
+    * a store; any other throws IllegalArgumentException.
+    *
+    * The chunks and the status are cached for the store write and the
+    * rollup; the rollup is materialized before the caches are released, so
+    * the call leaves nothing cached.
     */
-  def incrementalFlatDedup(spark: SparkSession, storeDir: String,
-                           chunks: Dataset[FileChunk], dedupable: Set[String],
-                           smallThreshold: Long = 0L): DataFrame = {
-    val cached = chunks.cache()
-    val status = Dedup.flatStatus(cached.toDF(), dedupable, smallThreshold,
-      store = StreamingEngine.readStore(spark, storeDir)).cache()
+  def dedupStats(spark: SparkSession, variant: Variant, files: Seq[(String, Int)],
+                 duplicate: Boolean = false,
+                 storeDir: Option[String] = None): DataFrame = {
+    val base = variant.chunk(spark, files)
     try {
-      // CLI bulk ingest is not latency-bound: always cluster on the bucket
-      // value so one run writes ≤ NumSigBuckets files instead of
-      // tasks × buckets (round-8 advice — the measured 8 192-file trap).
-      StreamingEngine.writeStorePartition(
-        status.filter(col("status") === "miss")
-          .select(col("signature"), col("chunkType"), col("size")),
-        s"$storeDir/batch=${StreamingEngine.nextCliBatchId(spark, storeDir)}",
-        clusterBuckets = true)
-      // rollup materializes before the caches are released
-      Stats.rollup(Stats.fromStatus(status).unionByName(timingStats(cached)))
+      val chunks = (if (duplicate) withDuplicates(base) else base).cache()
+      val status = ((variant, storeDir) match {
+        case (v, None) => v.status(chunks.toDF())
+        case (v: Variant.Flat, Some(dir)) =>
+          v.status(chunks.toDF(), StreamingEngine.readStore(spark, dir))
+        case (v, Some(_)) => throw new IllegalArgumentException(
+          s"--store is not supported for mode '${v.name}'")
+      }).cache()
+      storeDir.foreach { dir =>
+        // CLI bulk ingest is not latency-bound: always cluster on the
+        // bucket value so one run writes ≤ NumSigBuckets files instead of
+        // tasks × buckets (round-8 advice — the measured 8 192-file trap).
+        StreamingEngine.writeStorePartition(
+          status.filter(col("status") === "miss")
+            .select(col("signature"), col("chunkType"), col("size")),
+          s"$dir/batch=${StreamingEngine.nextCliBatchId(spark, dir)}",
+          clusterBuckets = true)
+      }
+      Stats.rollup(Stats.fromStatus(status, variant.emitSizes)
+        .unionByName(timingStats(chunks)))
         .localCheckpoint(true)
     } finally {
-      status.unpersist()
-      cached.unpersist()
+      // every relation this run cached — the chunks, the status and the
+      // cascade's own stages — derives from `base`, so one cascading
+      // uncache releases them all
+      spark.sharedState.cacheManager.uncacheQuery(base, cascade = true)
     }
   }
+
+  /** [[dedupStats]] of the s+p cascade over the ORC files in `dir`. */
+  def hierarchicalDedupStats(spark: SparkSession, dir: String,
+                             duplicate: Boolean = false): DataFrame =
+    dedupStats(spark, Variant.OrcSp, listFiles(dir, Variant.OrcSp.suffix), duplicate)
 
   /** S6: plain no-dedup baseline — fixed-size framing of the raw byte
     * stream (`net/SpeedupStreamer.java:50-134`, bufferSize default 4096).
@@ -262,21 +278,25 @@ object CawdEngine {
     }
   }
 
+  /** Top-level cover of a chunk relation: every row except timing rows
+    * and OVERLAY columns (StripeColumn mode). Top-level Column chunks
+    * (ColumnBased mode, parentSeq == -1) ARE the data cover. The cover's
+    * rows tile each file in seq order.
+    */
+  def isCover: Column = col("parentSeq") =!= -2 &&
+    !(col("chunkType") === ChunkType.Column && col("parentSeq") =!= -1)
+
   /** S7: reconstruction sink — materialize each file as `destDir/<name>` by
     * ordered concatenation of resolved chunk contents
-    * (`net/SpeedupReceiver.java:87-161`). Rows stream through the same
-    * shuffle-sorted iterator as [[reconstructionCheck]] — no whole-file
-    * buffer on any task. Returns one row per file: (file, dest, bytes).
+    * (`net/SpeedupReceiver.java:87-161`). Rows stream through a
+    * shuffle-sorted iterator — no whole-file buffer on any task. Returns
+    * one row per file: (file, dest, bytes).
     */
   def reconstructTo(chunks: Dataset[FileChunk], destDir: String): DataFrame = {
     val spark = chunks.sparkSession
     import spark.implicits._
     chunks
-      // top-level cover: everything except timing rows and OVERLAY columns
-      // (StripeColumn mode); top-level Column chunks (ColumnBased mode,
-      // parentSeq == -1) ARE the data cover and must be written
-      .filter(c => c.parentSeq != -2 &&
-        !(c.chunkType == ChunkType.Column && c.parentSeq != -1))
+      .filter(isCover)
       .repartition(col("file"))
       .sortWithinPartitions(col("file"), col("seq"))
       .mapPartitions { rows =>
@@ -310,86 +330,6 @@ object CawdEngine {
       .toDF("file", "dest", "bytes")
   }
 
-  /** S7: reconstruction check — ordered concatenation of top-level chunk
-    * contents must be byte-identical to the source file. Returns one row per
-    * file: (file, file_bytes, recon_bytes, identical).
-    *
-    * Shuffles only (file, seq, content) and verifies with a streaming SHA-1
-    * per group — no whole-file buffer on the reduce side.
-    */
-  def reconstructionCheck(chunks: Dataset[FileChunk]): DataFrame =
-    // same top-level cover rule as reconstructTo: drop timing rows and
-    // overlay columns only — ColumnBased top-level Column chunks are data
-    reconstructionCheckRows(chunks
-      .filter(c => c.parentSeq != -2 &&
-        !(c.chunkType == ChunkType.Column && c.parentSeq != -1))
-      .toDF())
-
-  /** Same check over an already cover-filtered chunk-content relation with
-    * at least (file, seq, content).
-    */
-  def reconstructionCheckRows(chunkRows: DataFrame): DataFrame = {
-    val spark = chunkRows.sparkSession
-    import spark.implicits._
-    chunkRows
-      .select(col("file"), col("seq"), col("content"))
-      .as[(String, Int, Array[Byte])]
-      // Externally-sorted stream per file: Spark's shuffle sort orders rows
-      // on disk, and the digest consumes them one by one — at no point does
-      // a whole file's content sit in one task's heap.
-      .repartition(col("file"))
-      .sortWithinPartitions(col("file"), col("seq"))
-      .mapPartitions { rows =>
-        def finish(file: String, md: java.security.MessageDigest,
-                   reconBytes: Long): (String, Long, Long, Boolean) = {
-          val reconSha = md.digest().map("%02x".format(_)).mkString
-          val p = new Path(file)
-          val fs = p.getFileSystem(new Configuration())
-          val len = fs.getFileStatus(p).getLen
-          val buf = new Array[Byte](1 << 20)
-          val md2 = java.security.MessageDigest.getInstance("SHA-1")
-          val in = fs.open(p)
-          try {
-            var n = in.read(buf)
-            while (n > 0) { md2.update(buf, 0, n); n = in.read(buf) }
-          } finally in.close()
-          val origSha = md2.digest().map("%02x".format(_)).mkString
-          (file, len, reconBytes, origSha == reconSha)
-        }
-        new Iterator[(String, Long, Long, Boolean)] {
-          private var cur: String = _
-          private var md: java.security.MessageDigest = _
-          private var reconBytes = 0L
-          private var pending: Option[(String, Long, Long, Boolean)] = None
-          private def advance(): Unit = {
-            while (pending.isEmpty && rows.hasNext) {
-              val (file, _, content) = rows.next()
-              if (cur != null && file != cur) {
-                pending = Some(finish(cur, md, reconBytes))
-                cur = null
-              }
-              if (cur == null) {
-                cur = file
-                md = java.security.MessageDigest.getInstance("SHA-1")
-                reconBytes = 0L
-              }
-              md.update(content)
-              reconBytes += content.length
-            }
-            if (pending.isEmpty && cur != null) {
-              pending = Some(finish(cur, md, reconBytes))
-              cur = null
-            }
-          }
-          def hasNext: Boolean = { advance(); pending.nonEmpty }
-          def next(): (String, Long, Long, Boolean) = {
-            advance(); val r = pending.get; pending = None; r
-          }
-        }
-      }
-      .toDF("file", "file_bytes", "recon_bytes", "identical")
-  }
-
   /** Sidecar location for [[digestingExportWrite]]'s partial digests: a
     * SIBLING of the export dir (not a subdir) so the export stays a plain
     * parquet directory for every reader — Spark's old-shape read-back, the
@@ -403,8 +343,8 @@ object CawdEngine {
     * the same pass. The old c06 shape paid four linear byte passes — chunk
     * +hash+carry, export write, export read-back + a repartition(file)
     * exchange moving every content byte into the digest sort, and a source
-    * re-read — because [[reconstructionCheckRows]] needs each file's bytes
-    * in seq order on one task. This pass instead digests each maximal
+    * re-read — because its digest needed each file's bytes in seq order
+    * on one task. This pass instead digests each maximal
     * BYTE-CONTIGUOUS same-file run of cover rows AS the parquet writer
     * pulls them, keyed on the chunks' true file offsets (chunk output is
     * hash-partitioned by (file, ~16 MB bucket), and a partition can hold
@@ -502,9 +442,8 @@ object CawdEngine {
     * disjoint ranges (load-bearing: overlapping ranges could sum to the
     * file length while leaving a gap unchecked), then re-read each
     * original range — distributed by ~[[SplitBytes]]-sized partial, not
-    * by file — and compare digests. Returns the same relation as
-    * [[reconstructionCheckRows]]: (file, file_bytes, recon_bytes,
-    * identical), identical := every range digest matches AND recon_bytes
+    * by file — and compare digests. Returns one row per file: (file,
+    * file_bytes, recon_bytes, identical), identical := every range digest matches AND recon_bytes
     * == file_bytes — with disjointness and ranges bounded by EOF, that is
     * exact tiling of [0, file_bytes), i.e. whole-file byte identity.
     */

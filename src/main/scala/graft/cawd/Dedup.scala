@@ -45,19 +45,21 @@ object Dedup {
     val FileHeaderFixed: Long = 4 + 8
   }
 
-  /** Columns appended by [[markFirstOccurrence]]. */
-  val IsFirstCol = "is_first"
-  val InStoreCol = "in_store"
+  /** Working columns of [[markFirstOccurrence]]. */
+  private val IsFirstCol = "is_first"
+  private val InStoreCol = "in_store"
 
-  /** Marks each row's signature as first-seen or repeated, in strict
-    * (fileRank, ord) arrival order; ties (identical signatures at the same
-    * order key) are all "first" — matching the reference, where all column
-    * probes of one stripe happen before that stripe's inserts
+  /** Appends each row's store `status`: "miss" for the first occurrence of
+    * its signature in strict (fileRank, ord) arrival order, "hit" for every
+    * repeat; ties (identical signatures at the same order key) are all
+    * first — matching the reference, where all column probes of one stripe
+    * happen before that stripe's inserts
     * (`StripePlusColumnORCReceiver.java:93-211`).
     *
     * @param ordCol in-file order column (`seq` for flat chunk streams,
     *               `parentSeq` for per-stripe column probes)
-    * @param store  optional warm store; membership forces hit
+    * @param store  optional warm store from [[StreamingEngine.readStore]];
+    *               membership forces hit
     */
   def markFirstOccurrence(chunks: DataFrame, ordCol: String,
                           store: Option[DataFrame] = None): DataFrame = {
@@ -74,7 +76,7 @@ object Dedup {
     val marked = chunks.join(firsts, Seq("signature"))
       .withColumn(IsFirstCol, key <=> col("__first_key"))
       .drop("__first_key")
-    store match {
+    val probed = store match {
       // Signature-bucketed store (the StreamingEngine layout): the batch's
       // distinct signatures (a) prune the store scan to only the sbucket
       // partitions they can live in — partition pruning against a
@@ -85,7 +87,7 @@ object Dedup {
       // whole store per batch) into per-batch work proportional to the
       // batch. Oversized probe sets (a backfill batch) fall back to the
       // shuffled join rather than a driver-breaking broadcast.
-      case Some(s) if s.columns.contains(StreamingEngine.SigBucketCol) =>
+      case Some(s) =>
         val probeSigs = chunks.select(col("signature")).distinct()
         // ONE driver action per probe either way. Common (bounded) case: a
         // capped collect yields the exact probe set AND its bucket set —
@@ -172,13 +174,12 @@ object Dedup {
           marked.join(hits, Seq("signature"), "left")
             .withColumn(InStoreCol, coalesce(col(InStoreCol), lit(false)))
         }
-      case Some(s) =>
-        val sigsOnly = s.select(col("signature")).distinct()
-          .withColumn(InStoreCol, lit(true))
-        marked.join(sigsOnly, Seq("signature"), "left")
-          .withColumn(InStoreCol, coalesce(col(InStoreCol), lit(false)))
       case None => marked.withColumn(InStoreCol, lit(false))
     }
+    probed
+      .withColumn("status",
+        when(col(InStoreCol) || !col(IsFirstCol), lit("hit")).otherwise(lit("miss")))
+      .drop(IsFirstCol, InStoreCol)
   }
 
   /** Probe sets up to this many distinct signatures broadcast into the
@@ -233,12 +234,7 @@ object Dedup {
         when(col("chunkType").isInCollection(dedupable), lit("small"))
           .otherwise(lit("raw")))
 
-    val probed = markFirstOccurrence(special, "seq", store)
-      .withColumn("status",
-        when(col(InStoreCol) || !col(IsFirstCol), lit("hit")).otherwise(lit("miss")))
-      .drop(IsFirstCol, InStoreCol)
-
-    probed.unionByName(plain)
+    markFirstOccurrence(special, "seq", store).unionByName(plain)
   }
 
   /** Hierarchical stripe→column cascade (s+p variant, J5):
@@ -251,12 +247,11 @@ object Dedup {
     *
     * Returns chunk rows annotated with `status`; column subchunks appear
     * ONLY for missed stripes (they replace the stripe-data transfer).
+    * Caches two of its stages; [[CawdEngine.dedupStats]] releases them with
+    * the rest of its run.
     */
   def hierarchicalStatus(chunks: DataFrame,
-                         smallThreshold: Long = 2L * Sha1.Size,
-                         stripeStore: Option[DataFrame] = None,
-                         columnStore: Option[DataFrame] = None,
-                         footerStore: Option[DataFrame] = None): DataFrame = {
+                         smallThreshold: Long = 2L * Sha1.Size): DataFrame = {
     // every data row participates (Column subchunks AND linked index/footer
     // chunks carry parentSeq != -1); only timing side-channel rows drop out
     val top = chunks
@@ -276,14 +271,13 @@ object Dedup {
       .agg(count(lit(1)).as("__n_cols"))
       .filter(col("__n_cols") >= 2)
       .drop("__n_cols")
-    val stripeStatus = markFirstOccurrence(stripes, "seq", stripeStore)
+    val stripeStatus = markFirstOccurrence(stripes, "seq")
       .join(stripesWithCols,
         col("file") === col("c_file") && col("seq") === col("c_parent"), "left")
       .withColumn("status",
-        when(col(InStoreCol) || !col(IsFirstCol), lit("hit"))
-          .when(col("c_file").isNotNull, lit("miss_delegated"))
-          .otherwise(lit("miss")))
-      .drop(IsFirstCol, InStoreCol, "c_file", "c_parent")
+        when(col("status") === "miss" && col("c_file").isNotNull,
+          lit("miss_delegated")).otherwise(col("status")))
+      .drop("c_file", "c_parent")
       .cache() // reused by linked-chunk + column-cascade joins and the union
 
     val stripeOutcome = stripeStatus.select(
@@ -315,17 +309,11 @@ object Dedup {
     val bigCols = columnsOfMissed.filter(col("size") > smallThreshold)
     val smallCols = columnsOfMissed.filter(col("size") <= smallThreshold)
       .withColumn("status", lit("small"))
-    val colStatus = markFirstOccurrence(bigCols, "parentSeq", columnStore)
-      .withColumn("status",
-        when(col(InStoreCol) || !col(IsFirstCol), lit("hit")).otherwise(lit("miss")))
-      .drop(IsFirstCol, InStoreCol)
+    val colStatus = markFirstOccurrence(bigCols, "parentSeq")
 
     // 4. file footers probe their own store
-    val footers = top.filter(col("chunkType") === ChunkType.FileFooter)
-    val footerStatus = markFirstOccurrence(footers, "seq", footerStore)
-      .withColumn("status",
-        when(col(InStoreCol) || !col(IsFirstCol), lit("hit")).otherwise(lit("miss")))
-      .drop(IsFirstCol, InStoreCol)
+    val footerStatus = markFirstOccurrence(
+      top.filter(col("chunkType") === ChunkType.FileFooter), "seq")
 
     // 5. everything else is raw
     val raw = top.filter(

@@ -50,29 +50,11 @@ object StreamingEngine {
     */
   val NumSigBuckets = 256
 
-  /** Conf key: batches up to this many files rank with a single bounded
-    * driver collect; larger backfills use the distributed sort (see
-    * [[processBatch]]). A session conf, not mutable global state (round-10
-    * advice — the old `var` test seam leaked across every suite sharing
-    * the JVM): StreamingSpec lowers it on its own session to drive a
-    * 3-file "backfill" through the large branch without creating 2²⁰
-    * files, and a real deployment can tune it per stream the same way.
+  /** Batches up to this many files rank with a single bounded driver
+    * collect; larger backfills use the distributed sort (see
+    * [[processBatch]]).
     */
-  private[cawd] val MaxWindowRankFilesKey =
-    "spark.graft.streaming.maxWindowRankFiles"
-  private[cawd] val DefaultMaxWindowRankFiles: Long = 1L << 20
-  private[cawd] def maxWindowRankFiles(s: SparkSession): Long =
-    s.conf.getOption(MaxWindowRankFilesKey).map { v =>
-      // validate at configuration-read time, not batch time: the value is
-      // used as `.toInt + 1` in a limit(), so an over-Int.MaxValue setting
-      // would silently wrap negative mid-stream and a typo would NPE the
-      // batch (round-11 advice). Fail fast on junk; clamp the usable range.
-      val n =
-        try v.toLong
-        catch { case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$MaxWindowRankFilesKey must be a positive integer, got '$v'") }
-      math.min(math.max(1L, n), Int.MaxValue - 1L)
-    }.getOrElse(DefaultMaxWindowRankFiles)
+  private[cawd] val MaxRankFiles: Int = 1 << 20
 
   /** Deterministic signature → bucket assignment, usable on both the write
     * path and the probe's pruning filter.
@@ -257,10 +239,6 @@ object StreamingEngine {
     // job, and foreachBatch inherits the same conf. File count per batch
     // is unknown here; processBatch re-sizes shuffle partitions per batch.
     val sess = latencySession(spark, graft.Sizing.cores(spark))
-    // child sessions carry a private SQLConf that does not see parent
-    // runtime confs — carry the caller's rank-strategy tuning across
-    spark.conf.getOption(MaxWindowRankFilesKey)
-      .foreach(v => sess.conf.set(MaxWindowRankFilesKey, v))
     val files = sess.readStream
       .format("binaryFile")
       .schema(org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat.schema)
@@ -287,25 +265,6 @@ object StreamingEngine {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-  }
-
-  /** UTF-8 byte (unsigned lexicographic) ordering — identical to Spark's
-    * UTF8String binary collation, so BOTH rank branches below agree with
-    * each other and with what the old single-window-job branch produced.
-    * (Java `String.compareTo` compares UTF-16 units, which diverges from
-    * byte order for paths mixing U+E000–U+FFFF with supplementary chars.)
-    */
-  private[cawd] object Utf8Order extends Ordering[Array[Byte]] {
-    def compare(a: Array[Byte], b: Array[Byte]): Int = {
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val c = (a(i) & 0xff) - (b(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      a.length - b.length
-    }
   }
 
   /** Latency-tuned child session for small micro-batches, memoized per
@@ -337,12 +296,14 @@ object StreamingEngine {
     * probe the earlier-batch store, overwrite this batch's store/stats
     * (/export) partitions. Idempotent under retries: the probe set never
     * includes this batch's own partition, so a re-run recomputes identical
-    * statuses and rewrites identical partitions.
+    * statuses and rewrites identical partitions. Batches of more than
+    * `maxRankFiles` files take the backfill path.
     */
   private[cawd] def processBatch(spark: SparkSession, batch: DataFrame,
                                  batchId: Long, storeDir: String,
                                  statsDir: String, fmt: CawdEngine.Format,
-                                 exportDir: Option[String] = None): Unit = {
+                                 exportDir: Option[String] = None,
+                                 maxRankFiles: Int = MaxRankFiles): Unit = {
     import spark.implicits._
     // ranks are per-batch; earlier batches' chunks are already in the store,
     // so cross-batch ordering is enforced by store membership, not rank.
@@ -353,9 +314,8 @@ object StreamingEngine {
     // Larger backfills fall back to the fully distributed range-partitioned
     // sort (no driver collect beyond the capped probe, no exact count —
     // the cap probe IS the strategy pick).
-    val maxRankFiles = maxWindowRankFiles(spark)
     val headPaths = batch.select(col("path"))
-      .limit(maxRankFiles.toInt + 1)
+      .limit(maxRankFiles + 1)
       .collect().map(_.getString(0).replaceFirst("^file:", ""))
     if (headPaths.isEmpty) return
     val small = headPaths.length <= maxRankFiles
@@ -371,7 +331,7 @@ object StreamingEngine {
         listingThreshold = Some(ListingThreshold))
     val ranked: org.apache.spark.sql.Dataset[(String, Int)] =
       if (small) {
-        val pairs = headPaths.sortBy(_.getBytes("UTF-8"))(Utf8Order).zipWithIndex
+        val pairs = headPaths.sortBy(_.getBytes("UTF-8"))(CawdEngine.Utf8Order).zipWithIndex
         // chunking parallelism follows the FILE count (a chunker walks one
         // file sequentially; tasks beyond nFiles only add launch overhead)
         val slices = graft.Sizing.chunkTasks(pairs.length, graft.Sizing.cores(spark))
@@ -388,25 +348,25 @@ object StreamingEngine {
         sess.createDataFrame(
           batch.select(col("path")).as[String].rdd
             .map(_.replaceFirst("^file:", ""))
-            .sortBy(_.getBytes("UTF-8"))(Utf8Order, scala.reflect.classTag[Array[Byte]])
+            .sortBy(_.getBytes("UTF-8"))(CawdEngine.Utf8Order,
+              scala.reflect.classTag[Array[Byte]])
             .zipWithIndex()
             .map { case (p, i) => (p, i.toInt) }
             .repartition(graft.Sizing.cores(spark)))
           .toDF("path", "fileRank")
           .as[(String, Int)](org.apache.spark.sql.Encoders.product[(String, Int)])
-    // ORC streams dedup with the NAIVE vocabulary, so chunk in Naive mode
-    // too — StripeColumn's linked chunks (parentSeq != -1) would silently
-    // fall out of flatStatus's top-level filter and the exported table
-    val chunks = CawdEngine.chunkFileDs(ranked, fmt, orcMode = OrcChunker.Naive)
-    val dedupable = fmt match {
-      case CawdEngine.Parquet => ChunkType.parquetDedupable
-      case CawdEngine.Orc     => ChunkType.naiveOrcDedupable
+    // ORC streams run the naive variant — a flat probe needs top-level
+    // chunks, and StripeColumn's linked chunks (parentSeq != -1) would
+    // silently fall out of it and the exported table
+    val variant: Variant.Structural = fmt match {
+      case CawdEngine.Parquet => Variant.Parquet
+      case CawdEngine.Orc     => Variant.OrcNaive
     }
     // stats/export see basenames so downstream output (and the DuckDB
     // oracle re-deriving it) doesn't depend on temp-dir paths
-    val chunkDf = chunks.toDF().cache() // ours to release; flatStatus reuses it
-    val status = Dedup.flatStatus(chunkDf, dedupable,
-      store = readStore(sess, storeDir, beforeBatch = Some(batchId)))
+    val chunkDf = variant.chunkDs(ranked).toDF().cache() // ours to release; flatStatus reuses it
+    val status = variant.status(chunkDf,
+      readStore(sess, storeDir, beforeBatch = Some(batchId)))
       .withColumn("file", regexp_replace(col("file"), ".*/", ""))
       .cache()
     // audit hook (no-op unless PlanAudit enabled it): the probe/dedup plan

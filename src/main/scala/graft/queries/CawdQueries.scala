@@ -69,25 +69,20 @@ object CawdQueries {
   private def base(c: org.apache.spark.sql.Column) =
     regexp_replace(c, ".*/", "")
 
-  /** Chunk → export → dedup-from-export → stats. Both this plan and the
-    * DuckDB oracle consume the SAME materialized chunk table, so the dedup
-    * decision + accounting get a value-level external check (and chunking
-    * runs once instead of per consumer).
+  /** Chunk → export → dedup-from-export → stats for one [[Variant]] over
+    * the files of `srcDir`. Both this plan and the DuckDB oracle consume
+    * the SAME materialized chunk table, so the dedup decision + accounting
+    * get a value-level external check (and chunking runs once instead of
+    * per consumer).
     */
-  private def flatFromExport(s: SparkSession, sfDir: String, srcDir: String,
-                             fmt: CawdEngine.Format, tag: String,
-                             duplicate: Boolean, orcMode: OrcChunker.Mode,
-                             smallThreshold: Long,
-                             dedupable: Set[String]): DataFrame = {
-    val suffix = fmt match {
-      case CawdEngine.Parquet => ".parquet"
-      case CawdEngine.Orc     => ".orc"
-    }
-    val chunked = CawdEngine.chunkFiles(s, CawdEngine.listFiles(srcDir, suffix), fmt, orcMode)
-    val chunks = if (duplicate) CawdEngine.withDuplicates(chunked) else chunked
-    val tbl = chunkTable(s, sfDir, tag, chunks)
-    val status = Dedup.flatStatus(tbl, dedupable, smallThreshold)
-    Stats.rollup(Stats.fromStatus(status)).orderBy("file", "metric")
+  private def fromExport(s: SparkSession, sfDir: String, srcDir: String,
+                         variant: Variant, tag: String,
+                         duplicate: Boolean): DataFrame = {
+    val chunked = variant.chunk(s, CawdEngine.listFiles(srcDir, variant.suffix))
+    val tbl = chunkTable(s, sfDir, tag,
+      if (duplicate) CawdEngine.withDuplicates(chunked) else chunked)
+    Stats.rollup(Stats.fromStatus(variant.status(tbl), variant.emitSizes))
+      .orderBy("file", "metric")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -106,35 +101,28 @@ object CawdQueries {
     // S4+J1+A1-A4: parquet pipeline, cold store (every first-occurrence
     // chunk misses; intra-corpus duplicate pages dedup).
     "c02_parquet_dedup_cold" -> ((s, d) =>
-      flatFromExport(s, d, d, CawdEngine.Parquet, "c02", duplicate = false,
-        OrcChunker.Naive, 0L, ChunkType.parquetDedupable)),
+      fromExport(s, d, d, Variant.Parquet, "c02", duplicate = false)),
 
     // Warm-store parity KPI (BASELINE.md): file + byte-identical copy →
     // copies' DedupBytes ≈ dedupable section bytes.
     "c03_parquet_dedup_warm" -> ((s, d) =>
-      flatFromExport(s, d, d, CawdEngine.Parquet, "c03", duplicate = true,
-        OrcChunker.Naive, 0L, ChunkType.parquetDedupable)),
+      fromExport(s, d, d, Variant.Parquet, "c03", duplicate = true)),
 
     // S1+J1: naive ORC stripe dedup, warm.
     "c04_orc_naive_dedup_warm" -> ((s, d) =>
-      flatFromExport(s, d, ensureOrcFixtures(s, d), CawdEngine.Orc, "c04",
-        duplicate = true, OrcChunker.Naive, 0L, ChunkType.naiveOrcDedupable)),
+      fromExport(s, d, ensureOrcFixtures(s, d), Variant.OrcNaive, "c04",
+        duplicate = true)),
 
     // S2+P3: column-based ORC dedup with the reference's 50 B small-column
-    // bypass (`orc/net/ColumnBasedORCStreamer.java:109`), warm.
+    // bypass, warm.
     "c08_orc_column_dedup_warm" -> ((s, d) =>
-      flatFromExport(s, d, ensureOrcFixtures(s, d), CawdEngine.Orc, "c08",
-        duplicate = true, OrcChunker.ColumnBased, 50L, ChunkType.columnOrcDedupable)),
+      fromExport(s, d, ensureOrcFixtures(s, d), Variant.OrcColumn, "c08",
+        duplicate = true)),
 
     // S3+J3-J5: hierarchical stripe→column cascade, warm.
-    "c05_orc_sp_cascade_warm" -> ((s, d) => {
-      val orcDir = ensureOrcFixtures(s, d)
-      val chunked = CawdEngine.chunkFiles(s, CawdEngine.listFiles(orcDir, ".orc"),
-        CawdEngine.Orc, OrcChunker.StripeColumn)
-      val tbl = chunkTable(s, d, "c05", CawdEngine.withDuplicates(chunked))
-      val status = Dedup.hierarchicalStatus(tbl)
-      Stats.rollup(Stats.fromStatus(status, emitSizes = true)).orderBy("file", "metric")
-    }),
+    "c05_orc_sp_cascade_warm" -> ((s, d) =>
+      fromExport(s, d, ensureOrcFixtures(s, d), Variant.OrcSp, "c05",
+        duplicate = true)),
 
     // S7: byte-identity reconstruction over both formats. The cover-filtered
     // chunk contents are materialized and SHA-1-digested in the same pass
@@ -143,17 +131,13 @@ object CawdQueries {
     // cumulative offset — an independent byte-level check of the same
     // relation.
     "c06_reconstruction" -> ((s, d) => {
-      val orcDir = ensureOrcFixtures(s, d)
-      val orc = CawdEngine.chunkFiles(s, CawdEngine.listFiles(orcDir, ".orc"),
-        CawdEngine.Orc, OrcChunker.StripeColumn, withContent = true)
-      val pq = CawdEngine.chunkFiles(s, CawdEngine.listFiles(d, ".parquet"),
-        CawdEngine.Parquet, withContent = true)
-      val cover = orc.unionByName(pq)
-        // top-level cover rule (see reconstructTo): no timing rows, no
-        // StripeColumn overlay columns. `start` rides along for the fused
-        // digest's byte-range partials; neither export shape writes it.
-        .filter(c => c.parentSeq != -2 &&
-          !(c.chunkType == ChunkType.Column && c.parentSeq != -1))
+      def chunks(v: Variant, dir: String) =
+        v.chunk(s, CawdEngine.listFiles(dir, v.suffix), withContent = true)
+      val cover = chunks(Variant.OrcSp, ensureOrcFixtures(s, d))
+        .unionByName(chunks(Variant.Parquet, d))
+        // `start` rides along for the fused digest's byte-range partials;
+        // neither export shape writes it.
+        .filter(CawdEngine.isCover)
         .select(col("file"), col("seq"), col("start"), col("size"),
           col("content"))
       // The export is written UNCOMPRESSED with 16 MB row groups: its
@@ -190,12 +174,8 @@ object CawdQueries {
     // the dedup literature's alternative to structural chunking, on the
     // same corpus + byte-identical copies. Compare its DedupBytes with
     // c03's to see what format awareness buys (the reference's thesis).
-    "c09_cdc_dedup_warm" -> ((s, d) => {
-      val chunked = CdcChunker.chunkFiles(s, CawdEngine.listFiles(d, ".parquet"))
-      val tbl = chunkTable(s, d, "c09", CawdEngine.withDuplicates(chunked))
-      val status = Dedup.flatStatus(tbl, ChunkType.cdcDedupable, 0L)
-      Stats.rollup(Stats.fromStatus(status)).orderBy("file", "metric")
-    }),
+    "c09_cdc_dedup_warm" -> ((s, d) =>
+      fromExport(s, d, d, Variant.Cdc, "c09", duplicate = true)),
 
     // S6: plain no-dedup baseline — REAL fixed-4096 B framing of the byte
     // stream (`net/SpeedupStreamer.java:50-134`): Spark aggregates the
@@ -228,12 +208,12 @@ object CawdQueries {
          |  CAST(sum(size) AS BIGINT) AS bytes
          |FROM read_parquet('${exportGlob("c01")}')
          |GROUP BY file, chunkType""".stripMargin,
-    "c02_parquet_dedup_cold" -> flatSql("c02", ChunkType.parquetDedupable, 0L),
-    "c03_parquet_dedup_warm" -> flatSql("c03", ChunkType.parquetDedupable, 0L),
-    "c04_orc_naive_dedup_warm" -> flatSql("c04", ChunkType.naiveOrcDedupable, 0L),
-    "c08_orc_column_dedup_warm" -> flatSql("c08", ChunkType.columnOrcDedupable, 50L),
+    "c02_parquet_dedup_cold" -> flatSql("c02", Variant.Parquet),
+    "c03_parquet_dedup_warm" -> flatSql("c03", Variant.Parquet),
+    "c04_orc_naive_dedup_warm" -> flatSql("c04", Variant.OrcNaive),
+    "c08_orc_column_dedup_warm" -> flatSql("c08", Variant.OrcColumn),
     "c05_orc_sp_cascade_warm" -> hierarchicalSql("c05"),
-    "c09_cdc_dedup_warm" -> flatSql("c09", ChunkType.cdcDedupable, 0L),
+    "c09_cdc_dedup_warm" -> flatSql("c09", Variant.Cdc),
     "c07_plain_baseline" ->
       s"""SELECT file, bytes AS transfer_bytes,
          |  CAST(ceil(bytes / 4096.0) AS BIGINT) AS frames,
@@ -356,10 +336,11 @@ private[queries] object CawdOracleSql {
     * default key is fileRank·2^32 + seq (seq < 2^32); s01 prepends the
     * micro-batch id so cross-batch store growth is captured.
     */
-  def flatSql(tag: String, dedupable: Set[String], threshold: Long,
+  def flatSql(tag: String, variant: Variant.Flat,
               keyExpr: String = "fileRank * 4294967296 + seq",
               glob: Option[String] = None): String = {
-    val d = dedupable.toSeq.sorted.map(t => s"'$t'").mkString(", ")
+    val d = variant.dedupable.toSeq.sorted.map(t => s"'$t'").mkString(", ")
+    val threshold = variant.threshold
     s"""WITH c AS (SELECT * FROM read_parquet('${glob.getOrElse(exportGlob(tag))}')),
        |top AS (SELECT * FROM c WHERE parentSeq = -1),
        |special AS (SELECT * FROM top WHERE chunkType IN ($d) AND size > $threshold),

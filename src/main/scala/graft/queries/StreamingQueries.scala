@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cawd.{CawdEngine, CawdExport, ChunkType, StreamingEngine}
+import graft.cawd.{CawdEngine, CawdExport, StreamingEngine, Variant}
 
 /** Streaming dedup exercised as a batch-checkable query: two file-arrival
   * waves (originals, then byte-identical copies) through the Structured
@@ -514,15 +514,15 @@ object StreamingQueries {
         fs.mkdirs(inDir)
         val exportDir = CawdExport.dir(d, "s01")
         fs.delete(new Path(exportDir), true) // per-batch partitions; fresh per run
-        val srcs = CawdEngine.listFiles(d, ".parquet").map(_._1)
+        val srcs = CawdEngine.listFiles(d, Variant.Parquet.suffix).map(_._1)
         // wave 1: originals arrive
         stageInto(fs, conf, srcs, inDir, "")
-        StreamingEngine.start(s, inDir.toString, store, stats, ".parquet",
-          CawdEngine.Parquet, ckpt, Some(exportDir)).awaitTermination()
+        StreamingEngine.start(s, inDir.toString, store, stats,
+          Variant.Parquet.suffix, CawdEngine.Parquet, ckpt, Some(exportDir)).awaitTermination()
         // wave 2: byte-identical copies arrive later
         stageInto(fs, conf, srcs, inDir, "zz_copy_")
-        StreamingEngine.start(s, inDir.toString, store, stats, ".parquet",
-          CawdEngine.Parquet, ckpt, Some(exportDir)).awaitTermination()
+        StreamingEngine.start(s, inDir.toString, store, stats,
+          Variant.Parquet.suffix, CawdEngine.Parquet, ckpt, Some(exportDir)).awaitTermination()
 
         StreamingEngine.statsRollup(s, stats)
           .orderBy("file", "metric")
@@ -534,8 +534,7 @@ object StreamingQueries {
 
   val oracle: Map[String, String] = Map(
     // batchId ≪ 2^22 files per batch ≪ 2^22, seq < 2^32 → composite key fits a BIGINT
-    "s01_streaming_dedup" -> CawdOracleSql.flatSql("s01",
-      ChunkType.parquetDedupable, 0L,
+    "s01_streaming_dedup" -> CawdOracleSql.flatSql("s01", Variant.Parquet,
       keyExpr = "(batchId * 4194304 + fileRank) * 4294967296 + seq",
       glob = Some(s"${CawdExport.Root}/sf0.01/s01/batch=*/*.parquet")),
 

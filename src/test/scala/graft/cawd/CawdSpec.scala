@@ -101,11 +101,11 @@ class CawdSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ds = spark.createDataset(
       OrcChunker.chunk(orcPath, 0, OrcChunker.StripeColumn) ++
       ParquetChunker.chunk(pqPath, 1))
-    val rows = CawdEngine.reconstructionCheck(ds).collect()
+    val rows = RestoreCheck(ds)
     assert(rows.length == 2)
-    rows.foreach { r =>
-      assert(r.getBoolean(3), s"${r.getString(0)} not byte-identical")
-      assert(r.getLong(1) == r.getLong(2))
+    rows.foreach { case (file, fileBytes, reconBytes, identical) =>
+      assert(identical, s"$file not byte-identical")
+      assert(fileBytes == reconBytes)
     }
   }
 
@@ -128,8 +128,8 @@ class CawdSpec extends AnyFunSuite with BeforeAndAfterAll {
       for (mode <- Seq(OrcChunker.Naive, OrcChunker.ColumnBased, OrcChunker.StripeColumn)) {
         val chunks = OrcChunker.chunk(p, 0, mode)
         assertContiguous(chunks, fileLen(p))
-        val check = CawdEngine.reconstructionCheck(spark.createDataset(chunks)).collect()
-        assert(check.head.getBoolean(3), s"orc $name/$mode not byte-identical")
+        val check = RestoreCheck(spark.createDataset(chunks))
+        assert(check.head._4, s"orc $name/$mode not byte-identical")
         // the small-stripe variant must actually exercise MULTI-STRIPE
         // layout (a silently-ignored writer option would collapse this
         // case back to the single-stripe shape every other test covers)
@@ -151,8 +151,8 @@ class CawdSpec extends AnyFunSuite with BeforeAndAfterAll {
       val p = firstPart(out, ".parquet")
       val chunks = ParquetChunker.chunk(p, 0)
       assertContiguous(chunks, fileLen(p))
-      val check = CawdEngine.reconstructionCheck(spark.createDataset(chunks)).collect()
-      assert(check.head.getBoolean(3), s"parquet $name not byte-identical")
+      val check = RestoreCheck(spark.createDataset(chunks))
+      assert(check.head._4, s"parquet $name not byte-identical")
       // the small-block variant must actually produce multiple row groups
       // (4 columns => >4 data-page runs only when block.size bites)
       if (name == "gzip-small-pages")
@@ -171,9 +171,20 @@ class CawdSpec extends AnyFunSuite with BeforeAndAfterAll {
         OrcChunker.StripeColumn)) {
       val chunks = OrcChunker.chunk(p, 0, mode)
       assertContiguous(chunks, fileLen(p))
-      val check = CawdEngine.reconstructionCheck(spark.createDataset(chunks)).collect()
-      assert(check.head.getBoolean(3), s"$p/$mode not byte-identical")
+      val check = RestoreCheck(spark.createDataset(chunks))
+      assert(check.head._4, s"$p/$mode not byte-identical")
     }
+  }
+
+  test("listFiles ranks in UTF-8 byte order, the order Spark sorts paths in") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("cawd-order").toString
+    // U+FFFD sorts before U+1F600 in UTF-8 but after it in UTF-16
+    val names = Seq("\uFFFD.bin", "\uD83D\uDE00.bin")
+    names.foreach(n => Files.write(java.nio.file.Paths.get(work, n), Array[Byte](1)))
+    val listed = CawdEngine.listFiles(work, ".bin")
+      .map { case (p, _) => new org.apache.hadoop.fs.Path(p).getName }
+    assert(listed == spark.createDataset(names).orderBy("value").as[String].collect().toSeq)
   }
 
   test("zero-byte file terminates: one empty ERROR chunk with sha1 of zero bytes") {
@@ -198,9 +209,8 @@ class CawdSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().filter(_.parentSeq != -2)
     assert(chunks.length == 1 && chunks.head.chunkType == ChunkType.Error)
     assert(chunks.head.size == 4096)
-    val check = CawdEngine.reconstructionCheck(
-      spark.createDataset(chunks.toSeq)).collect()
-    assert(check.head.getBoolean(3), "ERROR chunk must reconstruct the raw file")
+    val check = RestoreCheck(spark.createDataset(chunks.toSeq))
+    assert(check.head._4, "ERROR chunk must reconstruct the raw file")
   }
 
   test("fused digest-through-write: identity over the real cover, corruption and truncation detected") {
@@ -213,8 +223,7 @@ class CawdSpec extends AnyFunSuite with BeforeAndAfterAll {
         OrcChunker.StripeColumn, withContent = true)
       .unionByName(CawdEngine.chunkFiles(spark, Seq((f2, 1)),
         CawdEngine.Parquet, withContent = true))
-      .filter(c => c.parentSeq != -2 &&
-        !(c.chunkType == ChunkType.Column && c.parentSeq != -1))
+      .filter(CawdEngine.isCover)
       .select(col("file"), col("seq"), col("start"), col("size"),
         col("content"))
     val out = s"$work/export"

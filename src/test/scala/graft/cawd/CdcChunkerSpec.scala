@@ -87,11 +87,10 @@ class CdcChunkerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("content mode reconstructs the file byte-identically") {
-    val check = CawdEngine.reconstructionCheck(
+    val check = RestoreCheck(
       CdcChunker.chunkFiles(spark, Seq((path, 0)), withContent = true))
-      .collect()
     assert(check.length == 1)
-    assert(check.head.getBoolean(3), "CDC chunk concatenation == original bytes")
+    assert(check.head._4, "CDC chunk concatenation == original bytes")
   }
 
   test("chunking is deterministic across runs") {

@@ -83,10 +83,8 @@ class StreamingSpec extends AnyFunSuite {
     // batch-mode incremental API shares the same store: a CLI-style run
     // over an already-seen file must dedup everything dedupable, under a
     // NEGATIVE partition id the streaming sequence can never collide with
-    val batchStats = CawdEngine.incrementalFlatDedup(spark, store,
-      CawdEngine.chunkFiles(spark, Seq((s"$inDir/b.parquet", 0)), CawdEngine.Parquet,
-        OrcChunker.Naive),
-      ChunkType.parquetDedupable)
+    val batchStats = CawdEngine.dedupStats(spark, Variant.Parquet,
+      Seq((s"$inDir/b.parquet", 0)), storeDir = Some(store))
     val dd = batchStats
       .filter(col("metric") === "DedupBytes" && col("file") =!= "general")
       .select("value").head().getDouble(0)
@@ -152,10 +150,9 @@ class StreamingSpec extends AnyFunSuite {
       // whole chunk/probe/write pipeline must plan on the backfill child
       // (AQE ON) — round-8 advice: building `ranked` from the incoming
       // batch's lineage left everything on the latency child's SQLConf.
-      spark.conf.set(StreamingEngine.MaxWindowRankFilesKey, "2")
       graft.StreamingPlanCapture.reset()
       StreamingEngine.processBatch(spark, paths.toSeq.toDF("path"), 1L,
-        store, stats, CawdEngine.Parquet)
+        store, stats, CawdEngine.Parquet, maxRankFiles = 2)
       val bigPlans = graft.StreamingPlanCapture.all.map(_._2).mkString("\n")
       assert(bigPlans.contains("AdaptiveSparkPlan"),
         "backfill batch must plan on the AQE-on backfill child")
@@ -175,7 +172,6 @@ class StreamingSpec extends AnyFunSuite {
           s"clustered backfill write must land one file per bucket, got ${perBucket.toSeq}")
       }
     } finally {
-      spark.conf.unset(StreamingEngine.MaxWindowRankFilesKey)
       graft.StreamingPlanCapture.enabled = false
       graft.StreamingPlanCapture.reset()
       spark.stop()
@@ -205,10 +201,10 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("file", "fileRank", "seq", "signature")
     val marked = Dedup.markFirstOccurrence(probe, "seq",
       StreamingEngine.readStore(spark, store))
-    val inStore = marked.select(col("seq"), col(Dedup.InStoreCol)).collect()
-      .map(r => r.getInt(0) -> r.getBoolean(1)).toMap
-    assert(!inStore(1) && !inStore(2), "evicted signatures miss")
-    assert(inStore(3) && inStore(4) && inStore(5), "retained signatures hit")
+    val status = marked.select(col("seq"), col("status")).collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(status(1) == "miss" && status(2) == "miss", "evicted signatures miss")
+    assert(Seq(3, 4, 5).forall(status(_) == "hit"), "retained signatures hit")
 
     // age-based eviction never touches the newest partition (a stream may
     // be mid-retry on exactly that id)
