@@ -89,15 +89,23 @@ object CawdEngine {
     */
   def chunkFiles(spark: SparkSession, files: Seq[(String, Int)], fmt: Format,
                  orcMode: OrcChunker.Mode = OrcChunker.StripeColumn,
-                 withContent: Boolean = false): Dataset[FileChunk] = {
+                 withContent: Boolean = false): Dataset[FileChunk] =
+    chunkFileDs(spreadFiles(spark, files), fmt, orcMode, withContent)
+
+  /** A driver-side (path, fileRank) list as a Dataset of
+    * [[graft.Sizing.chunkTasks]] slices, with no exchange: a chunker walks
+    * one file sequentially, so tasks follow the file count.
+    */
+  private[cawd] def spreadFiles(spark: SparkSession,
+                                files: Seq[(String, Int)]): Dataset[(String, Int)] = {
     import spark.implicits._
-    val n = graft.Sizing.chunkTasks(files.size, graft.Sizing.cores(spark))
-    chunkFileDs(spark.createDataset(files).repartition(n), fmt, orcMode, withContent)
+    spark.createDataset(spark.sparkContext.parallelize(files,
+      graft.Sizing.chunkTasks(files.size, graft.Sizing.cores(spark))))
   }
 
   /** [[chunkFiles]] over an already-distributed (path, fileRank) Dataset —
-    * the streaming engine's micro-batch path, where the file list never
-    * lands on the driver.
+    * the streaming engine's backfill path, where the file list never lands
+    * on the driver.
     */
   def chunkFileDs(files: Dataset[(String, Int)], fmt: Format,
                   orcMode: OrcChunker.Mode = OrcChunker.StripeColumn,
@@ -200,53 +208,69 @@ object CawdEngine {
     * included.
     *
     * With `storeDir` the run is incremental against a persisted signature
-    * store (the reference's long-lived server store as a batch API): chunks
-    * probe ALL existing batch partitions first, and this run's first
-    * occurrences are appended under the next NEGATIVE batch id. Batch-mode
-    * partitions descend from -1 while the streaming engine's ascend from 0
-    * (checkpoint-derived), so the two id sequences can never collide — a
-    * resumed stream retrying micro-batch N overwrites only `batch=N`, and
-    * its probe (`batch < N`) always includes every batch-mode partition.
-    * One store can therefore be grown by CLI runs, library calls, and the
-    * streaming engine interchangeably. Only [[Variant.Flat]] variants take
-    * a store; any other throws IllegalArgumentException.
-    *
-    * The chunks and the status are cached for the store write and the
-    * rollup; the rollup is materialized before the caches are released, so
-    * the call leaves nothing cached.
+    * store (the reference's long-lived server store as a batch API): it
+    * takes the next NEGATIVE batch id and [[ingest]]s under it, probing
+    * every partition but its own. Batch-mode partitions descend from -1
+    * while the streaming engine's ascend from 0 (checkpoint-derived), so
+    * the two id sequences can never collide — a resumed stream retrying
+    * micro-batch N overwrites only `batch=N`. One store can therefore be
+    * grown by CLI runs, library calls, and the streaming engine
+    * interchangeably. Only [[Variant.Flat]] variants take a store; any
+    * other throws IllegalArgumentException.
     */
   def dedupStats(spark: SparkSession, variant: Variant, files: Seq[(String, Int)],
                  duplicate: Boolean = false,
-                 storeDir: Option[String] = None): DataFrame = {
-    val base = variant.chunk(spark, files)
-    try {
-      val chunks = (if (duplicate) withDuplicates(base) else base).cache()
-      val status = ((variant, storeDir) match {
-        case (v, None) => v.status(chunks.toDF())
-        case (v: Variant.Flat, Some(dir)) =>
-          v.status(chunks.toDF(), StreamingEngine.readStore(spark, dir))
-        case (v, Some(_)) => throw new IllegalArgumentException(
-          s"--store is not supported for mode '${v.name}'")
-      }).cache()
-      storeDir.foreach { dir =>
-        // CLI bulk ingest is not latency-bound: always cluster on the
-        // bucket value so one run writes ≤ NumSigBuckets files instead of
-        // tasks × buckets (round-8 advice — the measured 8 192-file trap).
-        StreamingEngine.writeStorePartition(
-          status.filter(col("status") === "miss")
-            .select(col("signature"), col("chunkType"), col("size")),
-          s"$dir/batch=${StreamingEngine.nextCliBatchId(spark, dir)}",
-          clusterBuckets = true)
-      }
+                 storeDir: Option[String] = None): DataFrame =
+    // CLI bulk ingest is not latency-bound: always cluster on the bucket
+    // value so one run writes ≤ NumSigBuckets files instead of tasks ×
+    // buckets (round-8 advice — the measured 8 192-file trap).
+    ingest(variant, variant.chunk(spark, files), duplicate,
+      storeDir.map(dir => (dir, StreamingEngine.nextCliBatchId(spark, dir))),
+      clusterBuckets = true) { (chunks, status) =>
+      // materialized before ingest releases the caches it reads
       Stats.rollup(Stats.fromStatus(status, variant.emitSizes)
         .unionByName(timingStats(chunks)))
         .localCheckpoint(true)
-    } finally {
-      // every relation this run cached — the chunks, the status and the
-      // cascade's own stages — derives from `base`, so one cascading
-      // uncache releases them all
-      spark.sharedState.cacheManager.uncacheQuery(base, cascade = true)
     }
+
+  /** The one store lifecycle of a CLI run ([[dedupStats]]) and a stream
+    * micro-batch ([[StreamingEngine.processBatch]]), in order:
+    *   1. cache `chunked` (each file followed by a byte-identical copy with
+    *      `duplicate`);
+    *   2. decide every chunk's status; with a `store` target (directory,
+    *      batch id) the probe reads every partition but `batch=id`, so a
+    *      retried id recomputes from the same store state;
+    *   3. overwrite `batch=id` with the misses
+    *      ([[StreamingEngine.writeStorePartition]]);
+    *   4. run `sink` over the cached chunks and status;
+    *   5. release every relation this step cached — the chunks, the status
+    *      and the cascade's own stages all derive from `chunked`, so one
+    *      cascading uncache of it (not of the duplicated union, whose base
+    *      cache would leak) frees them all.
+    */
+  private[cawd] def ingest[T](variant: Variant, chunked: Dataset[FileChunk],
+                              duplicate: Boolean, store: Option[(String, Long)],
+                              clusterBuckets: Boolean)
+                             (sink: (Dataset[FileChunk], DataFrame) => T): T = {
+    val spark = chunked.sparkSession
+    try {
+      val chunks = (if (duplicate) withDuplicates(chunked) else chunked).cache()
+      val status = ((variant, store) match {
+        case (v, None) => v.status(chunks.toDF())
+        case (v: Variant.Flat, Some((dir, id))) =>
+          v.status(chunks.toDF(),
+            StreamingEngine.readStore(spark, dir).map(_.filter(col("batch") =!= id)))
+        case (v, Some(_)) => throw new IllegalArgumentException(
+          s"--store is not supported for mode '${v.name}'")
+      }).cache()
+      store.foreach { case (dir, id) =>
+        StreamingEngine.writeStorePartition(
+          status.filter(col("status") === "miss")
+            .select(StreamingEngine.StoreCols.map(col): _*),
+          s"$dir/batch=$id", clusterBuckets)
+      }
+      sink(chunks, status)
+    } finally spark.sharedState.cacheManager.uncacheQuery(chunked, cascade = true)
   }
 
   /** [[dedupStats]] of the s+p cascade over the ORC files in `dir`. */
@@ -263,8 +287,7 @@ object CawdEngine {
                   bufferSize: Int = 4096,
                   withContent: Boolean = false): Dataset[FileChunk] = {
     import spark.implicits._
-    val n = graft.Sizing.chunkTasks(files.size, graft.Sizing.cores(spark))
-    spark.createDataset(files).repartition(n).flatMap { case (path, rank) =>
+    spreadFiles(spark, files).flatMap { case (path, rank) =>
       val p = new Path(path)
       val fs = p.getFileSystem(new Configuration())
       val len = fs.getFileStatus(p).getLen

@@ -138,12 +138,11 @@ object CdcChunker {
   def chunkFiles(spark: SparkSession, files: Seq[(String, Int)],
                  withContent: Boolean = false): Dataset[FileChunk] = {
     import spark.implicits._
-    val n = graft.Sizing.chunkTasks(files.size, graft.Sizing.cores(spark))
     // file lengths resolved ON EXECUTORS (one serial driver-side RPC per
     // file would be the exact startup bottleneck the structural planner
     // avoids), then exploded into ~SplitBytes segment work units
     // (path, rank, segStart, segEnd, fileLen) and respread across tasks.
-    val segs = spark.createDataset(files).repartition(n)
+    val segs = CawdEngine.spreadFiles(spark, files)
       .flatMap { case (path, rank) =>
         val p = new Path(path)
         val len = p.getFileSystem(new Configuration()).getFileStatus(p).getLen

@@ -217,9 +217,9 @@ object Dedup {
                  store: Option[DataFrame] = None): DataFrame = {
     // the chunk set feeds multiple plan branches (probe + passthrough) and
     // the probe joins back on itself — cache to chunk each file exactly
-    // once. An already-cached input is reused as-is so callers that manage
-    // their own cache lifecycle (the streaming engine, once per batch) can
-    // unpersist it and not leak one relation per micro-batch.
+    // once. An already-cached input is reused as-is so a caller that
+    // manages its own cache lifecycle (CawdEngine.ingest, once per CLI run
+    // or micro-batch) releases it and leaks no relation per run.
     val cached =
       if (chunks.storageLevel != org.apache.spark.storage.StorageLevel.NONE) chunks
       else chunks.cache()

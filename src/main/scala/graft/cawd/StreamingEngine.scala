@@ -17,14 +17,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     projection — Spark reads just enough metadata to enumerate files);
   *   - the store = a parquet table PARTITIONED BY BATCH (`batch=N`
   *     subdirectories): each micro-batch OVERWRITES exactly its own
-  *     partition with its first-occurrence chunks, and probes only the
-  *     partitions of earlier batches. A retried batch therefore recomputes
-  *     from the same store state and rewrites the same partition —
-  *     exactly-once semantics without a transaction log, and the
-  *     distinct-signature invariant survives partial failures;
-  *   - per-batch dedup = the same first-occurrence aggregation as batch
-  *     mode, with the earlier-batch store as the warm set — batch and
-  *     streaming share ONE dedup implementation ([[Dedup.flatStatus]]);
+  *     partition with its first-occurrence chunks, and probes every
+  *     partition but its own. A retried batch therefore recomputes from
+  *     the same store state and rewrites the same partition — exactly-once
+  *     semantics without a transaction log, and the distinct-signature
+  *     invariant survives partial failures;
+  *   - per-batch dedup = the CLI run's ingest step ([[CawdEngine.ingest]]:
+  *     chunk → probe → store write → release), with the rest of the store
+  *     as the warm set — batch and streaming share ONE store lifecycle;
   *   - ordering: in-order processing per the reference is preserved at
   *     micro-batch granularity (files within a batch are ranked by path,
   *     batches by arrival). No watermark — there is no event time.
@@ -39,7 +39,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object StreamingEngine {
 
   /** Chunk-store schema columns persisted across batches. */
-  private val StoreCols = Seq("signature", "chunkType", "size")
+  private[cawd] val StoreCols = Seq("signature", "chunkType", "size")
 
   /** Signature-bucket partition column of the persisted store. */
   val SigBucketCol = "sbucket"
@@ -127,63 +127,59 @@ object StreamingEngine {
     org.apache.spark.sql.types.StructField(SigBucketCol,
       org.apache.spark.sql.types.IntegerType)))
 
-  /** Store contents visible to `beforeBatch` (exclusive): the union of all
-    * earlier batches' partitions. `None` reads everything (external
-    * consumers).
+  /** Store contents: the union of every batch partition, with its `batch`
+    * column; `None` while the store has no partition.
     */
-  def readStore(spark: SparkSession, storeDir: String,
-                beforeBatch: Option[Long] = None): Option[DataFrame] = {
+  def readStore(spark: SparkSession, storeDir: String): Option[DataFrame] = {
     val p = new Path(storeDir)
     val fs = p.getFileSystem(new Configuration())
     if (!fs.exists(p) || !fs.listStatus(p).exists(_.getPath.getName.startsWith("batch=")))
       return None
-    val all = spark.read.schema(StoreSchema)
-      .option("basePath", storeDir).parquet(storeDir)
-    Some(beforeBatch.fold(all)(b => all.filter(col("batch") < b)))
+    Some(spark.read.schema(StoreSchema)
+      .option("basePath", storeDir).parquet(storeDir))
   }
 
+  /** The store's batch ids in arrival order, newest last: batch-mode ids
+    * -1, -2, … (each CLI run takes the next lower id), then streaming ids
+    * ascending.
+    */
   private def batchIds(storeDir: String): Seq[Long] = {
     val p = new Path(storeDir)
     val fs = p.getFileSystem(new Configuration())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.getName).toSeq
-      .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong }
+    val ids =
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).map(_.getPath.getName).toSeq
+        .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong }
+    val (cli, stream) = ids.partition(_ < 0)
+    cli.sorted.reverse ++ stream.sorted
   }
 
-  /** Next free STREAMING batch id (max existing non-negative + 1). Batch-
-    * mode partitions are negative ([[nextCliBatchId]]) and never collide
-    * with the checkpoint-derived streaming sequence.
-    */
-  def nextBatchId(spark: SparkSession, storeDir: String): Long =
-    batchIds(storeDir).filter(_ >= 0).foldLeft(-1L)(math.max) + 1
-
-  /** Next free BATCH-MODE partition id: descending from -1. Negative ids
-    * sort below every streaming micro-batch id, so a retrying stream
-    * (overwriting `batch=N`) cannot clobber them, and every stream probe
-    * (`batch < N`) includes them.
+  /** Next free BATCH-MODE partition id: descending from -1. The streaming
+    * sequence is checkpoint-derived from 0 up, so a retrying stream
+    * (overwriting `batch=N`) cannot clobber a batch-mode partition.
     */
   def nextCliBatchId(spark: SparkSession, storeDir: String): Long =
     batchIds(storeDir).filter(_ < 0).foldLeft(0L)(math.min) - 1
 
   /** Compact the store's batch partitions (the retention op the reference
     * never needed because its store lived on one heap): all partitions
-    * EXCEPT the newest merge their distinct signatures into the
-    * second-newest id, and the rest are dropped. The newest partition is
-    * never touched: Structured Streaming may retry exactly that batch
-    * after a crash-before-checkpoint-commit (its overwrite targets only
-    * its own id, and its probe of `batch < N` still sees the full merged
-    * history). Probe semantics are preserved — every surviving signature
-    * stays "earlier" than any future batch — while the partition count
-    * stops growing with stream age.
+    * EXCEPT the newest (in [[batchIds]] arrival order) merge their
+    * distinct signatures into the second-newest id, and the rest are
+    * dropped. The newest partition is never touched: Structured Streaming
+    * may retry exactly that batch after a crash-before-checkpoint-commit
+    * (its overwrite targets only its own id, and its probe of every other
+    * partition still sees the full merged history). Probe semantics are
+    * preserved — every surviving signature stays visible to any future
+    * batch — while the partition count stops growing with stream age.
     */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
     val p = new Path(storeDir)
     val fs = p.getFileSystem(new Configuration())
     val batches = batchIds(storeDir)
     if (batches.length <= 2) return
-    val protectedId = batches.max // possibly in-flight; never rewritten
-    val mergeIds = batches.filter(_ != protectedId)
-    val mergeInto = mergeIds.max
+    val protectedId = batches.last // possibly in-flight; never rewritten
+    val mergeIds = batches.init
+    val mergeInto = mergeIds.last
     val merged = spark.read.schema(StoreSchema)
       .option("basePath", storeDir).parquet(storeDir)
       .filter(col("batch") =!= protectedId)
@@ -205,7 +201,8 @@ object StreamingEngine {
     * lossless merge), retention FORGETS: an evicted signature probes as a
     * miss afterwards and is re-learned on its next arrival — the standard
     * bounded-store trade. A partition is evicted when it falls outside the
-    * newest `keepBatches` ids OR its directory is older than `maxAgeMs`;
+    * newest `keepBatches` ids in [[batchIds]] arrival order OR its
+    * directory is older than `maxAgeMs`;
     * the newest partition is never deleted (Structured Streaming may be
     * mid-retry on exactly that id).
     */
@@ -214,7 +211,7 @@ object StreamingEngine {
     require(keepBatches >= 1, "retention must keep at least the newest batch")
     val p = new Path(storeDir)
     val fs = p.getFileSystem(new Configuration())
-    val batches = batchIds(storeDir).sorted
+    val batches = batchIds(storeDir)
     if (batches.isEmpty) return
     val now = System.currentTimeMillis()
     val keepByCount = batches.takeRight(keepBatches).toSet
@@ -292,10 +289,10 @@ object StreamingEngine {
         Some(graft.Sizing.streamLatency(nFiles, graft.Sizing.cores(spark))),
       listingThreshold = Some(ListingThreshold))
 
-  /** One micro-batch: rank new files after everything already seen, chunk,
-    * probe the earlier-batch store, overwrite this batch's store/stats
-    * (/export) partitions. Idempotent under retries: the probe set never
-    * includes this batch's own partition, so a re-run recomputes identical
+  /** One micro-batch: rank new files after everything already seen, then
+    * [[CawdEngine.ingest]] them under `batchId` and overwrite this batch's
+    * stats (/export) partitions. Idempotent under retries: the probe never
+    * reads this batch's own partition, so a re-run recomputes identical
     * statuses and rewrites identical partitions. Batches of more than
     * `maxRankFiles` files take the backfill path.
     */
@@ -329,23 +326,26 @@ object StreamingEngine {
       else graft.GraftSession.child(spark, "stream-backfill", aqe = true,
         shufflePartitions = Some(graft.Sizing.cores(spark)),
         listingThreshold = Some(ListingThreshold))
-    val ranked: org.apache.spark.sql.Dataset[(String, Int)] =
-      if (small) {
-        val pairs = headPaths.sortBy(_.getBytes("UTF-8"))(CawdEngine.Utf8Order).zipWithIndex
-        // chunking parallelism follows the FILE count (a chunker walks one
-        // file sequentially; tasks beyond nFiles only add launch overhead)
-        val slices = graft.Sizing.chunkTasks(pairs.length, graft.Sizing.cores(spark))
-        sess.createDataset(sess.sparkContext.parallelize(pairs.toSeq, slices))(
-          org.apache.spark.sql.Encoders.product[(String, Int)])
-      } else
+    // ORC streams run the naive variant — a flat probe needs top-level
+    // chunks, and StripeColumn's linked chunks (parentSeq != -1) would
+    // silently fall out of it and the exported table
+    val variant: Variant.Structural = fmt match {
+      case CawdEngine.Parquet => Variant.Parquet
+      case CawdEngine.Orc     => Variant.OrcNaive
+    }
+    val chunked =
+      if (small)
+        variant.chunk(sess, headPaths.sortBy(_.getBytes("UTF-8"))(CawdEngine.Utf8Order)
+          .toSeq.zipWithIndex)
+      else
         // Bind the WHOLE pipeline to the backfill child: building this via
         // the incoming `batch`'s lineage (spark.implicits' .toDF) would plan
         // chunk/probe/write under the latency child's SQLConf — AQE off,
         // shuffle.partitions as low as the last micro-batch left them — and
-        // only readStore below would see the backfill posture (round-8
+        // only the store read would see the backfill posture (round-8
         // advice). Dropping to the RDD severs the old lineage; createDataFrame
         // on `sess` re-roots it.
-        sess.createDataFrame(
+        variant.chunkDs(sess.createDataFrame(
           batch.select(col("path")).as[String].rdd
             .map(_.replaceFirst("^file:", ""))
             .sortBy(_.getBytes("UTF-8"))(CawdEngine.Utf8Order,
@@ -354,55 +354,37 @@ object StreamingEngine {
             .map { case (p, i) => (p, i.toInt) }
             .repartition(graft.Sizing.cores(spark)))
           .toDF("path", "fileRank")
-          .as[(String, Int)](org.apache.spark.sql.Encoders.product[(String, Int)])
-    // ORC streams run the naive variant — a flat probe needs top-level
-    // chunks, and StripeColumn's linked chunks (parentSeq != -1) would
-    // silently fall out of it and the exported table
-    val variant: Variant.Structural = fmt match {
-      case CawdEngine.Parquet => Variant.Parquet
-      case CawdEngine.Orc     => Variant.OrcNaive
-    }
-    // stats/export see basenames so downstream output (and the DuckDB
-    // oracle re-deriving it) doesn't depend on temp-dir paths
-    val chunkDf = variant.chunkDs(ranked).toDF().cache() // ours to release; flatStatus reuses it
-    val status = variant.status(chunkDf,
-      readStore(sess, storeDir, beforeBatch = Some(batchId)))
-      .withColumn("file", regexp_replace(col("file"), ".*/", ""))
-      .cache()
-    // audit hook (no-op unless PlanAudit enabled it): the probe/dedup plan
-    // that actually runs inside this micro-batch — the foreachBatch
-    // interior the audit cannot reach from the outer streaming query
-    graft.StreamingPlanCapture.record("s01-batch",
-      status.queryExecution.executedPlan.toString)
-    try {
+          .as[(String, Int)](org.apache.spark.sql.Encoders.product[(String, Int)]))
+    // Large backfills take the clustered store write: their miss count is
+    // unbounded, so the no-shuffle path would land tasks × buckets
+    // near-empty files (the measured 8 192-file pathology) until a
+    // compaction ran. Micro-batches keep the no-shuffle latency path.
+    CawdEngine.ingest(variant, chunked, duplicate = false,
+      Some((storeDir, batchId)), clusterBuckets = !small) { (_, status) =>
+      // audit hook (no-op unless PlanAudit enabled it): the probe/dedup plan
+      // that actually runs inside this micro-batch — the foreachBatch
+      // interior the audit cannot reach from the outer streaming query
+      graft.StreamingPlanCapture.record("s01-batch",
+        status.queryExecution.executedPlan.toString)
+      // stats/export see basenames so downstream output (and the DuckDB
+      // oracle re-deriving it) doesn't depend on temp-dir paths
+      val named = status.withColumn("file", regexp_replace(col("file"), ".*/", ""))
       // Sequential sinks, deliberately: a concurrent-Futures variant was
       // measured SLOWER (6.2 s → 11.6 s for the two-wave run) — three
       // simultaneous jobs racing the cold `status` cache serialize on its
       // per-partition locks and thrash the scheduler.
-      // insert-on-miss: this batch's first occurrences, keyed to its own
-      // partition (overwrite = retry-safe), bucketed by signature
-      // Large backfills take the clustered write path: their miss count is
-      // unbounded, so the no-shuffle path would land tasks × buckets
-      // near-empty files (the measured 8 192-file pathology) until a
-      // compaction ran. Micro-batches keep the no-shuffle latency path.
-      writeStorePartition(
-        status.filter(col("status") === "miss").select(StoreCols.map(col): _*),
-        s"$storeDir/batch=$batchId", clusterBuckets = !small)
-      Stats.fromStatus(status)
+      Stats.fromStatus(named)
         .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
       // chunk-status table for the external oracle: cross-batch dedup is
       // re-derivable as first-occurrence by (batchId, fileRank, seq)
       exportDir.foreach { dir =>
-        status.select(col("file"), lit(batchId).as("batchId"),
+        named.select(col("file"), lit(batchId).as("batchId"),
           col("fileRank"), col("seq"), col("chunkType"), col("start"),
           col("size"), col("colId"), col("colType"), col("parentSeq"),
           lower(hex(col("signature"))).as("sig"),
           col("status").as("engine_status"))
           .write.mode("overwrite").parquet(s"$dir/batch=$batchId")
       }
-    } finally {
-      status.unpersist()
-      chunkDf.unpersist()
     }
   }
 

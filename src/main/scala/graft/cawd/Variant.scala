@@ -41,8 +41,8 @@ object Variant {
       Dedup.flatStatus(chunks, dedupable, threshold, store)
   }
 
-  /** A flat variant chunked by file structure; the streaming engine runs
-    * these over a distributed file list ([[chunkDs]]).
+  /** A flat variant chunked by file structure; the streaming engine's
+    * backfill path runs these over a distributed file list ([[chunkDs]]).
     */
   sealed abstract class Structural(name: String, suffix: String,
                                    fmt: CawdEngine.Format, orcMode: OrcChunker.Mode,

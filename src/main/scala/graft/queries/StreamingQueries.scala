@@ -140,33 +140,6 @@ object StreamingQueries {
     graft.Sizing.drainState(graft.Tables.tableBytes(s, d, "events").getOrElse(0L),
       graft.Sizing.cores(s))
 
-  /** State-store provider for the drains. Default: Spark's default
-    * (HDFSBackedStateStoreProvider — all state on-heap). Round 14 measured
-    * the corpus-sized drains to be state-store-update bound (~926 s summed
-    * update time for 39.8 M buffered rows / 8.5 GB at the fifth decade,
-    * ~23 µs/row incl. the UnsafeRow copy; SCALE.md "RocksDB state-store
-    * provider probed"), which is the regime `RocksDBStateStoreProvider`
-    * targets on real clusters (off-heap native state, no per-update deep
-    * copy). Probed round 15 at the fifth decade via this env knob
-    * (GRAFT_STREAM_STATE_PROVIDER=rocksdb|hdfs|<fqcn>): see SCALE.md for
-    * the measurement and the adopt/reject call.
-    * Caveat on the committed 3.4× number: it was measured with changelog
-    * checkpointing OFF (the Spark default). Enabling
-    * `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`
-    * would remove only the full-snapshot commit term (636 s of RocksDB's
-    * three cost terms); the update + eviction terms alone (1 437 + 746 s)
-    * are still 3.3× HDFSBacked's 665 s, so the reject call does not flip
-    * under either configuration while state fits the heap.
-    */
-  private def stateProviderClass: Option[String] =
-    sys.env.get("GRAFT_STREAM_STATE_PROVIDER").map {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case "hdfs" =>
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-      case fqcn => fqcn
-    }
-
   /** Shared memory-sink harness: start the query against a uniquely-named
     * sink, drain it (AvailableNow inside `start`), project + materialize
     * the sink table, drop the view.
@@ -176,12 +149,12 @@ object StreamingQueries {
     * builds its stream on the child it is handed, and the sink is read and
     * dropped there. The child's conf is constant per tag — `stateParts`
     * shuffle partitions (one state store and checkpoint tree per partition
-    * per micro-batch), the `GRAFT_STREAM_STATE_PROVIDER` provider, and the
-    * checkpoint root `$scratchRoot/ckpt`, under which Spark places each
-    * named query at `<root>/<queryName>` — so concurrent queries on the
-    * caller's session never see a drain's settings. AQE is on as in the
-    * caller's default posture; streaming execution disables it for the
-    * micro-batches anyway, so it only shapes the sink read.
+    * per micro-batch) and the checkpoint root `$scratchRoot/ckpt`, under
+    * which Spark places each named query at `<root>/<queryName>` — so
+    * concurrent queries on the caller's session never see a drain's
+    * settings. AQE is on as in the caller's default posture; streaming
+    * execution disables it for the micro-batches anyway, so it only shapes
+    * the sink read.
     *
     * `stateParts` defaults to [[graft.Sizing.DrainStateParts]]: most of
     * these local-mode drains hold kilobytes of state per partition, and 32
@@ -199,8 +172,8 @@ object StreamingQueries {
     val cs = graft.GraftSession.child(s, s"drain-$prefix:$d", aqe = true,
       shufflePartitions = Some(stateParts))
     cs.conf.set("spark.sql.streaming.checkpointLocation", s"$scratchRoot/ckpt")
-    stateProviderClass.foreach(
-      cs.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+    // State-store provider: the SparkConf's stateStore.providerClass reaches
+    // this child; SCALE.md "RocksDB state-store provider probed" (3.4x slower).
     val name = s"${prefix}_${UUID.randomUUID().toString.replace("-", "")}"
     // non-empty-source guard via listener, NOT recentProgress: the progress
     // ring buffer holds only the last ~100 entries, so a drain with many

@@ -12,6 +12,27 @@ import graft.GraftSession
   */
 class StreamingSpec extends AnyFunSuite {
 
+  /** The store's non-negative (streaming) `batch=` partition ids. */
+  private def streamIds(store: String): Seq[Long] =
+    new java.io.File(store).list().toSeq
+      .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong }
+      .filter(_ >= 0)
+
+  /** Copy `df` as one parquet file to `dest`. */
+  private def singleParquet(df: org.apache.spark.sql.DataFrame, work: String,
+                            dest: java.io.File): Unit = {
+    df.coalesce(1).write.mode("overwrite").parquet(work)
+    val part = new java.io.File(work).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, dest.toPath)
+  }
+
+  private def storeSignatures(spark: org.apache.spark.sql.SparkSession,
+                              store: String): Seq[String] =
+    spark.read.parquet(store)
+      .select(hex(col("signature")), col("chunkType"), col("size"))
+      .collect().map(_.toString).toSeq.sorted
+
   test("streaming dedup holds chunk-store state across micro-batches") {
     val spark = GraftSession.get("streaming-spec")
     val root = Files.createTempDirectory("stream-spec").toString
@@ -91,7 +112,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(dd > 0.0, "incremental batch run dedups against the shared store")
     assert(new java.io.File(store, "batch=-1").isDirectory,
       "batch-mode partition id is negative")
-    assert(StreamingEngine.nextBatchId(spark, store) == lastBatch + 1,
+    assert(streamIds(store).max == lastBatch,
       "streaming id sequence unaffected by batch-mode appends")
 
     // compaction: newest partition untouched (a stream may be retrying
@@ -106,7 +127,7 @@ class StreamingSpec extends AnyFunSuite {
     val sigsAfter = spark.read.parquet(store)
       .select(hex(col("signature"))).collect().map(_.getString(0)).distinct.sorted
     assert(sigsAfter.sameElements(sigsBefore), "compaction preserves signatures")
-    assert(StreamingEngine.nextBatchId(spark, store) == lastBatch + 1)
+    assert(streamIds(store).max == lastBatch)
     java.nio.file.Files.copy(src.toPath, new java.io.File(inDir, "c.parquet").toPath)
     StreamingEngine.start(spark, inDir, store, stats, ".parquet",
       CawdEngine.Parquet, ckpt).awaitTermination()
@@ -211,5 +232,70 @@ class StreamingSpec extends AnyFunSuite {
     StreamingEngine.retainStore(store, maxAgeMs = 0L)
     assert(!new java.io.File(store, "batch=1").exists(), "aged-out batch evicted")
     assert(new java.io.File(store, "batch=2").isDirectory, "newest never evicted")
+  }
+
+  test("a CLI run and a micro-batch ingest one file alike and leave nothing cached") {
+    val spark = GraftSession.get("streaming-ingest-spec")
+    import spark.implicits._
+    val root = Files.createTempDirectory("ingest-spec").toString
+    val file = new java.io.File(root, "one.parquet")
+    singleParquet(spark.range(0, 3000).select(col("id"),
+      concat(lit("v-"), col("id") % 40).as("s")), s"$root/src", file)
+    val (s1, s2, stats) = (s"$root/s1", s"$root/s2", s"$root/stats")
+    val timing = Seq(Metric.TransferTime, Metric.ParsingOverhead)
+    try {
+      val cli = CawdEngine.dedupStats(spark, Variant.Parquet,
+        Seq((file.getPath, 0)), storeDir = Some(s1))
+        .filter(col("file") =!= "general" && !col("metric").isin(timing: _*))
+        .withColumn("name", regexp_replace(col("file"), ".*/", ""))
+        // the per-file wire header counts the file name, which the stream
+        // sends as a basename
+        .select(col("name"), col("metric"), col("unit"),
+          when(col("metric") === Metric.ExtraTransferBytes,
+            col("value") - length(col("file")) + length(col("name")))
+            .otherwise(col("value")))
+        .collect().map(_.toString).toSeq.sorted
+      spark.catalog.clearCache()
+      StreamingEngine.processBatch(spark, Seq(s"file:${file.getPath}").toDF("path"),
+        0L, s2, stats, CawdEngine.Parquet)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "processBatch left a cached relation behind")
+      val stream = spark.read.parquet(stats)
+        .select(col("file"), col("metric"), col("unit"), col("value"))
+        .collect().map(_.toString).toSeq.sorted
+      assert(cli.nonEmpty && cli == stream, "per-file stats differ")
+      assert(storeSignatures(spark, s1).nonEmpty)
+      assert(storeSignatures(spark, s1) == storeSignatures(spark, s2),
+        "store signature sets differ")
+    } finally spark.stop()
+  }
+
+  test("retention keeps the newest CLI runs of a CLI-grown store") {
+    val spark = GraftSession.get("streaming-cli-retain-spec")
+    val root = Files.createTempDirectory("cli-retain-spec").toString
+    val store = s"$root/store"
+    val files = (1 to 3).map { i =>
+      val f = new java.io.File(root, s"f$i.parquet")
+      singleParquet(spark.range(i * 10000L, i * 10000L + 2000).select(col("id"),
+        concat(lit(s"w$i-"), col("id")).as("s")), s"$root/src$i", f)
+      f.getPath
+    }
+    def run(path: String): Map[String, Double] =
+      CawdEngine.dedupStats(spark, Variant.Parquet, Seq((path, 0)),
+        storeDir = Some(store))
+        .filter(col("file") === "general" && col("metric").isin("ChunkHit", "ChunkMiss"))
+        .collect().map(r => r.getAs[String]("metric") -> r.getAs[Double]("value")).toMap
+    try {
+      files.foreach(run)
+      assert(new java.io.File(store).list().filter(_.startsWith("batch=")).sorted.toSeq ==
+        Seq("batch=-1", "batch=-2", "batch=-3"))
+      StreamingEngine.retainStore(store, keepBatches = 1)
+      assert(new java.io.File(store).list().filter(_.startsWith("batch=")).toSeq ==
+        Seq("batch=-3"), "retention must keep the newest CLI run")
+      val again = run(files(2))
+      assert(again.getOrElse("ChunkHit", 0.0) > 0.0 &&
+        again.getOrElse("ChunkMiss", 0.0) == 0.0,
+        s"the newest run's file must probe all-hit, got $again")
+    } finally spark.stop()
   }
 }
