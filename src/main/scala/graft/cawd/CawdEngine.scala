@@ -20,10 +20,11 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB target):
   *   - chunking is embarrassingly parallel per file — a flatMap over a
   *     file-path Dataset, no shuffle;
-  *   - the dedup decision is one hash aggregation + co-partitioned join on
-  *     `signature` ([[Dedup.markFirstOccurrence]]); at high dup ratios the
-  *     map-side combine shrinks the shuffle to ~one row per distinct
-  *     signature;
+  *   - the dedup decision is one exchange per probe key: rows shuffle by
+  *     `signature` and a `rank()` over arrival order marks first
+  *     occurrences ([[Dedup.markFirstOccurrence]]); a hot signature's rows
+  *     spill in the window buffer rather than sit on one task's heap. The
+  *     s+p cascade is three such passes ([[Dedup.hierarchicalStatus]]);
   *   - `withContent=false` keeps only offsets+hashes in flight (20 B per
   *     chunk instead of the chunk bytes) — the at-scale mode; content is
   *     re-read by offset only where a sink needs it.
@@ -240,13 +241,15 @@ object CawdEngine {
     *   2. decide every chunk's status; with a `store` target (directory,
     *      batch id) the probe reads every partition but `batch=id`, so a
     *      retried id recomputes from the same store state;
-    *   3. overwrite `batch=id` with the misses
-    *      ([[StreamingEngine.writeStorePartition]]);
-    *   4. run `sink` over the cached chunks and status;
-    *   5. release every relation this step cached — the chunks, the status
-    *      and the cascade's own stages all derive from `chunked`, so one
-    *      cascading uncache of it (not of the duplicated union, whose base
-    *      cache would leak) frees them all.
+    *   3. with a store target, cache the status (the write and the sink
+    *      both read it) and overwrite `batch=id` with the misses
+    *      ([[StreamingEngine.writeStorePartition]]); without one the sink
+    *      is the status's only reader, so nothing is cached for it;
+    *   4. run `sink` over the cached chunks and the status;
+    *   5. release every relation this step cached — the chunks and the
+    *      status both derive from `chunked`, so one cascading uncache of it
+    *      (not of the duplicated union, whose base cache would leak) frees
+    *      them all.
     */
   private[cawd] def ingest[T](variant: Variant, chunked: Dataset[FileChunk],
                               duplicate: Boolean, store: Option[(String, Long)],
@@ -255,19 +258,19 @@ object CawdEngine {
     val spark = chunked.sparkSession
     try {
       val chunks = (if (duplicate) withDuplicates(chunked) else chunked).cache()
-      val status = ((variant, store) match {
+      val status = (variant, store) match {
         case (v, None) => v.status(chunks.toDF())
         case (v: Variant.Flat, Some((dir, id))) =>
-          v.status(chunks.toDF(),
+          val st = v.status(chunks.toDF(),
             StreamingEngine.readStore(spark, dir).map(_.filter(col("batch") =!= id)))
+            .cache()
+          StreamingEngine.writeStorePartition(
+            st.filter(col("status") === "miss")
+              .select(StreamingEngine.StoreCols.map(col): _*),
+            s"$dir/batch=$id", clusterBuckets)
+          st
         case (v, Some(_)) => throw new IllegalArgumentException(
           s"--store is not supported for mode '${v.name}'")
-      }).cache()
-      store.foreach { case (dir, id) =>
-        StreamingEngine.writeStorePartition(
-          status.filter(col("status") === "miss")
-            .select(StreamingEngine.StoreCols.map(col): _*),
-          s"$dir/batch=$id", clusterBuckets)
       }
       sink(chunks, status)
     } finally spark.sharedState.cacheManager.uncacheQuery(chunked, cascade = true)

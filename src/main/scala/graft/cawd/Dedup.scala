@@ -1,6 +1,7 @@
 package graft.cawd
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The dedup decision engine, reformulated as a declarative Spark plan.
@@ -13,23 +14,22 @@ import org.apache.spark.sql.functions._
   * question: "is this the FIRST occurrence of this signature in
   * (fileRank, seq) order?" — first occurrence = miss (store insert),
   * everything later = hit. That turns an inherently serial client/server
-  * loop into ONE aggregation by signature:
+  * loop into ONE pass per probe key ([[markFirstOccurrence]]):
   *
-  *   - `groupBy(signature).agg(min(struct(fileRank, seq)))` benefits from
-  *     map-side partial aggregation — at high dup ratios the shuffle carries
-  *     roughly one row per DISTINCT signature, not per chunk (unlike a
-  *     window `row_number`, which would shuffle + sort every row);
-  *   - the join back on `signature` is co-partitioned with the aggregation,
-  *     so AQE plans it without an extra exchange;
-  *   - a pre-existing ("warm") store is one more `left` join on `signature`,
-  *     broadcast when small.
+  *   - the probed rows shuffle once by their key (`signature`) and sort by
+  *     arrival order inside it; `rank() == 1` marks the first occurrence —
+  *     one exchange, and no aggregate joined back onto the rows;
+  *   - a pre-existing ("warm") store is one more `left` join on `signature`
+  *     against a pruned, broadcast hit set.
   *
-  * Hierarchical stripe→column fallback (SURVEY.md §2.4 J5) is the same
-  * construction applied twice: stripes first; the columns of MISSED stripes
-  * probe a column store that — because the receiver derives column entries
-  * from every stripe it receives (`StripePlusColumnORCReceiver.java:198-211`,
-  * J4) — contains exactly the columns of all earlier first-occurrence
-  * stripes.
+  * Hierarchical stripe→column fallback (SURVEY.md §2.4 J5) is three such
+  * passes ([[hierarchicalStatus]]): stripes and file footers in one
+  * first-occurrence pass; one pass per stripe group that applies the
+  * delegation gate and hands the stripe's outcome to its linked chunks and
+  * columns; and a first-occurrence pass over the columns of delegated
+  * stripes, whose store — because the receiver derives column entries from
+  * every stripe it receives (`StripePlusColumnORCReceiver.java:198-211`,
+  * J4) — contains exactly the columns of all earlier delegated stripes.
   */
 object Dedup {
 
@@ -49,33 +49,42 @@ object Dedup {
   private val IsFirstCol = "is_first"
   private val InStoreCol = "in_store"
 
+  /** Working columns of [[hierarchicalStatus]]: a row's stripe outcome in
+    * pass 2 and its status before pass 3, where a column still to probe
+    * reads [[ColumnProbe]].
+    */
+  private val OutcomeCol = "stripe_outcome"
+  private val DecidedCol = "decided"
+  private val ColumnProbe = "column_probe"
+
   /** Appends each row's store `status`: "miss" for the first occurrence of
-    * its signature in strict (fileRank, ord) arrival order, "hit" for every
-    * repeat; ties (identical signatures at the same order key) are all
-    * first — matching the reference, where all column probes of one stripe
-    * happen before that stripe's inserts
-    * (`StripePlusColumnORCReceiver.java:93-211`).
+    * its key in strict (fileRank, ord) arrival order, "hit" for every
+    * repeat; ties (identical keys at the same order key) are all first —
+    * matching the reference, where all column probes of one stripe happen
+    * before that stripe's inserts (`StripePlusColumnORCReceiver.java:93-211`).
     *
     * @param ordCol in-file order column (`seq` for flat chunk streams,
     *               `parentSeq` for per-stripe column probes)
     * @param store  optional warm store from [[StreamingEngine.readStore]];
-    *               membership forces hit
+    *               membership of the row's `signature` forces hit
+    * @param keys   probe key columns: `signature`, or (`chunkType`,
+    *               `signature`) to run several stores (the cascade's
+    *               stripes and footers) in one pass
     */
   def markFirstOccurrence(chunks: DataFrame, ordCol: String,
-                          store: Option[DataFrame] = None): DataFrame = {
-    val key = struct(col("fileRank"), col(ordCol))
-    // aggregate + join-back rather than min-over-window: a window partitioned
-    // by signature buffers EVERY row of a hot signature (zero-filled chunks
-    // are common in dedup corpora) in one task — a spilling straggler at
-    // scale. The agg does map-side partial min (the shuffle carries ~one row
-    // per DISTINCT signature at high dup ratios), the join back is
-    // co-partitioned with the agg on `signature` (no extra exchange under
-    // AQE), and a skewed signature in the join is AQE-splittable.
-    val firsts = chunks.groupBy(col("signature"))
-      .agg(min(key).as("__first_key"))
-    val marked = chunks.join(firsts, Seq("signature"))
-      .withColumn(IsFirstCol, key <=> col("__first_key"))
-      .drop("__first_key")
+                          store: Option[DataFrame] = None,
+                          keys: Seq[Column] = Seq(col("signature"))): DataFrame = {
+    // One pass: shuffle by key, sort by arrival, rank — one exchange per
+    // probe. A `min` aggregate joined back onto the rows needs two exchanges
+    // and two jobs, and the cascade is bound by jobs, not bytes (AQE runs
+    // one job per stage). A hot key (zero-filled chunks are common in dedup
+    // corpora) still lands in one task, but the window buffers a group in
+    // memory only up to `spark.sql.windowExec.buffer.in.memory.threshold`
+    // rows and then in a spillable external sorter, so its rows spill
+    // instead of sitting whole on the heap.
+    val arrival = Window.partitionBy(keys: _*)
+      .orderBy(col("fileRank"), col(ordCol))
+    val marked = chunks.withColumn(IsFirstCol, rank().over(arrival) === 1)
     val probed = store match {
       // Signature-bucketed store (the StreamingEngine layout): the batch's
       // distinct signatures (a) prune the store scan to only the sbucket
@@ -215,8 +224,8 @@ object Dedup {
   def flatStatus(chunks: DataFrame, dedupable: Set[String],
                  smallThreshold: Long = 0L,
                  store: Option[DataFrame] = None): DataFrame = {
-    // the chunk set feeds multiple plan branches (probe + passthrough) and
-    // the probe joins back on itself — cache to chunk each file exactly
+    // the chunk set feeds multiple plan branches (probe, passthrough and a
+    // store probe's signature set) — cache to chunk each file exactly
     // once. An already-cached input is reused as-is so a caller that
     // manages its own cache lifecycle (CawdEngine.ingest, once per CLI run
     // or micro-batch) releases it and leaks no relation per run.
@@ -245,89 +254,80 @@ object Dedup {
     * outcome via the `parentSeq` link (J3): on stripe hit they are deduped,
     * on stripe miss they are sent raw.
     *
+    * Three passes in one chain, one exchange each; nothing is cached and no
+    * stage runs twice:
+    *   1. stripes and file footers: one [[markFirstOccurrence]] keyed by
+    *      (chunkType, signature), so the two stores stay apart;
+    *   2. one window per stripe group (file, stripe seq): the StripeData row
+    *      plus its linked chunks and columns. It applies the delegation gate
+    *      and hands the stripe's outcome to the rest of the group. Every
+    *      other row is a group of one and keeps its status;
+    *   3. the columns of delegated stripes above the threshold: one
+    *      [[markFirstOccurrence]] keyed by signature in (fileRank,
+    *      parentSeq) order. Every other row passes through it in a group
+    *      of its own and keeps its status.
+    *
     * Returns chunk rows annotated with `status`; column subchunks appear
-    * ONLY for missed stripes (they replace the stripe-data transfer).
-    * Caches two of its stages; [[CawdEngine.dedupStats]] releases them with
-    * the rest of its run.
+    * ONLY for delegated stripes (they replace the stripe-data transfer).
     */
   def hierarchicalStatus(chunks: DataFrame,
                          smallThreshold: Long = 2L * Sha1.Size): DataFrame = {
     // every data row participates (Column subchunks AND linked index/footer
     // chunks carry parentSeq != -1); only timing side-channel rows drop out
-    val top = chunks
-      .filter(col("parentSeq") =!= -2)
-      .cache() // referenced by every cascade stage below
+    val top = chunks.filter(col("parentSeq") =!= -2)
+    val isStripe = col("chunkType") === ChunkType.StripeData
+    val isColumn = col("chunkType") === ChunkType.Column
+    val isLinked = col("chunkType").isin(ChunkType.StripeIndex, ChunkType.StripeFooter) &&
+      col("parentSeq") =!= -1
+    val isProbe = isStripe || col("chunkType") === ChunkType.FileFooter
 
-    // 1. whole-stripe probe. A missed stripe normally delegates its bytes to
+    // 1. whole-stripe and file-footer probes; everything else is raw unless
+    //    pass 2 decides it
+    val probed = markFirstOccurrence(top.filter(isProbe), "seq",
+      keys = Seq(col("chunkType"), col("signature")))
+    val rest = top.filter(!isProbe).withColumn("status",
+      when(isColumn || isLinked, lit(null).cast("string")).otherwise(lit("raw")))
+
+    // 2. the stripe group. A missed stripe normally delegates its bytes to
     //    per-column probes ("miss_delegated"); a stripe whose stream layout
     //    could not be parsed into columns has none and is sent whole ("miss").
     //    P4 single-column shortcut: a stripe with ≤1 parsed column also skips
     //    column matching — the one column IS the stripe data, so probing it
     //    after a stripe miss is pure overhead
     //    (`orc/net/StripePlusColumnORCStreamer.java:146,202-209`).
-    val stripes = top.filter(col("chunkType") === ChunkType.StripeData)
-    val stripesWithCols = top.filter(col("chunkType") === ChunkType.Column)
-      .groupBy(col("file").as("c_file"), col("parentSeq").as("c_parent"))
-      .agg(count(lit(1)).as("__n_cols"))
-      .filter(col("__n_cols") >= 2)
-      .drop("__n_cols")
-    val stripeStatus = markFirstOccurrence(stripes, "seq")
-      .join(stripesWithCols,
-        col("file") === col("c_file") && col("seq") === col("c_parent"), "left")
+    //    Linked index/footer chunks dedup on a stripe hit WITHOUT their own
+    //    probe (the server resolves subchunks from the stripe entry,
+    //    `StripePlusColumnORCChunkStore.java:25-31`) — "hit_linked" counts
+    //    dedup bytes but no probe overhead or hit counter; on a miss they
+    //    are sent raw. Columns of stripes that did not delegate are dropped.
+    val group = Window.partitionBy(col("file"),
+      when(isColumn || isLinked, col("parentSeq")).otherwise(col("seq")))
+    val stripeStatus = max(when(isStripe, col("status"))).over(group)
+    val nCols = count(when(isColumn, lit(1))).over(group)
+    val decided = probed.unionByName(rest)
+      .withColumn(OutcomeCol,
+        when(stripeStatus === "miss" && nCols >= 2, lit("miss_delegated"))
+          .otherwise(stripeStatus))
+      .filter(!isColumn || col(OutcomeCol) === "miss_delegated")
       .withColumn("status",
-        when(col("status") === "miss" && col("c_file").isNotNull,
-          lit("miss_delegated")).otherwise(col("status")))
-      .drop("c_file", "c_parent")
-      .cache() // reused by linked-chunk + column-cascade joins and the union
+        when(isStripe, col(OutcomeCol))
+          .when(isLinked,
+            when(col(OutcomeCol) === "hit", lit("hit_linked")).otherwise(lit("raw")))
+          .when(isColumn,
+            when(col("size") > smallThreshold, lit(ColumnProbe)).otherwise(lit("small")))
+          .otherwise(col("status")))
+      .drop(OutcomeCol)
 
-    val stripeOutcome = stripeStatus.select(
-      col("file").as("s_file"), col("seq").as("s_seq"), col("status").as("s_status"))
-
-    // 2. linked index/footer chunks follow their stripe's outcome (J3): on a
-    //    stripe hit they dedup WITHOUT their own probe (the server resolves
-    //    subchunks from the stripe entry, `StripePlusColumnORCChunkStore
-    //    .java:25-31`) — status "hit_linked" counts dedup bytes but no
-    //    probe overhead or hit counter; on a miss they are sent raw.
-    val linked = top
-      .filter(col("chunkType").isin(ChunkType.StripeIndex, ChunkType.StripeFooter) &&
-        col("parentSeq") =!= -1)
-      .join(stripeOutcome,
-        col("file") === col("s_file") && col("parentSeq") === col("s_seq"), "left")
-      .withColumn("status",
-        when(col("s_status") === "hit", lit("hit_linked")).otherwise(lit("raw")))
-      .drop("s_file", "s_seq", "s_status")
-
-    // 3. columns of MISSED stripes probe the column store; the store grows
-    //    with the columns of every first-occurrence stripe (derived inserts,
-    //    J4), which is exactly this filtered set ordered by (fileRank,
-    //    parentSeq) — ties within one stripe all miss.
-    val columnsOfMissed = top.filter(col("chunkType") === ChunkType.Column)
-      .join(stripeOutcome,
-        col("file") === col("s_file") && col("parentSeq") === col("s_seq"))
-      .filter(col("s_status") === "miss_delegated")
-      .drop("s_file", "s_seq", "s_status")
-    val bigCols = columnsOfMissed.filter(col("size") > smallThreshold)
-    val smallCols = columnsOfMissed.filter(col("size") <= smallThreshold)
-      .withColumn("status", lit("small"))
-    val colStatus = markFirstOccurrence(bigCols, "parentSeq")
-
-    // 4. file footers probe their own store
-    val footerStatus = markFirstOccurrence(
-      top.filter(col("chunkType") === ChunkType.FileFooter), "seq")
-
-    // 5. everything else is raw
-    val raw = top.filter(
-      !col("chunkType").isin(ChunkType.StripeData, ChunkType.Column,
-        ChunkType.FileFooter) &&
-        !(col("chunkType").isin(ChunkType.StripeIndex, ChunkType.StripeFooter) &&
-          col("parentSeq") =!= -1))
-      .withColumn("status", lit("raw"))
-
-    stripeStatus
-      .unionByName(linked)
-      .unionByName(colStatus)
-      .unionByName(smallCols)
-      .unionByName(footerStatus)
-      .unionByName(raw)
+    // 3. columns of delegated stripes probe the column store; the store grows
+    //    with the columns of every delegated stripe (derived inserts, J4),
+    //    which is exactly this set ordered by (fileRank, parentSeq) — ties
+    //    within one stripe all miss. Every other row rides the same pass in
+    //    a group of its own, keyed by its (file, seq), so pass 2's output
+    //    is read once.
+    val toProbe = col(DecidedCol) === ColumnProbe
+    markFirstOccurrence(decided.withColumnRenamed("status", DecidedCol), "parentSeq",
+      keys = Seq(col("signature"), when(!toProbe, struct(col("file"), col("seq")))))
+      .withColumn("status", when(toProbe, col("status")).otherwise(col(DecidedCol)))
+      .drop(DecidedCol)
   }
 }
