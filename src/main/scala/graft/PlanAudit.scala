@@ -33,9 +33,9 @@ object PlanAudit {
       "stream-static join must broadcast the static bench side (no shuffle join)",
       p => p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin")),
     ("s01_streaming_dedup",
-      "warm store probe must prune batch+sbucket partitions at the store scan",
-      p => p.contains("PartitionFilters") && p.contains("INSET") &&
-        "PartitionFilters: \\[[^\\]]*sbucket".r.findFirstIn(p).isDefined),
+      "warm store probe must prune the batch partition and push In(signature) " +
+        "into the store scan",
+      storeProbePushedOk),
     ("s01_streaming_dedup",
       "store probe must stay broadcast: semi join (big-probe fallback) or " +
         "In-pushdown hits join with an INSET-filtered store scan",
@@ -49,6 +49,19 @@ object PlanAudit {
       p => "BroadcastHashJoin [^\\n]*LeftSemi".r.findFirstIn(p).isDefined ||
         ("BroadcastHashJoin [^\\n]*LeftOuter, BuildRight".r.findFirstIn(p).isDefined &&
           "FileScan parquet [^\\n]*INSET".r.findFirstIn(p).isDefined)))
+
+  /** The warm store probe's shape: some store `FileScan` prunes by the
+    * `batch` partition (a micro-batch never reads its own partition) and
+    * pushes the probe signatures as `In(signature, …)`, which is what lets
+    * the reader skip row groups and pages of the signature-sorted store
+    * files. A scan without the pushed In reads every page of the store.
+    */
+  private[graft] def storeProbePushedOk(plan: String): Boolean =
+    plan.linesIterator.exists { l =>
+      l.contains("FileScan parquet") &&
+        "PartitionFilters: \\[[^\\]]*batch".r.findFirstIn(l).isDefined &&
+        "PushedFilters: \\[[^\\]]*In\\(signature,".r.findFirstIn(l).isDefined
+    }
 
   /** Graft's dense kernel expressions. A FILTER whose condition evaluates
     * one of these is the InferFiltersFromGenerate pathology (round 7): the

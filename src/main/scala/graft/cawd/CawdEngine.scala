@@ -222,12 +222,12 @@ object CawdEngine {
   def dedupStats(spark: SparkSession, variant: Variant, files: Seq[(String, Int)],
                  duplicate: Boolean = false,
                  storeDir: Option[String] = None): DataFrame =
-    // CLI bulk ingest is not latency-bound: always cluster on the bucket
-    // value so one run writes ≤ NumSigBuckets files instead of tasks ×
-    // buckets (round-8 advice — the measured 8 192-file trap).
+    // CLI bulk ingest is not latency-bound: always take the clustered store
+    // write, so one run lands ≤ NumSigBuckets sorted files however many
+    // misses it has.
     ingest(variant, variant.chunk(spark, files), duplicate,
       storeDir.map(dir => (dir, StreamingEngine.nextCliBatchId(spark, dir))),
-      clusterBuckets = true) { (chunks, status) =>
+      clustered = true) { (chunks, status) =>
       // materialized before ingest releases the caches it reads
       Stats.rollup(Stats.fromStatus(status, variant.emitSizes)
         .unionByName(timingStats(chunks)))
@@ -253,7 +253,7 @@ object CawdEngine {
     */
   private[cawd] def ingest[T](variant: Variant, chunked: Dataset[FileChunk],
                               duplicate: Boolean, store: Option[(String, Long)],
-                              clusterBuckets: Boolean)
+                              clustered: Boolean)
                              (sink: (Dataset[FileChunk], DataFrame) => T): T = {
     val spark = chunked.sparkSession
     try {
@@ -267,7 +267,7 @@ object CawdEngine {
           StreamingEngine.writeStorePartition(
             st.filter(col("status") === "miss")
               .select(StreamingEngine.StoreCols.map(col): _*),
-            s"$dir/batch=$id", clusterBuckets)
+            s"$dir/batch=$id", clustered)
           st
         case (v, Some(_)) => throw new IllegalArgumentException(
           s"--store is not supported for mode '${v.name}'")

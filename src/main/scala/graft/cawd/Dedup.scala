@@ -86,32 +86,26 @@ object Dedup {
       .orderBy(col("fileRank"), col(ordCol))
     val marked = chunks.withColumn(IsFirstCol, rank().over(arrival) === 1)
     val probed = store match {
-      // Signature-bucketed store (the StreamingEngine layout): the batch's
-      // distinct signatures (a) prune the store scan to only the sbucket
-      // partitions they can live in — partition pruning against a
-      // 10⁹-signature store reads just the touched buckets — and (b)
-      // broadcast into the semi-join when small, so the store side is
-      // scanned NARROW and never shuffled. At a bounded per-batch probe set
-      // vs an ever-growing store, that flips the old plan (shuffle the
-      // whole store per batch) into per-batch work proportional to the
-      // batch. Oversized probe sets (a backfill batch) fall back to the
-      // shuffled join rather than a driver-breaking broadcast.
+      // Signature-sorted store (the StreamingEngine layout): the batch's
+      // distinct signatures are pushed into the store scan, so the store
+      // side is read narrow and never shuffled, and the hits broadcast back
+      // onto the batch. At a bounded per-batch probe set vs an ever-growing
+      // store, per-batch work stays proportional to the batch. Oversized
+      // probe sets (a backfill batch) fall back to a semi join rather than
+      // a driver-breaking broadcast.
       case Some(s) =>
         val probeSigs = chunks.select(col("signature")).distinct()
         // ONE driver action per probe either way. Common (bounded) case: a
-        // capped collect yields the exact probe set AND its bucket set —
-        // bucket pruning plus an In predicate on `signature` itself, which
-        // is what lets the parquet reader engage the store's signature
-        // bloom filters and sorted-page column index (see
-        // writeStorePartition's clustered layout) instead of scanning
-        // every page of every touched bucket: the wide-probe cost becomes
-        // ~O(probe sigs × page size), store-size-independent. Over the cap
+        // capped collect yields the exact probe set, pushed as In
+        // predicates on `signature`, which lets the parquet reader prune by
+        // the store files' sorted row-group and page statistics and their
+        // signature bloom filters (see writeStorePartition) instead of
+        // reading every page: the probe cost becomes ~O(probe sigs × page
+        // size) plus one footer per store file. Over the cap
         // (backfill-sized probes, where a scan is the right plan anyway)
-        // fall back to the aggregate: bucket set + broadcast sizing from
-        // one action, semi join against the pruned scan.
-        val capped = probeSigs.select(col("signature"),
-          StreamingEngine.sigBucket(col("signature")).as("__b"))
-          .limit(MaxInPushdownSigs + 1).collect()
+        // fall back to a count for broadcast sizing and a semi join.
+        val capped = probeSigs.limit(MaxInPushdownSigs + 1).collect()
+          .map(_.getAs[Array[Byte]](0))
         if (capped.length <= MaxInPushdownSigs) {
           if (capped.isEmpty) marked.withColumn(InStoreCol, lit(false))
           else {
@@ -120,64 +114,30 @@ object Dedup {
             // hands parquet an In as a LEFT-LEANING or-of-eq chain whose
             // evaluators recurse once per node — a single 4096-value In
             // overflowed the 1 MB task stack (measured) — so the probe is
-            // CHUNKED: pack WHOLE buckets into ≤[[InPushdownChunk]]-sig
-            // scans, each pruned to its own chunk's buckets, union the
-            // results. Packing whole buckets (not just bucket-sorting —
-            // round-10 advice: a sorted slice could still straddle a
-            // bucket across two chunks, scanning that bucket's files
-            // twice) makes the chunks' bucket sets DISJOINT, so the union
-            // reads the same files ONCE each — same total I/O as one big
-            // filter, ~500 stack frames per scan instead of ~10 000. The
-            // one exception: a single bucket whose own sig count exceeds
-            // the chunk cap (needs ~32× skew over the cap/256 expected
-            // fill) is split alone and its files scan once per slice —
-            // the unavoidable cost of the stack-depth bound.
-            val packed = {
-              val buf = scala.collection.mutable.ArrayBuffer
-                .empty[Array[org.apache.spark.sql.Row]]
-              val cur = scala.collection.mutable.ArrayBuffer
-                .empty[org.apache.spark.sql.Row]
-              capped.groupBy(_.getInt(1)).toSeq.sortBy(_._1).foreach {
-                case (_, rows) =>
-                  if (rows.length >= InPushdownChunk) {
-                    if (cur.nonEmpty) { buf += cur.toArray; cur.clear() }
-                    rows.grouped(InPushdownChunk).foreach(g => buf += g)
-                  } else {
-                    if (cur.length + rows.length > InPushdownChunk) {
-                      buf += cur.toArray; cur.clear()
-                    }
-                    cur ++= rows
-                  }
-              }
-              if (cur.nonEmpty) buf += cur.toArray
-              buf.toSeq
-            }
-            val hits = packed.iterator.map { chunk =>
-              s.filter(
-                col(StreamingEngine.SigBucketCol)
-                  .isin(chunk.map(_.getInt(1)).distinct.toSeq: _*) &&
-                col("signature").isin(chunk.map(_.get(0)).toSeq: _*))
-            }.reduce(_ unionByName _)
+            // CHUNKED into ≤ [[InPushdownChunk]]-signature scans, unioned.
+            // The chunks are cut from the signature list in the store
+            // files' sort order (unsigned byte order, parquet's BINARY
+            // order), so each chunk covers one contiguous key range and its
+            // scan reads only the pages inside that range.
+            val hits = capped.sorted(CawdEngine.Utf8Order)
+              .grouped(InPushdownChunk)
+              .map(chunk => s.filter(col("signature").isin(chunk.toSeq: _*)))
+              .reduce(_ unionByName _)
               .select(col("signature")).distinct()
               .withColumn(InStoreCol, lit(true))
             // hits ≤ the probe cap (4096 sigs) by construction — broadcast
             // it so the batch side stays unshuffled (the same posture the
-            // PlanAudit store-probe gate enforces on the semi-join path;
-            // without the hint the unknown-stats union picks an SMJ that
-            // shuffles the whole batch per micro-batch)
+            // PlanAudit store-probe gate enforces); without the hint the
+            // unknown-stats union picks an SMJ that shuffles the whole
+            // batch per micro-batch
             marked.join(broadcast(hits), Seq("signature"), "left")
               .withColumn(InStoreCol, coalesce(col(InStoreCol), lit(false)))
           }
         } else {
-          val probeMeta = probeSigs.agg(
-            collect_set(StreamingEngine.sigBucket(col("signature"))).as("b"),
-            count(lit(1)).as("n")).head()
-          val buckets = probeMeta.getSeq[Int](0)
-          val pruned = s.filter(col(StreamingEngine.SigBucketCol).isin(buckets: _*))
           val probeSide =
-            if (probeMeta.getLong(1) <= MaxBroadcastProbeSigs) broadcast(probeSigs)
+            if (probeSigs.count() <= MaxBroadcastProbeSigs) broadcast(probeSigs)
             else probeSigs
-          val hits = pruned.join(probeSide, Seq("signature"), "left_semi")
+          val hits = s.join(probeSide, Seq("signature"), "left_semi")
             .select(col("signature")).distinct()
             .withColumn(InStoreCol, lit(true))
           marked.join(hits, Seq("signature"), "left")

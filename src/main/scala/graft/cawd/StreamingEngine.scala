@@ -29,24 +29,23 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     micro-batch granularity (files within a batch are ranked by path,
   *     batches by arrival). No watermark — there is no event time.
   *
-  * Store layout `batch=N/sbucket=K`: every partition is additionally
-  * bucketed by `xxhash64(signature) mod` [[NumSigBuckets]], so a per-batch
-  * probe prunes the store scan to the buckets its signatures can live in
-  * and never shuffles the store (see [[Dedup.markFirstOccurrence]]).
-  * Eviction/TTL (absent in the reference) is a retention delete of old
-  * batch partitions.
+  * Store layout: each `batch=N` partition is plain parquet files whose
+  * rows are sorted by `signature` — one file per write task for a
+  * micro-batch, ≤ [[NumSigBuckets]] files for a bulk write. A per-batch
+  * probe pushes its signatures into the store scan as In predicates, which
+  * the sorted files' row-group and page statistics prune, and never
+  * shuffles the store (see [[Dedup.markFirstOccurrence]]). Merging many
+  * small partitions is the caller's step ([[compactStore]]); eviction/TTL
+  * (absent in the reference) is a retention delete of old batch partitions
+  * ([[retainStore]]).
   */
 object StreamingEngine {
 
   /** Chunk-store schema columns persisted across batches. */
   private[cawd] val StoreCols = Seq("signature", "chunkType", "size")
 
-  /** Signature-bucket partition column of the persisted store. */
-  val SigBucketCol = "sbucket"
-
-  /** Store bucket fan-out. 256 keeps per-bucket directories coarse enough
-    * for cheap listing while a small batch (touching ≪256 distinct buckets
-    * only when it has ≪256 signatures) still prunes most of a huge store.
+  /** Bulk-write fan-out: a clustered store write hash-partitions its rows
+    * by signature into at most this many sorted files.
     */
   val NumSigBuckets = 256
 
@@ -56,58 +55,40 @@ object StreamingEngine {
     */
   private[cawd] val MaxRankFiles: Int = 1 << 20
 
-  /** Deterministic signature → bucket assignment, usable on both the write
-    * path and the probe's pruning filter.
-    */
-  def sigBucket(sig: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod(xxhash64(sig), lit(NumSigBuckets.toLong)).cast("int")
-
-  /** Write one store partition bucketed by signature: `dir/sbucket=K/...`.
-    * Overwrite replaces the whole `batch=N` directory — retry-safe, same as
-    * the previous flat layout.
+  /** Write one store partition `dir` as parquet files sorted by
+    * `signature`, with no directory level below it. Overwrite replaces the
+    * whole `batch=N` directory, so a retried batch rewrites the same
+    * partition.
     *
-    * `clusterBuckets`: `partitionBy` makes every WRITE TASK open a file in
-    * every bucket directory it touches, so a bulk write at W tasks × 256
-    * buckets lands W·256 near-empty files — and every later probe pays
-    * that file count in listing and footer reads (measured at a
-    * 10⁶-signature bulk store: 8 192 files, first probe 33 s of which the
-    * scan itself was ~4 s). Bulk writers (compaction, store bootstrap)
-    * pass `true` to repartition ON the bucket value first — one shuffle of
-    * the rows being written, ≤ [[NumSigBuckets]] output files. Micro-batch
-    * writes keep the default no-shuffle path: their file count is bounded
-    * by the batch's own (small) miss count, the extra stage is exactly the
-    * per-batch latency round 7 fought to remove, and compaction folds
-    * their files away in steady state.
+    * Sorted files are what the probe's In pushdown prunes by: signatures
+    * are hashes, so an unsorted file's row-group and page min/max span the
+    * whole keyspace and a probe must read every page. Sorted, a K-signature
+    * probe reads ≤ K pages per file.
+    *
+    * A micro-batch write (the default) sorts inside each write task and
+    * does not shuffle: it lands one file per non-empty task, a few per
+    * wave, and adds no stage to the batch's latency. Its files stay in the
+    * store until the caller runs [[compactStore]]; the stream does not
+    * compact on its own.
+    *
+    * `clustered` is for bulk writers (CLI `--store` runs, backfills,
+    * compaction), whose row count is unbounded: one shuffle on `signature`
+    * into ≤ [[NumSigBuckets]] sorted files, each with a signature bloom
+    * filter (drops whole row groups for miss-heavy probes) and pages of at
+    * most 4096 rows, so the column index prunes a probe to a few pages of
+    * a large file.
     */
   def writeStorePartition(df: DataFrame, dir: String,
-                          clusterBuckets: Boolean = false): Unit = {
-    val withBucket = df.withColumn(SigBucketCol, sigBucket(col("signature")))
-    // Clustered (bulk) writes additionally SORT by signature inside each
-    // bucket and shrink page row counts: signatures are hashes, so an
-    // unsorted file's per-page min/max spans the whole keyspace and a
-    // probe must scan every page of every touched bucket — the measured
-    // linear-in-store-bytes wide probe. Sorted + small pages, the parquet
-    // column index prunes a K-signature probe to ≤ K pages per bucket
-    // (store-size-INDEPENDENT), and the signature bloom filter drops
-    // whole row groups for miss-heavy probes. Both engage only through
-    // the probe's pushed predicate (see markFirstOccurrence's In
-    // pushdown); micro-batch writes skip the sort — their files are tiny
-    // and compaction re-clusters them anyway. The sort key is prefixed by
-    // the partition column, so FileFormatWriter's required partition
-    // ordering is already satisfied and no second sort runs.
-    val arranged =
-      if (clusterBuckets)
-        withBucket.repartition(NumSigBuckets, col(SigBucketCol))
-          .sortWithinPartitions(col(SigBucketCol), col("signature"))
-      else withBucket
+                          clustered: Boolean = false): Unit = {
     val writer =
-      if (clusterBuckets)
-        arranged.write
+      if (clustered)
+        df.repartition(NumSigBuckets, col("signature"))
+          .sortWithinPartitions(col("signature")).write
           .option("parquet.bloom.filter.enabled#signature", "true")
           .option("parquet.bloom.filter.adaptive.enabled", "true")
           .option("parquet.page.row.count.limit", "4096")
-      else arranged.write
-    writer.mode("overwrite").partitionBy(SigBucketCol).parquet(dir)
+      else df.sortWithinPartitions(col("signature")).write
+    writer.mode("overwrite").parquet(dir)
   }
 
   /** Explicit store schema: a batch with zero misses still writes its
@@ -123,9 +104,7 @@ object StreamingEngine {
     org.apache.spark.sql.types.StructField("size",
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("batch",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField(SigBucketCol,
-      org.apache.spark.sql.types.IntegerType)))
+      org.apache.spark.sql.types.LongType)))
 
   /** Store contents: the union of every batch partition, with its `batch`
     * column; `None` while the store has no partition.
@@ -180,16 +159,14 @@ object StreamingEngine {
     val protectedId = batches.last // possibly in-flight; never rewritten
     val mergeIds = batches.init
     val mergeInto = mergeIds.last
-    val merged = spark.read.schema(StoreSchema)
-      .option("basePath", storeDir).parquet(storeDir)
+    val merged = readStore(spark, storeDir).get
       .filter(col("batch") =!= protectedId)
       .select(StoreCols.map(col): _*)
       .dropDuplicates("signature")
       .localCheckpoint(true) // sever lineage from the files about to vanish
     // clustered: the compacted partition is the store's steady-state bulk,
-    // read by every future probe — one file per bucket, not tasks×buckets
-    writeStorePartition(merged, s"$storeDir/batch=$mergeInto",
-      clusterBuckets = true)
+    // read by every future probe — ≤ NumSigBuckets sorted files
+    writeStorePartition(merged, s"$storeDir/batch=$mergeInto", clustered = true)
     mergeIds.filter(_ != mergeInto).foreach { b =>
       fs.delete(new Path(p, s"batch=$b"), true)
     }
@@ -277,8 +254,8 @@ object StreamingEngine {
   // Driver-side file listing up to 4096 paths (default threshold 32):
   // at micro-batch cadence the distributed listing JOB is ~0.3 s of pure
   // scheduling — 3× the listing itself — and it fires twice per batch
-  // (file source enumerating arrivals, store probe enumerating
-  // batch=*/sbucket=* leaf dirs, both ≫ 32 paths). A local/HDFS
+  // (file source enumerating arrivals, store probe enumerating the
+  // batch=* partition dirs; either can pass 32 paths). A local/HDFS
   // listStatus is ~ms per directory, so 4096 driver-side listings stay
   // ≪ one job's scheduling cost; an object-store deployment with
   // slow per-dir RPC should lower this back down.
@@ -356,11 +333,10 @@ object StreamingEngine {
           .toDF("path", "fileRank")
           .as[(String, Int)](org.apache.spark.sql.Encoders.product[(String, Int)]))
     // Large backfills take the clustered store write: their miss count is
-    // unbounded, so the no-shuffle path would land tasks × buckets
-    // near-empty files (the measured 8 192-file pathology) until a
-    // compaction ran. Micro-batches keep the no-shuffle latency path.
+    // unbounded, so they get one bounded shuffle into ≤ NumSigBuckets
+    // sorted files. Micro-batches keep the no-shuffle latency path.
     CawdEngine.ingest(variant, chunked, duplicate = false,
-      Some((storeDir, batchId)), clusterBuckets = !small) { (_, status) =>
+      Some((storeDir, batchId)), clustered = !small) { (_, status) =>
       // audit hook (no-op unless PlanAudit enabled it): the probe/dedup plan
       // that actually runs inside this micro-batch — the foreachBatch
       // interior the audit cannot reach from the outer streaming query

@@ -174,4 +174,42 @@ class PlanAuditSpec extends AnyFunSuite {
       "*(9) BroadcastHashJoin [idb], [vec_id], Inner, BuildRight"))
     assert(PlanAudit.JoinKernelAllowed("e04_cosine_neardup_pairs"))
   }
+
+  test("store-probe gate: a warm micro-batch plan passes, the same plan " +
+    "without the pushed In fails") {
+    val spark = GraftSession.get("plan-audit-spec")
+    val root = java.nio.file.Files.createTempDirectory("store-probe-gate").toString
+    // 100-row pages: ~20 data-page chunks, so the probe's In stays an In
+    spark.range(0, 2000).select(org.apache.spark.sql.functions.col("id"))
+      .coalesce(1).write.option("parquet.page.row.count.limit", "100")
+      .parquet(s"$root/src")
+    val src = new java.io.File(s"$root/src").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath
+    val in = new java.io.File(s"$root/in"); in.mkdirs()
+    def wave(name: String): Unit = {
+      java.nio.file.Files.copy(src, new java.io.File(in, name).toPath)
+      cawd.StreamingEngine.start(spark, in.getPath, s"$root/store", s"$root/stats",
+        ".parquet", cawd.CawdEngine.Parquet, s"$root/ckpt").awaitTermination()
+    }
+    StreamingPlanCapture.enabled = true
+    try {
+      // wave 1 fills the store; wave 2 resends the file: the warm probe
+      wave("a.parquet")
+      StreamingPlanCapture.reset()
+      wave("b.parquet")
+      val warm = StreamingPlanCapture.all.map(_._2).mkString("\n")
+      assert(PlanAudit.storeProbePushedOk(warm), warm)
+      // injected regression: the same plan whose store scans push only the
+      // null check (the In list is cut short in plan text, so the whole
+      // PushedFilters value is replaced)
+      val noIn = warm.replaceAll("PushedFilters: \\[[^\\n]*?(?=, ReadSchema:)",
+        "PushedFilters: [IsNotNull(signature)]")
+      assert(noIn != warm && !noIn.contains("In(signature,"))
+      assert(!PlanAudit.storeProbePushedOk(noIn),
+        s"gate failed to flag a store scan without the pushed In:\n$noIn")
+    } finally {
+      StreamingPlanCapture.enabled = false
+      StreamingPlanCapture.reset()
+    }
+  }
 }

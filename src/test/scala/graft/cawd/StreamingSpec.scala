@@ -1,7 +1,14 @@
 package graft.cawd
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSession
@@ -27,6 +34,56 @@ class StreamingSpec extends AnyFunSuite {
     Files.copy(part.toPath, dest.toPath)
   }
 
+  /** Runs `body` and returns how many write tasks its writes into
+    * `store` ran: the result tasks of every job of a SQL execution that
+    * inserts into a `store/batch=N` partition.
+    */
+  private def storeWriteTasks(spark: SparkSession, store: String)(body: => Unit): Int = {
+    val writeExecs = ConcurrentHashMap.newKeySet[Long]()
+    val writeStages = ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") &&
+              x.physicalPlanDescription.contains(s"$store/batch=") =>
+          writeExecs.add(x.executionId)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .exists(id => writeExecs.contains(id.toLong)))
+          e.stageIds.foreach(writeStages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask" && writeStages.contains(e.stageId))
+          tasks.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    tasks.get
+  }
+
+  /** A store partition's layout: at most `maxFiles` parquet files, no
+    * directory below `batch=N`, and rows sorted by `signature` (unsigned
+    * byte order) inside every file.
+    */
+  private def assertStoreLayout(spark: SparkSession, part: java.io.File,
+                                maxFiles: Int): Unit = {
+    def tree(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(tree) else Seq(f)
+    val files = tree(part).filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty && files.length <= maxFiles,
+      s"$part: ${files.length} data files, at most $maxFiles expected")
+    assert(!part.listFiles().exists(_.isDirectory),
+      s"$part holds a subdirectory: ${part.list().toSeq}")
+    files.foreach { f =>
+      val sigs = spark.read.parquet(f.getPath).select("signature").collect()
+        .map(_.getAs[Array[Byte]](0)).toSeq
+      assert(sigs == sigs.sorted(CawdEngine.Utf8Order), s"$f is not sorted by signature")
+    }
+  }
+
   private def storeSignatures(spark: org.apache.spark.sql.SparkSession,
                               store: String): Seq[String] =
     spark.read.parquet(store)
@@ -47,12 +104,16 @@ class StreamingSpec extends AnyFunSuite {
 
     // wave 1
     java.nio.file.Files.copy(src.toPath, new java.io.File(inDir, "a.parquet").toPath)
-    StreamingEngine.start(spark, inDir, store, stats, ".parquet",
-      CawdEngine.Parquet, ckpt).awaitTermination()
+    val wave1Tasks = storeWriteTasks(spark, store) {
+      StreamingEngine.start(spark, inDir, store, stats, ".parquet",
+        CawdEngine.Parquet, ckpt).awaitTermination()
+    }
     // wave 2: byte-identical copy, new batch
     java.nio.file.Files.copy(src.toPath, new java.io.File(inDir, "b.parquet").toPath)
-    StreamingEngine.start(spark, inDir, store, stats, ".parquet",
-      CawdEngine.Parquet, ckpt).awaitTermination()
+    val wave2Tasks = storeWriteTasks(spark, store) {
+      StreamingEngine.start(spark, inDir, store, stats, ".parquet",
+        CawdEngine.Parquet, ckpt).awaitTermination()
+    }
 
     val rows = spark.read.parquet(stats)
     val byBatchFile = rows.filter(col("metric") === "DedupBytes")
@@ -71,12 +132,12 @@ class StreamingSpec extends AnyFunSuite {
     val storeDf = spark.read.parquet(store)
     assert(storeDf.count() == storeDf.select("signature").distinct().count())
 
-    // store partitions are signature-bucketed (batch=N/sbucket=K), and the
-    // probe broadcasts the batch's signatures against the pruned store scan
-    // instead of shuffling the store
-    assert(new java.io.File(store, "batch=0").listFiles()
-      .exists(_.getName.startsWith("sbucket=")),
-      "store partitions bucketed by signature")
+    // a micro-batch lands at most one signature-sorted file per write task
+    // directly in its batch=N partition, and the probe broadcasts the
+    // batch's signatures against the store scan instead of shuffling the
+    // store
+    assertStoreLayout(spark, new java.io.File(store, "batch=0"), wave1Tasks)
+    assertStoreLayout(spark, new java.io.File(store, "batch=1"), wave2Tasks)
     val probeChunks = CawdEngine.chunkFiles(spark,
       Seq((s"$inDir/b.parquet", 0)), CawdEngine.Parquet, OrcChunker.Naive).toDF()
     val probePlan = Dedup.markFirstOccurrence(probeChunks, "seq",
@@ -183,15 +244,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(s.filter(col("batch_id") === 1 && col("metric") === "DedupBytes")
         .agg(sum("value")).head().getDouble(0) > 0.0,
         "backfill branch must still dedup against the store")
-      // clustered write: each sbucket dir of the backfill's store partition
-      // holds exactly ONE data file (no tasks × buckets fan-out)
-      val bdir = new java.io.File(store, "batch=1")
-      if (bdir.isDirectory) {
-        val perBucket = bdir.listFiles().filter(_.getName.startsWith("sbucket="))
-          .map(_.listFiles().count(f => f.getName.endsWith(".parquet")))
-        assert(perBucket.nonEmpty && perBucket.forall(_ == 1),
-          s"clustered backfill write must land one file per bucket, got ${perBucket.toSeq}")
-      }
+      // clustered write: the backfill's store partition holds at most
+      // NumSigBuckets signature-sorted files, with no directory below it
+      assertStoreLayout(spark, new java.io.File(store, "batch=1"),
+        StreamingEngine.NumSigBuckets)
     } finally {
       graft.StreamingPlanCapture.enabled = false
       graft.StreamingPlanCapture.reset()
