@@ -234,8 +234,9 @@ object CawdEngine {
         .localCheckpoint(true)
     }
 
-  /** The one store lifecycle of a CLI run ([[dedupStats]]) and a stream
-    * micro-batch ([[StreamingEngine.processBatch]]), in order:
+  /** The one batch dedup step, shared by a CLI run ([[dedupStats]]), a
+    * stream micro-batch ([[StreamingEngine.processBatch]]) and a c-pack
+    * dedup row (`graft.queries.CawdQueries`), in order:
     *   1. cache `chunked` (each file followed by a byte-identical copy with
     *      `duplicate`);
     *   2. decide every chunk's status; with a `store` target (directory,
@@ -251,10 +252,10 @@ object CawdEngine {
     *      (not of the duplicated union, whose base cache would leak) frees
     *      them all.
     */
-  private[cawd] def ingest[T](variant: Variant, chunked: Dataset[FileChunk],
-                              duplicate: Boolean, store: Option[(String, Long)],
-                              clustered: Boolean)
-                             (sink: (Dataset[FileChunk], DataFrame) => T): T = {
+  private[graft] def ingest[T](variant: Variant, chunked: Dataset[FileChunk],
+                               duplicate: Boolean, store: Option[(String, Long)],
+                               clustered: Boolean)
+                              (sink: (Dataset[FileChunk], DataFrame) => T): T = {
     val spark = chunked.sparkSession
     try {
       val chunks = (if (duplicate) withDuplicates(chunked) else chunked).cache()

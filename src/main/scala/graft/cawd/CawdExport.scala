@@ -7,7 +7,8 @@ import scala.util.control.NonFatal
 
 import org.apache.commons.io.IOUtils
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** The one way to write a table under [[Root]]: [[write]] runs the
   * caller's write body into a per-(corpus, tag) directory, under a
@@ -38,6 +39,19 @@ object CawdExport {
     s"$Root/${new Path(sfDir).getName}/$tag"
 
   private val MarkerName = "_GRAFT_CONTENT_KEY"
+
+  /** The oracle chunk table's columns, defined once for every chunk export
+    * (c01's table, the c-pack dedup rows', s01's per-batch partitions):
+    * the file's basename, so no output depends on where the corpus lives;
+    * the chunk's place and shape; its signature as lower-case hex `sig`;
+    * then `extra`. Timing side-channel rows are not data and are dropped.
+    */
+  def chunkColumns(chunks: DataFrame, extra: Column*): DataFrame =
+    chunks.filter(col("parentSeq") =!= -2)
+      .select(Seq(regexp_replace(col("file"), ".*/", "").as("file"),
+        col("fileRank"), col("seq"), col("chunkType"), col("start"),
+        col("size"), col("colId"), col("colType"), col("parentSeq"),
+        lower(hex(col("signature"))).as("sig")) ++ extra: _*)
 
   private val locks = new ConcurrentHashMap[String, AnyRef]()
 

@@ -184,19 +184,13 @@ object Dedup {
   def flatStatus(chunks: DataFrame, dedupable: Set[String],
                  smallThreshold: Long = 0L,
                  store: Option[DataFrame] = None): DataFrame = {
-    // the chunk set feeds multiple plan branches (probe, passthrough and a
-    // store probe's signature set) — cache to chunk each file exactly
-    // once. An already-cached input is reused as-is so a caller that
-    // manages its own cache lifecycle (CawdEngine.ingest, once per CLI run
-    // or micro-batch) releases it and leaks no relation per run.
-    val cached =
-      if (chunks.storageLevel != org.apache.spark.storage.StorageLevel.NONE) chunks
-      else chunks.cache()
-    val special = cached
-      .filter(col("parentSeq") === -1) // hierarchical subchunks not in play here
-      .filter(col("chunkType").isInCollection(dedupable) &&
-        col("size") > smallThreshold)
-    val plain = cached.filter(col("parentSeq") === -1)
+    // `chunks` feeds several plan branches (probe, passthrough and a store
+    // probe's signature set); a caller that must chunk each file once
+    // caches it, as CawdEngine.ingest does once per run or micro-batch
+    val top = chunks.filter(col("parentSeq") === -1) // hierarchical subchunks not in play here
+    val special = top.filter(col("chunkType").isInCollection(dedupable) &&
+      col("size") > smallThreshold)
+    val plain = top
       .filter(!(col("chunkType").isInCollection(dedupable) &&
         col("size") > smallThreshold))
       .withColumn("status",

@@ -342,8 +342,8 @@ object StreamingEngine {
       // interior the audit cannot reach from the outer streaming query
       graft.StreamingPlanCapture.record("s01-batch",
         status.queryExecution.executedPlan.toString)
-      // stats/export see basenames so downstream output (and the DuckDB
-      // oracle re-deriving it) doesn't depend on temp-dir paths
+      // stats see basenames so downstream output (and the DuckDB oracle
+      // re-deriving it) doesn't depend on temp-dir paths
       val named = status.withColumn("file", regexp_replace(col("file"), ".*/", ""))
       // Sequential sinks, deliberately: a concurrent-Futures variant was
       // measured SLOWER (6.2 s → 11.6 s for the two-wave run) — three
@@ -354,10 +354,7 @@ object StreamingEngine {
       // chunk-status table for the external oracle: cross-batch dedup is
       // re-derivable as first-occurrence by (batchId, fileRank, seq)
       exportDir.foreach { dir =>
-        named.select(col("file"), lit(batchId).as("batchId"),
-          col("fileRank"), col("seq"), col("chunkType"), col("start"),
-          col("size"), col("colId"), col("colType"), col("parentSeq"),
-          lower(hex(col("signature"))).as("sig"),
+        CawdExport.chunkColumns(status, lit(batchId).as("batchId"),
           col("status").as("engine_status"))
           .write.mode("overwrite").parquet(s"$dir/batch=$batchId")
       }

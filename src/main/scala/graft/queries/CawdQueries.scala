@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cawd._
 
@@ -13,11 +13,14 @@ import graft.cawd._
   * Correctness model: the byte-level chunkers are unit/property-tested
   * (CawdSpec); everything downstream of the chunk table — first-occurrence
   * dedup, hierarchical cascade, wire/byte accounting, two-level stats
-  * rollup — is pure relational algebra. Each query therefore materializes
-  * its chunk table as parquet ([[graft.cawd.CawdExport]]) and carries a
-  * DuckDB `oracleSql` that RE-DERIVES the dedup decision and the stats
-  * rollup from that table independently, so the driver hash-compares
-  * values, not just row counts. Only c06 (byte-identity reconstruction) is
+  * rollup — is pure relational algebra. Each dedup row runs the library's
+  * [[graft.cawd.CawdEngine.ingest]] step, which computes status and rollup
+  * in memory from the cached chunks, and in the same run writes those
+  * chunks as parquet ([[graft.cawd.CawdExport.chunkColumns]]). Its DuckDB
+  * `oracleSql` RE-DERIVES the dedup decision and the stats rollup from
+  * that export alone, so the driver hash-compares the engine's values
+  * against an independent derivation — an export that misencodes a chunk
+  * fails the compare. Only c06 (byte-identity reconstruction) is
   * inherently byte-level and stays rows-only + unit-tested.
   */
 object CawdQueries {
@@ -49,50 +52,40 @@ object CawdQueries {
     }
   }
 
-  /** Write a chunk relation (at least the FileChunk columns, e.g. the
-    * `graft-chunks` DSv2 source) as the `tag` export — basename file, hex
-    * signature, no content — and read it back, so the Spark-side query and
-    * the DuckDB oracle compute from byte-identical input.
-    */
-  private def chunkTable(s: SparkSession, sfDir: String, tag: String,
-                         chunks: Dataset[_]): DataFrame =
-    s.read.parquet(CawdExport.write(s, sfDir, tag, None)(chunks.toDF()
-      .filter(col("parentSeq") =!= -2) // timing side-channel rows are not data
-      .select(
-        regexp_replace(col("file"), ".*/", "").as("file"),
-        col("fileRank"), col("seq"), col("chunkType"), col("start"),
-        col("size"), col("colId"), col("colType"), col("parentSeq"),
-        lower(hex(col("signature"))).as("sig"))
-      .write.parquet(_)))
-      .withColumnRenamed("sig", "signature")
-
   private def base(c: org.apache.spark.sql.Column) =
     regexp_replace(c, ".*/", "")
 
-  /** Chunk → export → dedup-from-export → stats for one [[Variant]] over
-    * the files of `srcDir`. Both this plan and the DuckDB oracle consume
-    * the SAME materialized chunk table, so the dedup decision + accounting
-    * get a value-level external check (and chunking runs once instead of
-    * per consumer).
+  /** One c-pack dedup row: [[CawdEngine.ingest]] of `variant` over the
+    * files of `srcDir`, each followed by a byte-identical copy with
+    * `duplicate`. The sink writes the `tag` chunk table for the DuckDB
+    * oracle from the cached chunks, and returns the rollup of the engine's
+    * in-memory status, without timing rows.
     */
-  private def fromExport(s: SparkSession, sfDir: String, srcDir: String,
-                         variant: Variant, tag: String,
-                         duplicate: Boolean): DataFrame = {
-    val chunked = variant.chunk(s, CawdEngine.listFiles(srcDir, variant.suffix))
-    val tbl = chunkTable(s, sfDir, tag,
-      if (duplicate) CawdEngine.withDuplicates(chunked) else chunked)
-    Stats.rollup(Stats.fromStatus(variant.status(tbl), variant.emitSizes))
-      .orderBy("file", "metric")
-  }
+  private def dedupRow(s: SparkSession, sfDir: String, srcDir: String,
+                       variant: Variant, tag: String,
+                       duplicate: Boolean): DataFrame =
+    CawdEngine.ingest(variant,
+      variant.chunk(s, CawdEngine.listFiles(srcDir, variant.suffix)), duplicate,
+      store = None, clustered = false) { (chunks, status) =>
+      CawdExport.write(s, sfDir, tag, None)(
+        CawdExport.chunkColumns(chunks.toDF()).write.parquet(_))
+      // basenames before the stats, as the oracle has them:
+      // ExtraTransferBytes counts length(file)
+      Stats.rollup(Stats.fromStatus(status.withColumn("file", base(col("file"))),
+        variant.emitSizes))
+        .localCheckpoint(true) // materialized before ingest releases its caches
+    }.orderBy("file", "metric")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S4: structural parquet chunk table over every corpus parquet file,
     // read through the `graft-chunks` DataSource V2 provider — the DSv2
     // path (partition planning, pruning, hashing reader) is what the
-    // oracle verifies here.
+    // oracle verifies here. The aggregate reads the export back, so both
+    // sides count the same table.
     "c01_parquet_chunk_table" -> ((s, d) => {
       val chunks = s.read.format("graft-chunks").load(d)
-      chunkTable(s, d, "c01", chunks)
+      s.read.parquet(CawdExport.write(s, d, "c01", None)(
+        CawdExport.chunkColumns(chunks).write.parquet(_)))
         .groupBy(col("file"), col("chunkType"))
         .agg(count(lit(1)).as("n_chunks"), sum(col("size")).as("bytes"))
         .orderBy("file", "chunkType")
@@ -101,27 +94,27 @@ object CawdQueries {
     // S4+J1+A1-A4: parquet pipeline, cold store (every first-occurrence
     // chunk misses; intra-corpus duplicate pages dedup).
     "c02_parquet_dedup_cold" -> ((s, d) =>
-      fromExport(s, d, d, Variant.Parquet, "c02", duplicate = false)),
+      dedupRow(s, d, d, Variant.Parquet, "c02", duplicate = false)),
 
     // Warm-store parity KPI (BASELINE.md): file + byte-identical copy →
     // copies' DedupBytes ≈ dedupable section bytes.
     "c03_parquet_dedup_warm" -> ((s, d) =>
-      fromExport(s, d, d, Variant.Parquet, "c03", duplicate = true)),
+      dedupRow(s, d, d, Variant.Parquet, "c03", duplicate = true)),
 
     // S1+J1: naive ORC stripe dedup, warm.
     "c04_orc_naive_dedup_warm" -> ((s, d) =>
-      fromExport(s, d, ensureOrcFixtures(s, d), Variant.OrcNaive, "c04",
+      dedupRow(s, d, ensureOrcFixtures(s, d), Variant.OrcNaive, "c04",
         duplicate = true)),
 
     // S2+P3: column-based ORC dedup with the reference's 50 B small-column
     // bypass, warm.
     "c08_orc_column_dedup_warm" -> ((s, d) =>
-      fromExport(s, d, ensureOrcFixtures(s, d), Variant.OrcColumn, "c08",
+      dedupRow(s, d, ensureOrcFixtures(s, d), Variant.OrcColumn, "c08",
         duplicate = true)),
 
     // S3+J3-J5: hierarchical stripe→column cascade, warm.
     "c05_orc_sp_cascade_warm" -> ((s, d) =>
-      fromExport(s, d, ensureOrcFixtures(s, d), Variant.OrcSp, "c05",
+      dedupRow(s, d, ensureOrcFixtures(s, d), Variant.OrcSp, "c05",
         duplicate = true)),
 
     // S7: byte-identity reconstruction over both formats. The cover-filtered
@@ -175,7 +168,7 @@ object CawdQueries {
     // same corpus + byte-identical copies. Compare its DedupBytes with
     // c03's to see what format awareness buys (the reference's thesis).
     "c09_cdc_dedup_warm" -> ((s, d) =>
-      fromExport(s, d, d, Variant.Cdc, "c09", duplicate = true)),
+      dedupRow(s, d, d, Variant.Cdc, "c09", duplicate = true)),
 
     // S6: plain no-dedup baseline — REAL fixed-4096 B framing of the byte
     // stream (`net/SpeedupStreamer.java:50-134`): Spark aggregates the
