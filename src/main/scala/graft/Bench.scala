@@ -10,7 +10,13 @@ import org.apache.spark.sql.SparkSession
   * and whole-stage-codegen first-compilation costs (~90 s spread across 36
   * small queries at sf0.1, ~3× the actual compute). Caches are cleared
   * between passes so the timed pass re-reads inputs and re-executes every
-  * exchange; only code compilation stays warm.
+  * exchange. Compiled code stays warm only while Spark's generated-class
+  * cache holds the whole suite: under Spark's default 100 entries each
+  * query's classes were evicted by its successors before its timed run
+  * and compiled again inside it; [[GraftSession.CodegenCacheEntries]]
+  * sizes the cache for one pass. The artifact's "compiles" map records,
+  * per query, the Janino compiles (`n`) and compile milliseconds (`ms`)
+  * of its timed run, so a row that still compiles says so.
   */
 object Bench {
   /** Enforced heap-floor precondition for big-corpus runs. At the
@@ -327,7 +333,16 @@ object Bench {
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
 
+    // Janino compiles (cache misses of Spark's generated-class cache) and
+    // their compile time, JVM-wide, across one query's run; the timed
+    // pass's pair lands in the artifact's "compiles" map
+    def compiles(): (Long, Long) =
+      (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+    val compileStats = scala.collection.mutable.Map.empty[String, (Long, Double)]
+
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val (n0, ns0) = compiles()
       val t0 = System.nanoTime()
       // noop sink: forces full evaluation of every output column (count()
       // would let Catalyst prune the projections being measured)
@@ -335,9 +350,11 @@ object Bench {
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
       val dt = (System.nanoTime() - t0) / 1e9
+      val (n1, ns1) = compiles()
+      compileStats(name) = (n1 - n0, (ns1 - ns0) / 1e6)
       // progress to stderr (stdout stays one-JSON-line): long runs at big
       // SFs are otherwise silent for tens of minutes
-      System.err.println(f"[bench] $name%-28s ${dt}%8.2f s")
+      System.err.println(f"[bench] $name%-28s ${dt}%8.2f s  ${n1 - n0}%4d compiles")
       // each query caches what IT reuses across its own plan branches;
       // dropping those blocks afterwards keeps measurements independent
       // (the queries' cached binaries otherwise pile up into GC churn)
@@ -363,7 +380,10 @@ object Bench {
         w
       }
 
+    compileStats.clear()
     val firstTimed = names.map { case (name, fn) => name -> runOne(name, fn) }
+    // the timed pass's own compiles, before a re-measure overwrites them
+    val timedCompiles = compileStats.toMap
     // Outlier re-measurement: a ~70-query JVM accumulates scheduler/GC
     // debt, and a query can time 2× slower in the full run than it runs in
     // isolation (round-6 artifact shipped d10 at 15.6 s vs 6.6 s isolated).
@@ -437,9 +457,11 @@ object Bench {
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val cs = results.flatMap { case (k, _) => timedCompiles.get(k).map { case (n, ms) =>
+      f""""$k":{"n":$n,"ms":$ms%.1f}""" } }.mkString(""","compiles":{""", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$device$trafficParity$recheck$standing}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$cs$device$trafficParity$recheck$standing}"""
     println(line)
     // the driver's log capture keeps only the tail of stdout, which truncated
     // the per-query map at ~36 queries; the full line also lands in a repo

@@ -12,6 +12,8 @@ import org.apache.spark.sql.SparkSession
   *   `events.ts` column is TIMESTAMP(NANOS) (written by pyarrow), which
   *   Spark 4 cannot map natively; we read it as nanos-since-epoch LONG and
   *   convert in [[Tables.events]].
+  * - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]]: a
+  *   repeated plan reuses its compiled, JIT-warm classes.
   */
 object GraftSession {
 
@@ -100,6 +102,22 @@ object GraftSession {
     s
   }
 
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The engine's
+    * working sets are larger: one pass of the sf0.1 `graft.Bench` suite
+    * compiles 1,282 distinct classes, and under the default one perfbench
+    * `orc_versions` operation recompiled 72–93 of its classes and one
+    * `pack_mix` round 27–31 (SCALE.md, "Compile once, configure once").
+    * An evicted class is compiled again by Janino and runs interpreted
+    * until the JIT re-warms it; at this cap a repeated plan reuses its
+    * classes. 4096 is ~3× the suite's pass, because the cache evicts per
+    * quarter segment, not globally. The key is a STATIC conf: a JVM reads
+    * it once, when its first class compiles, so it takes effect only when
+    * the JVM's first session is built here; a JVM whose first session is
+    * built elsewhere keeps Spark's 100 for its whole life.
+    */
+  val CodegenCacheEntries = 4096
+
   def get(appName: String = "graft"): SparkSession = {
     val cpus = Sizing.localCores
     val spark = SparkSession.builder()
@@ -179,6 +197,7 @@ object GraftSession {
       // count actually allocated is still demand-sized from n.
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
         (1L << 30).toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "2g")
       .getOrCreate()

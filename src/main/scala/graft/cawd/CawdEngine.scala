@@ -1,6 +1,5 @@
 package graft.cawd
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
@@ -42,7 +41,7 @@ object CawdEngine {
     * store agree.
     */
   def listFiles(dir: String, suffix: String): Seq[(String, Int)] = {
-    val conf = new Configuration()
+    val conf = graft.HadoopConf.shared
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     val files = fs.listStatus(p).filter(_.isFile).map(_.getPath.toString)
@@ -168,7 +167,7 @@ object CawdEngine {
     } catch {
       case scala.util.control.NonFatal(_) =>
         val p = new Path(path)
-        val len = p.getFileSystem(new Configuration()).getFileStatus(p).getLen
+        val len = p.getFileSystem(graft.HadoopConf.shared).getFileStatus(p).getLen
         Seq(FileChunk(path, rank, 0, ChunkType.Error, 0, len, -1, "", -1,
           Array.emptyByteArray, Array.emptyByteArray))
     }
@@ -192,15 +191,14 @@ object CawdEngine {
   /** Simulate the README's warm-store experiment (BASELINE.md parity KPI):
     * every input file is followed by a byte-identical copy (fileRank shifted
     * past all originals, so all copies arrive "after" all originals).
+    * Each row yields itself and its copy in one pass over `chunks`, so the
+    * corpus is read and hashed once without a cache of its own.
     */
   def withDuplicates(chunks: Dataset[FileChunk]): Dataset[FileChunk] = {
     import chunks.sparkSession.implicits._
     val shift = 1 << 20
-    // cache the base: both union branches share it, so the corpus is read
-    // and hashed ONCE — the copies are derived rows, not a second pass
-    val base = chunks.cache()
-    base.union(base.map(c =>
-      c.copy(file = c.file + "+copy", fileRank = c.fileRank + shift)))
+    chunks.flatMap(c =>
+      Iterator(c, c.copy(file = c.file + "+copy", fileRank = c.fileRank + shift)))
   }
 
   /** The batch dedup pipeline of every [[Variant]]: chunk `files` (each
@@ -237,8 +235,9 @@ object CawdEngine {
   /** The one batch dedup step, shared by a CLI run ([[dedupStats]]), a
     * stream micro-batch ([[StreamingEngine.processBatch]]) and a c-pack
     * dedup row (`graft.queries.CawdQueries`), in order:
-    *   1. cache `chunked` (each file followed by a byte-identical copy with
-    *      `duplicate`);
+    *   1. cache `chunked`, the one relation cached for the chunks; with
+    *      `duplicate` each file is followed by a byte-identical copy
+    *      derived from the cached rows;
     *   2. decide every chunk's status; with a `store` target (directory,
     *      batch id) the probe reads every partition but `batch=id`, so a
     *      retried id recomputes from the same store state;
@@ -247,10 +246,8 @@ object CawdEngine {
     *      ([[StreamingEngine.writeStorePartition]]); without one the sink
     *      is the status's only reader, so nothing is cached for it;
     *   4. run `sink` over the cached chunks and the status;
-    *   5. release every relation this step cached — the chunks and the
-    *      status both derive from `chunked`, so one cascading uncache of it
-    *      (not of the duplicated union, whose base cache would leak) frees
-    *      them all.
+    *   5. release every relation this step cached — the status derives
+    *      from `chunked`, so one cascading uncache of it frees them all.
     */
   private[graft] def ingest[T](variant: Variant, chunked: Dataset[FileChunk],
                                duplicate: Boolean, store: Option[(String, Long)],
@@ -258,7 +255,8 @@ object CawdEngine {
                               (sink: (Dataset[FileChunk], DataFrame) => T): T = {
     val spark = chunked.sparkSession
     try {
-      val chunks = (if (duplicate) withDuplicates(chunked) else chunked).cache()
+      val cached = chunked.cache()
+      val chunks = if (duplicate) withDuplicates(cached) else cached
       val status = (variant, store) match {
         case (v, None) => v.status(chunks.toDF())
         case (v: Variant.Flat, Some((dir, id))) =>
@@ -293,7 +291,7 @@ object CawdEngine {
     import spark.implicits._
     spreadFiles(spark, files).flatMap { case (path, rank) =>
       val p = new Path(path)
-      val fs = p.getFileSystem(new Configuration())
+      val fs = p.getFileSystem(graft.HadoopConf.shared)
       val len = fs.getFileStatus(p).getLen
       val metas = (0L until len by bufferSize.toLong).zipWithIndex.map {
         case (off, i) =>
@@ -327,7 +325,7 @@ object CawdEngine {
       .repartition(col("file"))
       .sortWithinPartitions(col("file"), col("seq"))
       .mapPartitions { rows =>
-        val conf = new Configuration()
+        val conf = graft.HadoopConf.shared
         val res = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
         var cur: String = null
         var dest: String = null
@@ -416,7 +414,7 @@ object CawdEngine {
           val tc = org.apache.spark.TaskContext.get()
           val pid = if (tc != null) tc.partitionId() else 0
           val p = new Path(s"$sidecarDir/part-$pid.tsv")
-          val fs = p.getFileSystem(new Configuration())
+          val fs = p.getFileSystem(graft.HadoopConf.shared)
           val os = fs.create(p, true)
           try {
             val w = new java.io.BufferedWriter(
@@ -496,7 +494,7 @@ object CawdEngine {
       .repartition(graft.Sizing.cores(spark))
       .map { case (file, off, len, sha) =>
         val p = new Path(file)
-        val fs = p.getFileSystem(new Configuration())
+        val fs = p.getFileSystem(graft.HadoopConf.shared)
         val fileLen = fs.getFileStatus(p).getLen
         val md = java.security.MessageDigest.getInstance("SHA-1")
         val buf = new Array[Byte](1 << 20)

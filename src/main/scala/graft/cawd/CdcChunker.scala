@@ -1,6 +1,5 @@
 package graft.cawd
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -80,7 +79,7 @@ object CdcChunker {
   private[cawd] def candidatesInSegment(pathStr: String, segStart: Long,
                                         segEnd: Long): Seq[Long] = {
     val p = new Path(pathStr)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(graft.HadoopConf.shared)
     val warm = math.max(0L, segStart - (WindowBytes - 1))
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     val buf = new Array[Byte](4 << 20)
@@ -145,7 +144,7 @@ object CdcChunker {
     val segs = CawdEngine.spreadFiles(spark, files)
       .flatMap { case (path, rank) =>
         val p = new Path(path)
-        val len = p.getFileSystem(new Configuration()).getFileStatus(p).getLen
+        val len = p.getFileSystem(graft.HadoopConf.shared).getFileStatus(p).getLen
         if (len == 0) Iterator.single((path, rank, 0L, 0L, 0L))
         else (0L until len by CawdEngine.SplitBytes).iterator.map { s =>
           (path, rank, s, math.min(s + CawdEngine.SplitBytes, len), len)

@@ -1,6 +1,5 @@
 package graft.cawd
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.orc.{OrcFile, Reader, TypeDescription}
 import org.apache.orc.OrcProto
@@ -69,7 +68,7 @@ object OrcChunker {
     * [[CawdEngine.chunkFiles]]) fills them in.
     */
   def plan(pathStr: String, fileRank: Int, mode: Mode): Seq[FileChunk] = {
-    val conf = new Configuration()
+    val conf = graft.HadoopConf.shared
     val path = new Path(pathStr)
     val fs = path.getFileSystem(conf)
     val fileLen = fs.getFileStatus(path).getLen

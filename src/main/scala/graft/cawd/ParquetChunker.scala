@@ -2,7 +2,6 @@ package graft.cawd
 
 import java.io.ByteArrayInputStream
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.{PageType, Util}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -40,7 +39,7 @@ object ParquetChunker {
     * chunks carry offsets/sizes with empty signatures.
     */
   def plan(pathStr: String, fileRank: Int): Seq[FileChunk] = {
-    val conf = new Configuration()
+    val conf = graft.HadoopConf.shared
     val path = new Path(pathStr)
     val fs = path.getFileSystem(conf)
     val fileLen = fs.getFileStatus(path).getLen

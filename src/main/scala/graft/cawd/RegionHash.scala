@@ -2,7 +2,6 @@ package graft.cawd
 
 import java.security.MessageDigest
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 import scala.collection.mutable
@@ -41,7 +40,7 @@ object RegionHash {
       content = Array.emptyByteArray))
     if (nonEmpty.isEmpty) return (emptyHashed ++ Nil).sortBy(_.seq)
     val path = new Path(pathStr)
-    val fs = path.getFileSystem(new Configuration())
+    val fs = path.getFileSystem(graft.HadoopConf.shared)
     val n = nonEmpty.length
     val starts = nonEmpty.map(_.start).toArray
     val ends = nonEmpty.map(m => m.start + m.size).toArray

@@ -1,6 +1,5 @@
 package graft.cawd
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -111,7 +110,7 @@ object StreamingEngine {
     */
   def readStore(spark: SparkSession, storeDir: String): Option[DataFrame] = {
     val p = new Path(storeDir)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(graft.HadoopConf.shared)
     if (!fs.exists(p) || !fs.listStatus(p).exists(_.getPath.getName.startsWith("batch=")))
       return None
     Some(spark.read.schema(StoreSchema)
@@ -124,7 +123,7 @@ object StreamingEngine {
     */
   private def batchIds(storeDir: String): Seq[Long] = {
     val p = new Path(storeDir)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(graft.HadoopConf.shared)
     val ids =
       if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).map(_.getPath.getName).toSeq
@@ -153,7 +152,7 @@ object StreamingEngine {
     */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
     val p = new Path(storeDir)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(graft.HadoopConf.shared)
     val batches = batchIds(storeDir)
     if (batches.length <= 2) return
     val protectedId = batches.last // possibly in-flight; never rewritten
@@ -187,7 +186,7 @@ object StreamingEngine {
                   maxAgeMs: Long = Long.MaxValue): Unit = {
     require(keepBatches >= 1, "retention must keep at least the newest batch")
     val p = new Path(storeDir)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(graft.HadoopConf.shared)
     val batches = batchIds(storeDir)
     if (batches.isEmpty) return
     val now = System.currentTimeMillis()

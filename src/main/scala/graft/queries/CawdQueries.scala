@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -180,7 +179,7 @@ object CawdQueries {
       val files = CawdEngine.listFiles(d, ".parquet")
       val sizes = files.map { case (f, _) =>
         val p = new Path(f)
-        val fs = p.getFileSystem(new Configuration())
+        val fs = p.getFileSystem(graft.HadoopConf.shared)
         (p.getName, fs.getFileStatus(p).getLen)
       }
       CawdExport.write(s, d, "c07", None)(

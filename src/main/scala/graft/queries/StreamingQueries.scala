@@ -104,7 +104,7 @@ object StreamingQueries {
 
   private val deferred = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private lazy val cleanupHook: Unit = sys.addShutdownHook {
-    val conf = new Configuration()
+    val conf = graft.HadoopConf.shared
     deferred.forEach { d =>
       try { val p = new Path(d); p.getFileSystem(conf).delete(p, true) }
       catch { case _: Throwable => () }
@@ -122,7 +122,7 @@ object StreamingQueries {
   private def releaseStreamScratch(dirs: String*): Unit = {
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     catch { case _: Throwable => () }
-    val conf = new Configuration()
+    val conf = graft.HadoopConf.shared
     dirs.foreach { d =>
       try { val p = new Path(d); p.getFileSystem(conf).delete(p, true) }
       catch { case _: Throwable => deferDelete(d) }
@@ -466,7 +466,7 @@ object StreamingQueries {
           .orderBy("doc_id"))),
 
     "s01_streaming_dedup" -> ((s, d) => {
-      val conf = new Configuration()
+      val conf = graft.HadoopConf.shared
       val root = new Path(s"$scratchRoot/${UUID.randomUUID()}")
       val fs = root.getFileSystem(conf)
       // the input staging dir lives on the CORPUS's filesystem (tmpdir is

@@ -201,7 +201,7 @@ private[sources] class ChunkScan(props: Map[String, String], required: StructTyp
     // back are the same either way; read parallelism still scales with
     // BYTES via the in-file buckets).
     val totalBytes = {
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = graft.HadoopConf.shared
       files.map { case (f, _) =>
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen

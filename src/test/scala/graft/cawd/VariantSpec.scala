@@ -2,7 +2,7 @@ package graft.cawd
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{CachedEntries, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,24 +18,7 @@ class VariantSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession = GraftSession.get("variant-spec")
   private var dir: String = _
 
-  override def beforeAll(): Unit = {
-    dir = Files.createTempDirectory("variant-spec").toString
-    val df = spark.range(0, 20000).select(
-      col("id"),
-      (col("id") % 13).cast("double").as("d"),
-      concat(lit("text-"), col("id") % 97).as("s"))
-    def single(out: String, name: String, write: String => Unit): Unit = {
-      write(out)
-      val part = new java.io.File(out).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(name.dropWhile(_ != '.')))
-        .get
-      Files.copy(part.toPath, java.nio.file.Paths.get(dir, name))
-    }
-    val work = Files.createTempDirectory("variant-spec-src").toString
-    single(s"$work/orc", "t.orc", df.orderBy("id").coalesce(1).write
-      .option("compression", "zlib").option("orc.stripe.size", "65536").orc(_))
-    single(s"$work/pq", "t.parquet", df.orderBy("id").coalesce(1).write.parquet(_))
-  }
+  override def beforeAll(): Unit = dir = VariantFixture.write(spark, "variant-spec")
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
@@ -112,6 +95,21 @@ class VariantSpec extends AnyFunSuite with BeforeAndAfterAll {
     val store = Files.createTempDirectory("variant-store-sp").toString
     intercept[IllegalArgumentException](
       dedupStats(Variant.OrcSp, duplicate = false, Some(store)))
+  }
+
+  test("a duplicate ingest holds one cached relation while its sink runs") {
+    val cache = spark.sharedState.cacheManager
+    for (v <- Variant.all) {
+      spark.catalog.clearCache()
+      val (held, rows) = CawdEngine.ingest[(Int, Long)](v,
+        v.chunk(spark, CawdEngine.listFiles(dir, v.suffix)), duplicate = true,
+        store = None, clustered = false) { (_, status) =>
+        (CachedEntries(cache), status.count())
+      }
+      assert(held == 1, s"${v.name}: $held cached relations while the sink ran")
+      assert(rows > 0, v.name)
+      assert(cache.isEmpty, s"${v.name}: ingest left a cached relation behind")
+    }
   }
 
   test("byName resolves the five CLI modes and nothing else") {
