@@ -12,10 +12,13 @@ count no wins).
 Usage:
   python3 dev/perfpairs.py --base <parent checkout> --head <this checkout> \\
       --workloads orc_versions,stream_waves --seeds 1 2 3 4 5 6 7 8 9 10 \\
-      [--seconds 8] [--trace 0] [--out pairs.jsonl]
+      [--trace 0] [--out pairs.jsonl]
 
-It refuses to run when the two checkout paths differ in length: the engine's
-traffic metric counts file-path bytes, so a longer path reads as more traffic.
+Every leg runs for the run_seconds of the head's BENCHMARK.json, as
+perfbench/spread.py does. It refuses to run when the base's BENCHMARK.json
+names another run length, or when the two checkout paths differ in length:
+the engine's traffic metric counts file-path bytes, so a longer path reads
+as more traffic.
 Raw legs are appended to --out (one JSON object a line; a pair is one seed
 of one invocation), and --report-only prints the summary of an existing
 --out file without running anything.
@@ -38,13 +41,14 @@ def quartiles(xs):
     return q[0], statistics.median(xs), q[2]
 
 
-def directions(checkout):
-    """metric name -> "higher" / "lower", from the checkout's BENCHMARK.json."""
-    try:
-        with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
-            spec = json.load(fh)
-    except (OSError, ValueError):
-        return {}
+def benchmark(checkout):
+    """The checkout's BENCHMARK.json."""
+    with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
+        return json.load(fh)
+
+
+def directions(spec):
+    """metric name -> "higher" / "lower", from a BENCHMARK.json."""
     return {m["name"]: m["better"]
             for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
 
@@ -105,14 +109,19 @@ def main():
     ap.add_argument("--head", required=True, help="checkout under test")
     ap.add_argument("--workloads", default="orc_versions")
     ap.add_argument("--seeds", type=int, nargs="+", default=list(range(1, 11)))
-    ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", default="perfpairs.jsonl")
     ap.add_argument("--report-only", action="store_true")
     a = ap.parse_args()
 
     base, head = os.path.realpath(a.base), os.path.realpath(a.head)
+    spec = benchmark(head)
     if not a.report_only:
+        seconds = spec["run_seconds"]
+        base_seconds = benchmark(base).get("run_seconds")
+        if base_seconds != seconds:
+            sys.exit(f"run_seconds differs: base {base_seconds}, head {seconds}; "
+                     "pairs of different run lengths do not compare")
         if len(base) != len(head):
             sys.exit(f"checkout paths differ in length ({len(base)} vs {len(head)} "
                      f"bytes): {base} vs {head}; traffic_pct counts path bytes, "
@@ -126,7 +135,7 @@ def main():
                 if i % 2:
                     order.reverse()
                 for side, checkout in order:
-                    r = run_leg(checkout, w, seed, a.seconds, a.trace)
+                    r = run_leg(checkout, w, seed, seconds, a.trace)
                     leg = {"workload": w, "seed": seed, "side": side, "series": series,
                            "first": order[0][0], "trace": a.trace, "result": r}
                     with open(a.out, "a") as fh:
@@ -136,7 +145,7 @@ def main():
                           f"ingest_mbps={ing}", flush=True)
     with open(a.out) as fh:
         legs = [json.loads(l) for l in fh if l.strip()]
-    summarize(legs, directions(head))
+    summarize(legs, directions(spec))
 
 
 if __name__ == "__main__":

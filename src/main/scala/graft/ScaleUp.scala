@@ -58,7 +58,7 @@ object ScaleUp {
       df.repartition(1).write.mode("overwrite")
         .option("parquet.block.size", (16L * 1024 * 1024).toString)
         .parquet(tmp)
-      val conf = spark.sparkContext.hadoopConfiguration
+      val conf = HadoopConf.shared
       val fs = new Path(dest).getFileSystem(conf)
       val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
       val target = new Path(s"$dest/$name.parquet")

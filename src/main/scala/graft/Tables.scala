@@ -39,7 +39,7 @@ object Tables {
     */
   private[graft] def tableBytes(s: SparkSession, d: String, table: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$d/$table.parquet")
-    try Some(p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    try Some(p.getFileSystem(HadoopConf.shared)
       .getContentSummary(p).getLength)
     catch { case scala.util.control.NonFatal(_) => None }
   }

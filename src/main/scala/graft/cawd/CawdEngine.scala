@@ -393,7 +393,7 @@ object CawdEngine {
     // previous run with more partitions would leave orphan partials that
     // corrupt the combine — clear it explicitly, before the write job
     val scp = new Path(sidecarDir)
-    scp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    scp.getFileSystem(graft.HadoopConf.shared)
       .delete(scp, true)
     cover
       .select(col("file"), col("seq"), col("start"), col("size"), col("content"))

@@ -65,7 +65,7 @@ object CawdExport {
   def write(spark: SparkSession, sfDir: String, tag: String,
             key: Option[String])(body: String => Unit): String = {
     val out = dir(sfDir, tag)
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(out).getFileSystem(graft.HadoopConf.shared)
     val marker = new Path(out, MarkerName)
     // any failure reading the marker (missing, truncated, checksum-corrupt
     // sidecar) means "not valid" and forces a rebuild — a damaged marker
@@ -97,7 +97,7 @@ object CawdExport {
     */
   def corpusContentKey(spark: SparkSession, paths: Seq[String],
                        version: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = graft.HadoopConf.shared
     val parts = paths.sorted.map { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)

@@ -36,7 +36,7 @@ object CawdQueries {
     val key = CawdExport.corpusContentKey(spark,
       tables.map { case (t, _) => s"$sfDir/$t.parquet" }, "orc-fixtures-v1")
     CawdExport.write(spark, sfDir, "orc", Some(key)) { outDir =>
-      val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = new Path(outDir).getFileSystem(graft.HadoopConf.shared)
       tables.foreach { case (t, k) =>
         val tmp = new Path(outDir, s"_tmp_$t")
         spark.read.parquet(s"$sfDir/$t.parquet")

@@ -50,7 +50,7 @@ object MediaQueries {
   private def docRowCount(s: SparkSession, d: String): Long = {
     import org.apache.hadoop.fs.Path
     val p = new Path(s"$d/documents.parquet")
-    val conf = s.sparkContext.hadoopConfiguration
+    val conf = graft.HadoopConf.shared
     val fs = p.getFileSystem(conf)
     val st = fs.getFileStatus(p)
     val files = if (st.isDirectory)
