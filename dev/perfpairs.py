@@ -22,6 +22,15 @@ as more traffic.
 Raw legs are appended to --out (one JSON object a line; a pair is one seed
 of one invocation), and --report-only prints the summary of an existing
 --out file without running anything.
+
+With --claim <metric>@<workload> it also judges the legs as a claimed gain
+is judged: the claim holds when the head is better in at least 9 of every
+10 pairs (a tie counts for neither side) and the median gain exceeds the
+base's quartile spread (q3 - q1). Every other end-to-end metric of
+BENCHMARK.json, on every workload in the legs, is then checked against its
+bound: the head's median may be worse than the base's by at most `bound`
+(a fraction of the base's median). The exit status is 1 when the claim
+does not hold or a bound is broken.
 """
 import argparse
 import json
@@ -68,15 +77,99 @@ def run_leg(checkout, workload, seed, seconds, trace):
     return out
 
 
-def summarize(legs, better):
-    """Print, per workload and metric, both sides' spread and the head's wins."""
+def complete_pairs(legs):
+    """(workload, trace) -> the pairs that have both a base and a head leg."""
     by_pair = {}
     for leg in legs:
         key = (leg["workload"], leg["trace"], leg["series"], leg["seed"])
         by_pair.setdefault(key, {})[leg["side"]] = leg
-    for workload, trace in sorted({k[:2] for k in by_pair}):
-        pairs = [p for k, p in sorted(by_pair.items())
-                 if k[:2] == (workload, trace) and {"base", "head"} <= p.keys()]
+    out = {}
+    for k, p in sorted(by_pair.items()):
+        if {"base", "head"} <= p.keys():
+            out.setdefault(k[:2], []).append(p)
+    return out
+
+
+def values(pairs, metric):
+    """The (base, head) values of `metric` in the pairs where both are numbers."""
+    vals = [(p["base"]["result"]["metrics"].get(metric, {}).get("value"),
+             p["head"]["result"]["metrics"].get(metric, {}).get("value")) for p in pairs]
+    return [(b, h) for b, h in vals
+            if isinstance(b, (int, float)) and isinstance(h, (int, float))]
+
+
+def wins(vals, direction):
+    """Pairs in which the head is strictly better; ties count for neither."""
+    return sum(1 for b, h in vals
+               if (direction == "higher" and h > b) or (direction == "lower" and h < b))
+
+
+def judge_claim(pairs, metric, direction):
+    """(holds, text): at least 9 wins in 10 pairs, and a median gain above
+    the base's quartile spread."""
+    vals = values(pairs, metric)
+    if not vals:
+        return False, "no pair has this metric"
+    won = wins(vals, direction)
+    bq = quartiles([b for b, _ in vals])
+    hq = quartiles([h for _, h in vals])
+    gain = hq[1] - bq[1] if direction == "higher" else bq[1] - hq[1]
+    spread = bq[2] - bq[0]
+    enough = won * 10 >= 9 * len(vals)
+    holds = enough and gain > spread
+    text = (f"wins {won}/{len(vals)} ({'>=' if enough else '<'} 9 in 10); "
+            f"median {bq[1]:.4g} -> {hq[1]:.4g}, gain {gain:.4g} "
+            f"{'>' if gain > spread else '<='} base q3-q1 {spread:.4g}")
+    if len(vals) < 10:
+        text += f"; only {len(vals)} pairs, the rule asks for 10"
+    return holds, text
+
+
+def within_bound(pairs, metric, direction, bound):
+    """(inside, text): the head's median is worse than the base's by at most
+    `bound`, a fraction of the base's median."""
+    vals = values(pairs, metric)
+    if not vals:
+        return True, "no pair has this metric"
+    b = statistics.median([b for b, _ in vals])
+    h = statistics.median([h for _, h in vals])
+    worse = (b - h if direction == "higher" else h - b)
+    limit = abs(b) * bound
+    inside = worse <= limit
+    return inside, (f"median {b:.4g} -> {h:.4g}, worse by {worse:.4g} "
+                    f"({'<=' if inside else '>'} bound {bound:g} x base = {limit:.4g})")
+
+
+def judge(legs, spec, claim):
+    """Print the claim's verdict and every other end-to-end bound's; returns
+    whether all of them hold."""
+    metric, _, workload = claim.partition("@")
+    e2e = {m["name"]: m for m in spec.get("end_to_end", [])}
+    if metric not in e2e or not workload:
+        sys.exit(f"--claim {claim}: want <end-to-end metric>@<workload>, "
+                 f"metrics: {', '.join(e2e)}")
+    ok = True
+    print()
+    for (w, trace), pairs in complete_pairs(legs).items():
+        for m in e2e.values():
+            if (m["name"], w) == (metric, workload):
+                holds, text = judge_claim(pairs, metric, m["better"])
+                print(f"claim {metric}@{w} (trace {trace}): "
+                      f"{'HOLDS' if holds else 'NOT MET'}: {text}")
+            else:
+                holds, text = within_bound(pairs, m["name"], m["better"], m["bound"])
+                print(f"bound {m['name']}@{w} (trace {trace}): "
+                      f"{'inside' if holds else 'BROKEN'}: {text}")
+            ok = ok and holds
+    if workload not in {w for w, _ in complete_pairs(legs)}:
+        print(f"claim {claim}: NOT MET: no complete pair of workload {workload}")
+        ok = False
+    return ok
+
+
+def summarize(legs, better):
+    """Print, per workload and metric, both sides' spread and the head's wins."""
+    for (workload, trace), pairs in complete_pairs(legs).items():
         bad = [(p["base"]["seed"], side) for p in pairs for side in ("base", "head")
                if not p[side]["result"].get("correct") or p[side]["result"].get("failed")]
         print(f"\n{workload} (trace {trace}): {len(pairs)} pairs"
@@ -86,21 +179,16 @@ def summarize(legs, better):
         print(f"  {'metric':34} {'base q1/med/q3':>26} {'head q1/med/q3':>26} "
               f"{'head/base':>9} {'wins':>6}")
         for m in names:
-            vals = [(p["base"]["result"]["metrics"].get(m, {}).get("value"),
-                     p["head"]["result"]["metrics"].get(m, {}).get("value")) for p in pairs]
-            vals = [(b, h) for b, h in vals
-                    if isinstance(b, (int, float)) and isinstance(h, (int, float))]
+            vals = values(pairs, m)
             if not vals:
                 continue
             bq = quartiles([b for b, _ in vals])
             hq = quartiles([h for _, h in vals])
             ratio = hq[1] / bq[1] if bq[1] else float("nan")
             d = better.get(m)
-            wins = sum(1 for b, h in vals
-                       if (d == "higher" and h > b) or (d == "lower" and h < b))
             fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
             print(f"  {m:34} {fmt(bq):>26} {fmt(hq):>26} {ratio:>9.3f} "
-                  f"{(f'{wins}/{len(vals)}' if d else '-'):>6}")
+                  f"{(f'{wins(vals, d)}/{len(vals)}' if d else '-'):>6}")
 
 
 def main():
@@ -112,6 +200,8 @@ def main():
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", default="perfpairs.jsonl")
     ap.add_argument("--report-only", action="store_true")
+    ap.add_argument("--claim", metavar="METRIC@WORKLOAD",
+                    help="judge a claimed gain and every other end-to-end bound")
     a = ap.parse_args()
 
     base, head = os.path.realpath(a.base), os.path.realpath(a.head)
@@ -146,6 +236,8 @@ def main():
     with open(a.out) as fh:
         legs = [json.loads(l) for l in fh if l.strip()]
     summarize(legs, directions(spec))
+    if a.claim and not judge(legs, spec, a.claim):
+        sys.exit(1)
 
 
 if __name__ == "__main__":

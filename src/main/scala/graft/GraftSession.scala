@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   *   `events.ts` column is TIMESTAMP(NANOS) (written by pyarrow), which
   *   Spark 4 cannot map natively; we read it as nanos-since-epoch LONG and
   *   convert in [[Tables.events]].
-  * - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]]: a
-  *   repeated plan reuses its compiled, JIT-warm classes.
+  * - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]] and
+  *   artifact isolation off: a repeated plan reuses its compiled, JIT-warm
+  *   classes, in a child session and a streaming query too.
   */
 object GraftSession {
 
@@ -57,11 +58,15 @@ object GraftSession {
     *     sharing one child's mutable SQLConf race (the round-7
     *     statsRollup-vs-micro-batch finding) — separation by tag is the
     *     fix, so callers must not share a tag across concurrent uses with
-    *     different sizing.
+    *     different sizing. A caller that re-sizes per use takes one tag
+    *     per user: each stream's latency child is tagged by its checkpoint
+    *     (`StreamingEngine.latencyTag`). A caller whose sizing never varies
+    *     (`CawdEngine.ingestSession`: the core count) can share one.
     *
     * Why AQE defaults OFF here: every child in this engine exists for
     * many-small-stage work (iterative star contraction, micro-batches,
-    * ~60-stage sub-second vector plans) where AQE's per-stage
+    * ~60-stage sub-second vector plans, the batch dedup ingest, whose
+    * small s+p ingest went from 12 jobs to 2) where AQE's per-stage
     * materialization barriers and per-job driver round-trips dominate wall
     * time (three independent round-6/7 measurements; SCALE.md). What AQE
     * would buy — skew splitting, byte-coalescing — is design-bounded in
@@ -198,6 +203,14 @@ object GraftSession {
       .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
         (1L << 30).toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      // Per-session artifact isolation gives every session its own executor
+      // class loader, and the generated-class cache is keyed by (class
+      // loader, source). A streaming query runs on a clone of its session
+      // (a new session id), so every stream start compiled its executor-side
+      // classes again: 2 classes per `stream_waves` wave after the first,
+      // 0 with isolation off. The engine adds no session artifacts (jars,
+      // class files) for isolation to separate.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "2g")
       .getOrCreate()

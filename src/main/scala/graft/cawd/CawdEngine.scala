@@ -144,6 +144,9 @@ object CawdEngine {
     * file — the batch analogue of the reference's per-file transfer wall
     * time. Excluded from oracle-checked outputs (timings are
     * nondeterministic); surfaced by the library pipelines below.
+    * [[dedupStats]] does not call it: [[Stats.fromStatus]] maps the same
+    * rows to the same sums inside its one aggregate. It is the timing
+    * aggregate of a caller that runs the steps one by one.
     */
   def timingStats(chunks: Dataset[FileChunk]): DataFrame =
     chunks.toDF().filter(col("parentSeq") === -2)
@@ -216,6 +219,12 @@ object CawdEngine {
     * grown by CLI runs, library calls, and the streaming engine
     * interchangeably. Only [[Variant.Flat]] variants take a store; any
     * other throws IllegalArgumentException.
+    *
+    * The run plans on [[ingestSession]], and its stats are ONE metric
+    * aggregate: the timing rows join the status rows before
+    * [[Stats.fromStatus]] (which maps them to their timing metrics) instead
+    * of a second aggregate ([[timingStats]]) unioned after it. Without a
+    * store it runs two jobs: the checkpoint of the rollup, then its collect.
     */
   def dedupStats(spark: SparkSession, variant: Variant, files: Seq[(String, Int)],
                  duplicate: Boolean = false,
@@ -223,18 +232,34 @@ object CawdEngine {
     // CLI bulk ingest is not latency-bound: always take the clustered store
     // write, so one run lands ≤ NumSigBuckets sorted files however many
     // misses it has.
-    ingest(variant, variant.chunk(spark, files), duplicate,
+    ingest(variant, variant.chunk(ingestSession(spark), files), duplicate,
       storeDir.map(dir => (dir, StreamingEngine.nextCliBatchId(spark, dir))),
       clustered = true) { (chunks, status) =>
+      val timing = chunks.toDF().filter(col("parentSeq") === -2)
+        .withColumn("status", lit(null).cast("string"))
       // materialized before ingest releases the caches it reads
-      Stats.rollup(Stats.fromStatus(status, variant.emitSizes)
-        .unionByName(timingStats(chunks)))
+      Stats.rollup(Stats.fromStatus(status.unionByName(timing), variant.emitSizes))
         .localCheckpoint(true)
     }
 
+  /** The session a batch ingest ([[dedupStats]], a c-pack dedup row) chunks
+    * and plans on: an AQE-off child with the parent's starting shuffle
+    * partition count ([[graft.Sizing.cores]]). Its plan holds only windows,
+    * aggregates and explicitly hinted broadcast probes, so AQE had nothing
+    * to re-plan. What it did was run every stage as its own job, re-plan
+    * between them, and coalesce the small shuffles below the core count.
+    * A stream micro-batch keeps its latency child and a backfill its AQE
+    * child ([[StreamingEngine.processBatch]]).
+    */
+  private[graft] def ingestSession(spark: SparkSession): SparkSession =
+    graft.GraftSession.child(spark, "cawd-ingest", aqe = false,
+      shufflePartitions = Some(graft.Sizing.cores(spark)))
+
   /** The one batch dedup step, shared by a CLI run ([[dedupStats]]), a
     * stream micro-batch ([[StreamingEngine.processBatch]]) and a c-pack
-    * dedup row (`graft.queries.CawdQueries`), in order:
+    * dedup row (`graft.queries.CawdQueries`). It plans on `chunked`'s
+    * session, which the caller picks: [[ingestSession]] for a batch run,
+    * the stream's latency or backfill child for a micro-batch. In order:
     *   1. cache `chunked`, the one relation cached for the chunks; with
     *      `duplicate` each file is followed by a byte-identical copy
     *      derived from the cached rows;

@@ -18,13 +18,15 @@ import org.apache.spark.sql.functions._
   *
   *   - the probed rows shuffle once by their key (`signature`) and sort by
   *     arrival order inside it; `rank() == 1` marks the first occurrence —
-  *     one exchange, and no aggregate joined back onto the rows;
+  *     one window in one `select`, one exchange, and no aggregate joined
+  *     back onto the rows;
   *   - a pre-existing ("warm") store is one more `left` join on `signature`
   *     against a pruned, broadcast hit set.
   *
   * Hierarchical stripe→column fallback (SURVEY.md §2.4 J5) is three such
-  * passes ([[hierarchicalStatus]]): stripes and file footers in one
-  * first-occurrence pass; one pass per stripe group that applies the
+  * passes over one read of the chunks ([[hierarchicalStatus]]): stripes and
+  * file footers in one first-occurrence pass, in which every other row is
+  * a group of its own; one pass per stripe group that applies the
   * delegation gate and hands the stripe's outcome to its linked chunks and
   * columns; and a first-occurrence pass over the columns of delegated
   * stripes, whose store — because the receiver derives column entries from
@@ -45,17 +47,14 @@ object Dedup {
     val FileHeaderFixed: Long = 4 + 8
   }
 
-  /** Working columns of [[markFirstOccurrence]]. */
+  /** Working columns of [[markFirstOccurrence]]'s store probe. */
   private val IsFirstCol = "is_first"
   private val InStoreCol = "in_store"
 
-  /** Working columns of [[hierarchicalStatus]]: a row's stripe outcome in
-    * pass 2 and its status before pass 3, where a column still to probe
-    * reads [[ColumnProbe]].
+  /** Working column of [[hierarchicalStatus]]: the outcome of a row's
+    * stripe group, from pass 2 to pass 3.
     */
   private val OutcomeCol = "stripe_outcome"
-  private val DecidedCol = "decided"
-  private val ColumnProbe = "column_probe"
 
   /** Appends each row's store `status`: "miss" for the first occurrence of
     * its key in strict (fileRank, ord) arrival order, "hit" for every
@@ -74,18 +73,9 @@ object Dedup {
   def markFirstOccurrence(chunks: DataFrame, ordCol: String,
                           store: Option[DataFrame] = None,
                           keys: Seq[Column] = Seq(col("signature"))): DataFrame = {
-    // One pass: shuffle by key, sort by arrival, rank — one exchange per
-    // probe. A `min` aggregate joined back onto the rows needs two exchanges
-    // and two jobs, and the cascade is bound by jobs, not bytes (AQE runs
-    // one job per stage). A hot key (zero-filled chunks are common in dedup
-    // corpora) still lands in one task, but the window buffers a group in
-    // memory only up to `spark.sql.windowExec.buffer.in.memory.threshold`
-    // rows and then in a spillable external sorter, so its rows spill
-    // instead of sitting whole on the heap.
-    val arrival = Window.partitionBy(keys: _*)
-      .orderBy(col("fileRank"), col(ordCol))
-    val marked = chunks.withColumn(IsFirstCol, rank().over(arrival) === 1)
-    val probed = store match {
+    val first = firstOccurrence(ordCol, keys)
+    store match {
+      case None => chunks.select(col("*"), first.as("status"))
       // Signature-sorted store (the StreamingEngine layout): the batch's
       // distinct signatures are pushed into the store scan, so the store
       // side is read narrow and never shuffled, and the hits broadcast back
@@ -94,6 +84,7 @@ object Dedup {
       // probe sets (a backfill batch) fall back to a semi join rather than
       // a driver-breaking broadcast.
       case Some(s) =>
+        val marked = chunks.withColumn(IsFirstCol, first === "miss")
         val probeSigs = chunks.select(col("signature")).distinct()
         // ONE driver action per probe either way. Common (bounded) case: a
         // capped collect yields the exact probe set, pushed as In
@@ -106,7 +97,7 @@ object Dedup {
         // fall back to a count for broadcast sizing and a semi join.
         val capped = probeSigs.limit(MaxInPushdownSigs + 1).collect()
           .map(_.getAs[Array[Byte]](0))
-        if (capped.length <= MaxInPushdownSigs) {
+        val probed = if (capped.length <= MaxInPushdownSigs) {
           if (capped.isEmpty) marked.withColumn(InStoreCol, lit(false))
           else {
             // The In set is the EXACT probe set (collected from a distinct
@@ -134,22 +125,39 @@ object Dedup {
               .withColumn(InStoreCol, coalesce(col(InStoreCol), lit(false)))
           }
         } else {
-          val probeSide =
-            if (probeSigs.count() <= MaxBroadcastProbeSigs) broadcast(probeSigs)
-            else probeSigs
-          val hits = s.join(probeSide, Seq("signature"), "left_semi")
+          // hits ⊆ probes, so a probe set small enough to broadcast into the
+          // semi join gives a hit set small enough to broadcast back onto
+          // the batch. Both hints are explicit: with AQE off (the ingest
+          // posture) nothing else turns the unknown-stats hit set into a
+          // broadcast, and a sort-merge join would shuffle the whole batch.
+          val small = probeSigs.count() <= MaxBroadcastProbeSigs
+          def hint(df: DataFrame) = if (small) broadcast(df) else df
+          val hits = s.join(hint(probeSigs), Seq("signature"), "left_semi")
             .select(col("signature")).distinct()
             .withColumn(InStoreCol, lit(true))
-          marked.join(hits, Seq("signature"), "left")
+          marked.join(hint(hits), Seq("signature"), "left")
             .withColumn(InStoreCol, coalesce(col(InStoreCol), lit(false)))
         }
-      case None => marked.withColumn(InStoreCol, lit(false))
+        probed
+          .withColumn("status",
+            when(col(InStoreCol) || !col(IsFirstCol), lit("hit")).otherwise(lit("miss")))
+          .drop(IsFirstCol, InStoreCol)
     }
-    probed
-      .withColumn("status",
-        when(col(InStoreCol) || !col(IsFirstCol), lit("hit")).otherwise(lit("miss")))
-      .drop(IsFirstCol, InStoreCol)
   }
+
+  /** `miss` on the first row of its key in (fileRank, `ordCol`) order, `hit`
+    * on every later row. One pass: shuffle by key, sort by arrival, rank —
+    * one exchange per probe. A `min` aggregate joined back onto the rows
+    * needs two exchanges and two jobs, and the cascade is bound by jobs, not
+    * bytes. A hot key (zero-filled chunks are common in dedup corpora) still
+    * lands in one task, but the window buffers a group in memory only up to
+    * `spark.sql.windowExec.buffer.in.memory.threshold` rows and then in a
+    * spillable external sorter, so its rows spill instead of sitting whole
+    * on the heap.
+    */
+  private def firstOccurrence(ordCol: String, keys: Seq[Column]): Column =
+    when(rank().over(Window.partitionBy(keys: _*)
+      .orderBy(col("fileRank"), col(ordCol))) === 1, lit("miss")).otherwise(lit("hit"))
 
   /** Probe sets up to this many distinct signatures broadcast into the
     * store semi-join (~30 MB of 20 B signatures); larger batches (backfill)
@@ -208,18 +216,20 @@ object Dedup {
     * outcome via the `parentSeq` link (J3): on stripe hit they are deduped,
     * on stripe miss they are sent raw.
     *
-    * Three passes in one chain, one exchange each; nothing is cached and no
-    * stage runs twice:
-    *   1. stripes and file footers: one [[markFirstOccurrence]] keyed by
-    *      (chunkType, signature), so the two stores stay apart;
+    * Three passes in one chain, each one `select` with one window and one
+    * exchange; nothing is cached, no stage runs twice and the chunk
+    * relation is read once (no union of two filters of it):
+    *   1. every row, windowed by (chunkType, signature) for stripes and file
+    *      footers, so the two stores stay apart, and by its own (file, seq)
+    *      for every other row, a group of one whose status pass 3 sets;
     *   2. one window per stripe group (file, stripe seq): the StripeData row
     *      plus its linked chunks and columns. It applies the delegation gate
-    *      and hands the stripe's outcome to the rest of the group. Every
-    *      other row is a group of one and keeps its status;
-    *   3. the columns of delegated stripes above the threshold: one
-    *      [[markFirstOccurrence]] keyed by signature in (fileRank,
-    *      parentSeq) order. Every other row passes through it in a group
-    *      of its own and keeps its status.
+    *      and hands the stripe's outcome to the rest of the group; the
+    *      columns of stripes that did not delegate are filtered out;
+    *   3. the columns of delegated stripes above the threshold, windowed by
+    *      signature in (fileRank, parentSeq) order. Every other row passes
+    *      through it in a group of its own and takes the status passes 1
+    *      and 2 decided.
     *
     * Returns chunk rows annotated with `status`; column subchunks appear
     * ONLY for delegated stripes (they replace the stripe-data transfer).
@@ -229,18 +239,19 @@ object Dedup {
     // every data row participates (Column subchunks AND linked index/footer
     // chunks carry parentSeq != -1); only timing side-channel rows drop out
     val top = chunks.filter(col("parentSeq") =!= -2)
+    val cols = top.columns.toSeq.map(col)
     val isStripe = col("chunkType") === ChunkType.StripeData
     val isColumn = col("chunkType") === ChunkType.Column
     val isLinked = col("chunkType").isin(ChunkType.StripeIndex, ChunkType.StripeFooter) &&
       col("parentSeq") =!= -1
     val isProbe = isStripe || col("chunkType") === ChunkType.FileFooter
+    // a window key part that puts every row outside `probes` in a group of
+    // its own, so one window pass carries all rows and decides only probes
+    def own(probes: Column): Column = when(!probes, struct(col("file"), col("seq")))
 
-    // 1. whole-stripe and file-footer probes; everything else is raw unless
-    //    pass 2 decides it
-    val probed = markFirstOccurrence(top.filter(isProbe), "seq",
-      keys = Seq(col("chunkType"), col("signature")))
-    val rest = top.filter(!isProbe).withColumn("status",
-      when(isColumn || isLinked, lit(null).cast("string")).otherwise(lit("raw")))
+    // 1. whole-stripe and file-footer probes; only their statuses are read
+    val probed = markFirstOccurrence(top, "seq",
+      keys = Seq(col("chunkType"), col("signature"), own(isProbe)))
 
     // 2. the stripe group. A missed stripe normally delegates its bytes to
     //    per-column probes ("miss_delegated"); a stripe whose stream layout
@@ -249,39 +260,32 @@ object Dedup {
     //    column matching — the one column IS the stripe data, so probing it
     //    after a stripe miss is pure overhead
     //    (`orc/net/StripePlusColumnORCStreamer.java:146,202-209`).
-    //    Linked index/footer chunks dedup on a stripe hit WITHOUT their own
-    //    probe (the server resolves subchunks from the stripe entry,
-    //    `StripePlusColumnORCChunkStore.java:25-31`) — "hit_linked" counts
-    //    dedup bytes but no probe overhead or hit counter; on a miss they
-    //    are sent raw. Columns of stripes that did not delegate are dropped.
+    //    Columns of stripes that did not delegate are dropped.
     val group = Window.partitionBy(col("file"),
       when(isColumn || isLinked, col("parentSeq")).otherwise(col("seq")))
     val stripeStatus = max(when(isStripe, col("status"))).over(group)
     val nCols = count(when(isColumn, lit(1))).over(group)
-    val decided = probed.unionByName(rest)
-      .withColumn(OutcomeCol,
-        when(stripeStatus === "miss" && nCols >= 2, lit("miss_delegated"))
-          .otherwise(stripeStatus))
+    val decided = probed
+      .select(col("*"), when(stripeStatus === "miss" && nCols >= 2, lit("miss_delegated"))
+        .otherwise(stripeStatus).as(OutcomeCol))
       .filter(!isColumn || col(OutcomeCol) === "miss_delegated")
-      .withColumn("status",
-        when(isStripe, col(OutcomeCol))
-          .when(isLinked,
-            when(col(OutcomeCol) === "hit", lit("hit_linked")).otherwise(lit("raw")))
-          .when(isColumn,
-            when(col("size") > smallThreshold, lit(ColumnProbe)).otherwise(lit("small")))
-          .otherwise(col("status")))
-      .drop(OutcomeCol)
 
     // 3. columns of delegated stripes probe the column store; the store grows
     //    with the columns of every delegated stripe (derived inserts, J4),
     //    which is exactly this set ordered by (fileRank, parentSeq) — ties
-    //    within one stripe all miss. Every other row rides the same pass in
-    //    a group of its own, keyed by its (file, seq), so pass 2's output
-    //    is read once.
-    val toProbe = col(DecidedCol) === ColumnProbe
-    markFirstOccurrence(decided.withColumnRenamed("status", DecidedCol), "parentSeq",
-      keys = Seq(col("signature"), when(!toProbe, struct(col("file"), col("seq")))))
-      .withColumn("status", when(toProbe, col("status")).otherwise(col(DecidedCol)))
-      .drop(DecidedCol)
+    //    within one stripe all miss. Linked index/footer chunks dedup on a
+    //    stripe hit WITHOUT their own probe (the server resolves subchunks
+    //    from the stripe entry, `StripePlusColumnORCChunkStore.java:25-31`)
+    //    — "hit_linked" counts dedup bytes but no probe overhead or hit
+    //    counter; on a miss they are sent raw.
+    val toProbe = isColumn && col("size") > smallThreshold
+    val outcome = col(OutcomeCol)
+    decided.select(cols :+
+      when(isStripe, outcome)
+        .when(isLinked, when(outcome === "hit", lit("hit_linked")).otherwise(lit("raw")))
+        .when(toProbe, firstOccurrence("parentSeq", Seq(col("signature"), own(toProbe))))
+        .when(isColumn, lit("small"))
+        .when(isProbe, col("status"))
+        .otherwise(lit("raw")).as("status"): _*)
   }
 }

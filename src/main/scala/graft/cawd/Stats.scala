@@ -14,10 +14,13 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first shape: metric rows are plain (file, metric, value, unit)
   * tuples; the rollup is a hash aggregate with map-side combine, and the
-  * percentile bundle uses the exact built-in `percentile` (sort happens
-  * inside the aggregate buffer, not as a global sort). The two-level rollup
-  * is expressed as `rollup(file)` so Spark computes the per-file and global
-  * rows in ONE pass instead of the reference's aggregate-then-reaggregate.
+  * percentile bundle is ONE exact built-in `percentile` over the three
+  * fractions (one buffer of values per group, sorted inside the aggregate,
+  * not as a global sort). The two-level rollup is expressed as
+  * `rollup(file)` so Spark computes the per-file and global rows in ONE
+  * pass instead of the reference's aggregate-then-reaggregate. A batch run
+  * feeds [[fromStatus]] its status rows and its timing rows together, so
+  * its stats are one metric aggregate under one rollup.
   */
 object Stats {
 
@@ -26,6 +29,7 @@ object Stats {
     * reference's label (`TransferStats.java:41`).
     */
   def rollup(stats: DataFrame): DataFrame = {
+    val pct = col("pct")
     stats
       // rollup order (metric, file): the subtotal cell (metric, NULL) is the
       // all-files global aggregate per metric — the reference's "general" row.
@@ -35,16 +39,15 @@ object Stats {
         sum(col("value")).as("value"),
         count(lit(1)).as("ocurrences"), // sic — reference field name, TransferStats.java:30
         min(col("value")).as("min_v"),
-        round(expr("percentile(value, 0.25)"), 6).as("p25"),
-        round(expr("percentile(value, 0.50)"), 6).as("p50"),
-        round(expr("percentile(value, 0.75)"), 6).as("p75"),
+        percentile(col("value"), array(lit(0.25), lit(0.5), lit(0.75))).as("pct"),
         max(col("value")).as("max_v"))
       // drop the grand-total (NULL, NULL) row; keep exactly the reference's
       // two levels: per-(file, metric) and global-(metric).
       .filter(col("metric").isNotNull)
       .withColumn("file", coalesce(col("file"), lit("general")))
-      .select("file", "metric", "unit", "value", "ocurrences",
-        "min_v", "p25", "p50", "p75", "max_v")
+      .select(col("file"), col("metric"), col("unit"), col("value"), col("ocurrences"),
+        col("min_v"), round(pct(0), 6).as("p25"), round(pct(1), 6).as("p50"),
+        round(pct(2), 6).as("p75"), col("max_v"))
   }
 
   /** A4: derive the wire/dedup metric rows from a dedup-status chunk set.
@@ -66,6 +69,11 @@ object Stats {
     *   - StripeSize = index+data+footer bytes, one row per stripe
     *   - FooterSize = file-footer bytes, one row per file
     *   - TotalBytes = whole file length, one row per file
+    *
+    * A timing side-channel row (`parentSeq == -2`, [[CawdEngine.chunkFiles]])
+    * contributes ONLY its ParsingOverhead / TransferTime milliseconds, the
+    * same sums as [[CawdEngine.timingStats]]; a status relation without
+    * timing rows yields no timing metrics.
     */
   def fromStatus(statusDf: DataFrame, emitSizes: Boolean = false): DataFrame = {
     val probed = col("status").isin("hit", "miss", "miss_delegated")
@@ -95,10 +103,14 @@ object Stats {
     // suffix — TransferTime/ParsingOverhead are Milliseconds — would
     // otherwise silently be labeled Count if ever emitted here
     val noKey = lit(null).cast("long")
-    def entry(metric: Column, value: Column, subkey: Column = noKey,
-              unit: String = Metric.Count): Column =
+    val timing = col("parentSeq") === -2
+    def metricEntry(metric: Column, value: Column, subkey: Column, unit: String): Column =
       struct(metric.as("metric"), subkey.cast("long").as("subkey"),
         value.cast("double").as("value"), lit(unit).as("unit"))
+    // a data entry's metric is null on a timing row, so it is dropped there
+    def entry(metric: Column, value: Column, subkey: Column = noKey,
+              unit: String = Metric.Count): Column =
+      metricEntry(when(!timing, metric), value, subkey, unit)
     def byteEntry(metric: Column, value: Column, subkey: Column = noKey): Column =
       entry(metric, value, subkey, Metric.Bytes)
 
@@ -115,10 +127,13 @@ object Stats {
         ChunkType.StripeIndex, ChunkType.StripeFooter) &&
       (col("chunkType") === ChunkType.StripeData || col("parentSeq") =!= -1)
 
-    // always-emitted byte metrics contribute 0 when a row doesn't qualify,
-    // so every file keeps its full byte-metric vector (zeros included);
-    // counter/size entries with a null metric are dropped before the explode
+    // always-emitted byte metrics contribute 0 when a data row doesn't
+    // qualify, so every file keeps its full byte-metric vector (zeros
+    // included); entries with a null metric are dropped after the explode
     val entries = Seq(
+      metricEntry(when(timing, when(col("chunkType") === ChunkType.PlanStat,
+        lit(Metric.ParsingOverhead)).otherwise(lit(Metric.TransferTime))),
+        col("size"), noKey, Metric.Milliseconds),
       byteEntry(lit(Metric.FileBytes), when(topLevel, col("size")).otherwise(lit(0L))),
       byteEntry(lit(Metric.TransferBytes), when(sent, col("size")).otherwise(lit(0L))),
       byteEntry(lit(Metric.DedupBytes),
@@ -137,10 +152,11 @@ object Stats {
         col("size"), col("seq"))
     ))
 
+    // explode then filter: a `filter(array, lambda)` higher-order function
+    // is evaluated interpreted on every row
     statusDf
-      .select(col("file"),
-        explode(filter(array(entries: _*), e => e.getField("metric").isNotNull))
-          .as("e"))
+      .select(col("file"), explode(array(entries: _*)).as("e"))
+      .filter(col("e.metric").isNotNull)
       .groupBy(col("file"), col("e.metric").as("metric"), col("e.subkey").as("subkey"))
       .agg(sum(col("e.value")).as("value"), first(col("e.unit")).as("unit"))
       .select(col("file"), col("metric"),

@@ -211,7 +211,10 @@ object StreamingEngine {
     // listing then happens driver-side instead of as a per-trigger Spark
     // job, and foreachBatch inherits the same conf. File count per batch
     // is unknown here; processBatch re-sizes shuffle partitions per batch.
-    val sess = latencySession(spark, graft.Sizing.cores(spark))
+    // The child is this stream's own (tagged by its checkpoint), so a
+    // concurrent stream's re-sizing never reaches this one's batches.
+    val tag = latencyTag(checkpointDir)
+    val sess = latencySession(spark, tag, graft.Sizing.cores(spark))
     val files = sess.readStream
       .format("binaryFile")
       .schema(org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat.schema)
@@ -234,15 +237,24 @@ object StreamingEngine {
     files.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(sess, batch, batchId, storeDir, statsDir, fmt, exportDir)
+        processBatch(sess, batch, batchId, storeDir, statsDir, fmt, exportDir,
+          tag = tag)
       }
       .trigger(Trigger.AvailableNow())
       .start()
   }
 
+  /** Tag of the latency child of the stream checkpointed at `checkpointDir`:
+    * one child per stream, because [[processBatch]] re-sizes its child's
+    * shuffle partitions on every micro-batch, and two streams sharing one
+    * child would re-size each other's batches mid-plan.
+    */
+  private def latencyTag(checkpointDir: String): String =
+    s"stream-latency:${new Path(checkpointDir).toUri}"
+
   /** Latency-tuned child session for small micro-batches, memoized per
-    * parent (same SparkContext/executors/cache, private SQLConf — the same
-    * isolation pattern as ConnectedComponents' loop session). AQE is OFF
+    * (parent, stream) (same SparkContext/executors/cache, private SQLConf —
+    * the same isolation pattern as ConnectedComponents' loop session). AQE is OFF
     * here deliberately: AQE materializes every query stage as its own job,
     * and at streaming cadence the per-job driver round-trip IS the latency
     * floor (s01 profiling: ~20 sub-0.3 s stage-jobs per wave, no hot one).
@@ -259,8 +271,8 @@ object StreamingEngine {
   // ≪ one job's scheduling cost; an object-store deployment with
   // slow per-dir RPC should lower this back down.
   private val ListingThreshold = 4096
-  private def latencySession(spark: SparkSession, nFiles: Int): SparkSession =
-    graft.GraftSession.child(spark, "stream-latency", aqe = false,
+  private def latencySession(spark: SparkSession, tag: String, nFiles: Int): SparkSession =
+    graft.GraftSession.child(spark, tag, aqe = false,
       shufflePartitions =
         Some(graft.Sizing.streamLatency(nFiles, graft.Sizing.cores(spark))),
       listingThreshold = Some(ListingThreshold))
@@ -270,13 +282,15 @@ object StreamingEngine {
     * stats (/export) partitions. Idempotent under retries: the probe never
     * reads this batch's own partition, so a re-run recomputes identical
     * statuses and rewrites identical partitions. Batches of more than
-    * `maxRankFiles` files take the backfill path.
+    * `maxRankFiles` files take the backfill path. `tag` names the stream's
+    * latency child ([[latencyTag]]); [[start]] passes its own.
     */
   private[cawd] def processBatch(spark: SparkSession, batch: DataFrame,
                                  batchId: Long, storeDir: String,
                                  statsDir: String, fmt: CawdEngine.Format,
                                  exportDir: Option[String] = None,
-                                 maxRankFiles: Int = MaxRankFiles): Unit = {
+                                 maxRankFiles: Int = MaxRankFiles,
+                                 tag: String = "stream-latency"): Unit = {
     import spark.implicits._
     // ranks are per-batch; earlier batches' chunks are already in the store,
     // so cross-batch ordering is enforced by store membership, not rank.
@@ -298,7 +312,7 @@ object StreamingEngine {
     // million-file backfill wants AQE back on (skew/coalesce rescue) and
     // full-width shuffles, so it runs on its own default-posture child.
     val sess =
-      if (small) latencySession(spark, headPaths.length)
+      if (small) latencySession(spark, tag, headPaths.length)
       else graft.GraftSession.child(spark, "stream-backfill", aqe = true,
         shufflePartitions = Some(graft.Sizing.cores(spark)),
         listingThreshold = Some(ListingThreshold))

@@ -63,8 +63,8 @@ object CawdQueries {
   private def dedupRow(s: SparkSession, sfDir: String, srcDir: String,
                        variant: Variant, tag: String,
                        duplicate: Boolean): DataFrame =
-    CawdEngine.ingest(variant,
-      variant.chunk(s, CawdEngine.listFiles(srcDir, variant.suffix)), duplicate,
+    CawdEngine.ingest(variant, variant.chunk(CawdEngine.ingestSession(s),
+      CawdEngine.listFiles(srcDir, variant.suffix)), duplicate,
       store = None, clustered = false) { (chunks, status) =>
       CawdExport.write(s, sfDir, tag, None)(
         CawdExport.chunkColumns(chunks.toDF()).write.parquet(_))

@@ -10,7 +10,10 @@ import graft.GraftSession
   * its two size limits: one In chunk, several In chunks (more than
   * [[Dedup.InPushdownChunk]] signatures) and the semi-join fallback (more
   * than [[Dedup.MaxInPushdownSigs]]). Every status must equal the
-  * sequential fold the probe replaces.
+  * sequential fold the probe replaces, and every plan must broadcast the
+  * hits back onto the batch with AQE on and with AQE off (the posture of
+  * a batch ingest, [[CawdEngine.ingestSession]]), where no re-planning
+  * can turn a sort-merge join into a broadcast.
   */
 class StoreProbeSpec extends AnyFunSuite {
 
@@ -22,6 +25,7 @@ class StoreProbeSpec extends AnyFunSuite {
   test("store probe matches a sequential fold across the In-chunk and " +
     "pushdown-cap boundaries") {
     val spark = GraftSession.get("store-probe-spec")
+    val aqeOff = GraftSession.child(spark, "store-probe-aqe-off", aqe = false)
     import spark.implicits._
     try {
       Seq(300, 1300, 5000).foreach { n =>
@@ -41,29 +45,34 @@ class StoreProbeSpec extends AnyFunSuite {
         // every 7th one in a later file
         val rows = (0 until n).map(i => (i % 3, i, i)) ++
           (0 until n by 7).map(i => (3, i, i))
-        val probe = rows.map { case (rank, seq, i) => ("f", rank, seq, sig(i)) }
-          .toDF("file", "fileRank", "seq", "signature")
-        val marked = Dedup.markFirstOccurrence(probe, "seq",
-          StreamingEngine.readStore(spark, store))
+        val probeRows = rows.map { case (rank, seq, i) => ("f", rank, seq, sig(i)) }
+        for (sess <- Seq(spark, aqeOff)) {
+          val probe = sess.createDataFrame(probeRows)
+            .toDF("file", "fileRank", "seq", "signature")
+          val marked = Dedup.markFirstOccurrence(probe, "seq",
+            StreamingEngine.readStore(sess, store))
 
-        val seen = scala.collection.mutable.Set(stored.map(i => hexOf(sig(i))): _*)
-        val expected = rows.sortBy { case (rank, seq, _) => (rank, seq) }
-          .map { case (rank, seq, i) =>
-            (rank, seq) -> (if (seen.add(hexOf(sig(i)))) "miss" else "hit")
-          }.toMap
-        val got = marked.select(col("fileRank"), col("seq"), col("status")).collect()
-          .map(r => (r.getInt(0), r.getInt(1)) -> r.getString(2)).toMap
-        assert(got.size == rows.length && got == expected,
-          s"$n signatures: ${got.count { case (k, v) => !expected.get(k).contains(v) }} " +
-            "statuses differ from the fold")
+          val seen = scala.collection.mutable.Set(stored.map(i => hexOf(sig(i))): _*)
+          val expected = rows.sortBy { case (rank, seq, _) => (rank, seq) }
+            .map { case (rank, seq, i) =>
+              (rank, seq) -> (if (seen.add(hexOf(sig(i)))) "miss" else "hit")
+            }.toMap
+          val got = marked.select(col("fileRank"), col("seq"), col("status")).collect()
+            .map(r => (r.getInt(0), r.getInt(1)) -> r.getString(2)).toMap
+          assert(got.size == rows.length && got == expected,
+            s"$n signatures: ${got.count { case (k, v) => !expected.get(k).contains(v) }} " +
+              "statuses differ from the fold")
 
-        // the path each size takes: one store scan per In chunk up to the
-        // cap, a semi join over it
-        val plan = marked.queryExecution.executedPlan.toString
-        if (n <= Dedup.MaxInPushdownSigs)
-          assert("FileScan parquet".r.findAllIn(plan).length ==
-            (n + Dedup.InPushdownChunk - 1) / Dedup.InPushdownChunk, plan)
-        else assert(plan.contains("LeftSemi"), plan)
+          // the path each size takes: one store scan per In chunk up to the
+          // cap, a semi join over it; either way the hits broadcast
+          val plan = marked.queryExecution.executedPlan.toString
+          if (n <= Dedup.MaxInPushdownSigs)
+            assert("FileScan parquet".r.findAllIn(plan).length ==
+              (n + Dedup.InPushdownChunk - 1) / Dedup.InPushdownChunk, plan)
+          else assert(plan.contains("LeftSemi"), plan)
+          assert("BroadcastHashJoin \\[signature#\\d+\\], \\[signature#\\d+\\], LeftOuter"
+            .r.findFirstIn(plan).nonEmpty && !plan.contains("SortMergeJoin"), plan)
+        }
       }
     } finally spark.stop()
   }

@@ -354,4 +354,59 @@ class StreamingSpec extends AnyFunSuite {
         s"the newest run's file must probe all-hit, got $again")
     } finally spark.stop()
   }
+
+  test("two concurrent streams each re-size only their own latency child") {
+    val spark = GraftSession.get("streaming-pair-spec")
+    val root = Files.createTempDirectory("stream-pair-spec").toString
+    // stream a: one file; stream b: three, so their per-batch shuffle
+    // partition counts differ wherever the cores allow it
+    val inputs = Map("a" -> 1, "b" -> 3).map { case (name, n) =>
+      val in = new java.io.File(root, s"in-$name"); in.mkdirs()
+      (0 until n).foreach { i =>
+        singleParquet(spark.range(i * 1000L, i * 1000L + 700).select(col("id"),
+          concat(lit(s"$name-"), col("id") % 60).as("s")), s"$root/src-$name$i",
+          new java.io.File(in, s"f$i.parquet"))
+      }
+      name -> (in.getPath, n)
+    }
+    val cores = graft.Sizing.cores(spark)
+    // the shuffle partition count each stream's shuffling jobs (more than
+    // one stage) ran with, by streaming query id (Spark propagates the
+    // session's SQL conf and the query id to the jobs of a micro-batch)
+    val parts = new ConcurrentHashMap[String, java.util.Set[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties); id <- Option(p.getProperty("sql.streaming.queryId"))
+             if e.stageInfos.size > 1)
+          parts.computeIfAbsent(id, _ => ConcurrentHashMap.newKeySet[String]())
+            .add(String.valueOf(p.getProperty("spark.sql.shuffle.partitions")))
+    }
+    def start(name: String, run: String) = {
+      val dir = s"$root/$run-$name"
+      (StreamingEngine.start(spark, inputs(name)._1, s"$dir/store", s"$dir/stats",
+        ".parquet", CawdEngine.Parquet, s"$dir/ckpt"), s"$dir/stats")
+    }
+    def stats(dir: String): Seq[String] =
+      spark.read.parquet(dir).collect().map(_.toString).toSeq.sorted
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val solo = Seq("a", "b").map { name =>
+        val (q, dir) = start(name, "solo")
+        q.awaitTermination()
+        name -> stats(dir)
+      }.toMap
+      val pair = Seq("a", "b").map(name => name -> start(name, "pair"))
+      pair.foreach(_._2._1.awaitTermination())
+      ListenerBusDrain.drain(spark.sparkContext)
+      for ((name, (q, dir)) <- pair) {
+        assert(solo(name).nonEmpty && stats(dir) == solo(name), s"stream $name: stats differ")
+        val want = graft.Sizing.streamLatency(inputs(name)._2, cores).toString
+        assert(Option(parts.get(q.id.toString)).map(_.toArray.toSet)
+          .contains(Set(want)), s"stream $name: partitions $parts, want $want")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.stop()
+    }
+  }
 }
