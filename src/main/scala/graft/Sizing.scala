@@ -78,6 +78,20 @@ object Sizing {
     */
   def chunkTasks(nFiles: Int, cores: Int): Int = clamp(nFiles, 1, 1, cores)
 
+  /** Least file bytes worth a hash task of its own. */
+  val HashTaskMinBytes: Long = 1L << 20
+
+  /** Hash tasks of a chunking run over `bytes` of file content: one per
+    * [[HashTaskMinBytes]] up to the core count, and beyond the cores one
+    * per [[graft.cawd.CawdEngine.SplitBytes]], so no task reads more than
+    * a split. At least one.
+    */
+  def hashTasks(bytes: Long, cores: Int): Int = {
+    def ceilDiv(a: Long, b: Long) = (a + b - 1) / b
+    math.max(1L, math.max(math.min(cores.toLong, ceilDiv(bytes, HashTaskMinBytes)),
+      ceilDiv(bytes, graft.cawd.CawdEngine.SplitBytes))).toInt
+  }
+
   /** Distributed chunk-source planning slices: up to 4 per core. */
   def planSlices(nFiles: Int, cores: Int): Int = clamp(nFiles, 1, 1, 4L * cores)
 

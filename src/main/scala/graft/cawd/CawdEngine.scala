@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * in [[Stats.fromStatus]].
   *
   * Scale notes (100 TB target):
-  *   - chunking is embarrassingly parallel per file — a flatMap over a
-  *     file-path Dataset, no shuffle;
+  *   - chunking plans each file in a metadata-only flatMap, then one
+  *     exchange by task id moves the chunk metas to hash tasks sized and
+  *     balanced by the file bytes they read ([[chunkFiles]]);
   *   - the dedup decision is one exchange per probe key: rows shuffle by
   *     `signature` and a `rank()` over arrival order marks first
   *     occurrences ([[Dedup.markFirstOccurrence]]); a hot signature's rows
@@ -67,9 +68,9 @@ object CawdEngine {
     }
   }
 
-  /** Target bytes of file content hashed per task. At 100 TB a 10 GB file
-    * becomes ~640 tasks instead of one straggler; at test scale most files
-    * stay single-bucket.
+  /** Most file bytes one hash bucket reads. At 100 TB a 10 GB file
+    * becomes ~640 buckets instead of one straggler; at test scale most
+    * files stay single-bucket.
     */
   val SplitBytes: Long = 16L << 20
 
@@ -77,64 +78,134 @@ object CawdEngine {
     * distributed stages:
     *
     *   1. PLAN — metadata-only flatMap (footers + stripe footers/page
-    *      headers): emits the ordered chunk metas, each assigned to a byte-
-    *      range bucket of ~[[SplitBytes]] content;
-    *   2. HASH — metas shuffle by (file, bucket) — ~100 B rows, tiny — and
-    *      each group streams ONLY its byte range once through
-    *      [[RegionHash.hashChunks]].
+    *      headers): emits the ordered chunk metas, each placed on a hash
+    *      task and a byte-range bucket ([[cutBuckets]]);
+    *   2. HASH — one exchange moves the metas (~100 B rows) to their
+    *      tasks by id ([[hashPlaced]]), and each (file, bucket) run streams
+    *      ONLY its byte range once through [[RegionHash.hashChunks]].
     *
-    * Parallelism therefore scales with total bytes, not file count (the
-    * reference processes one file at a time on one thread; a naive per-file
-    * flatMap would keep that straggler shape for large files).
+    * The run's files, in rank order, tile one byte range [0, total), and
+    * the [[graft.Sizing.hashTasks]] tasks split it evenly, so the hash
+    * stage is sized and balanced by the bytes it reads, not by the metas it
+    * shuffles or the file count (the reference processes one file at a
+    * time on one thread). The lengths come from one listing per parent
+    * directory.
     */
   def chunkFiles(spark: SparkSession, files: Seq[(String, Int)], fmt: Format,
                  orcMode: OrcChunker.Mode = OrcChunker.StripeColumn,
                  withContent: Boolean = false): Dataset[FileChunk] =
-    chunkFileDs(spreadFiles(spark, files), fmt, orcMode, withContent)
+    chunkSized(spark, withLengths(files), fmt, orcMode, withContent)
 
-  /** A driver-side (path, fileRank) list as a Dataset of
-    * [[graft.Sizing.chunkTasks]] slices, with no exchange: a chunker walks
-    * one file sequentially, so tasks follow the file count.
+  /** [[chunkFiles]] over (path, fileRank, length) files whose lengths the
+    * caller holds already — a stream micro-batch reads them with its paths.
     */
-  private[cawd] def spreadFiles(spark: SparkSession,
-                                files: Seq[(String, Int)]): Dataset[(String, Int)] = {
+  def chunkSized(spark: SparkSession, files: Seq[(String, Int, Long)], fmt: Format,
+                 orcMode: OrcChunker.Mode = OrcChunker.StripeColumn,
+                 withContent: Boolean = false): Dataset[FileChunk] = {
     import spark.implicits._
-    spark.createDataset(spark.sparkContext.parallelize(files,
-      graft.Sizing.chunkTasks(files.size, graft.Sizing.cores(spark))))
+    val (placed, total) = runOffsets(files)
+    chunkPlaced(spreadFiles(spark, placed.map { case (path, rank, offset, _) =>
+      (path, rank, offset) }), total, fmt, orcMode, withContent)
   }
 
-  /** [[chunkFiles]] over an already-distributed (path, fileRank) Dataset —
-    * the streaming engine's backfill path, where the file list never lands
-    * on the driver.
+  /** (path, fileRank, runOffset, length) of (path, fileRank, length) files
+    * tiling one byte range in rank order, and the range's total bytes.
     */
-  def chunkFileDs(files: Dataset[(String, Int)], fmt: Format,
+  private[cawd] def runOffsets(files: Seq[(String, Int, Long)])
+      : (Seq[(String, Int, Long, Long)], Long) = {
+    val byRank = files.sortBy(_._2)
+    val offsets = byRank.scanLeft(0L)(_ + _._3)
+    (byRank.zip(offsets).map { case ((path, rank, len), offset) =>
+      (path, rank, offset, len) }, offsets.last)
+  }
+
+  /** (path, fileRank, length) of each file, from one listing of each parent
+    * directory instead of one status call per file. A file the listing
+    * does not hold gets length 0; its plan fails as it would have.
+    */
+  private[cawd] def withLengths(files: Seq[(String, Int)]): Seq[(String, Int, Long)] = {
+    val conf = graft.HadoopConf.shared
+    val lengths = files.map(_._1).distinct.groupBy(f => new Path(f).getParent)
+      .flatMap { case (dir, paths) =>
+        val listed = dir.getFileSystem(conf).listStatus(dir)
+          .map(s => s.getPath.getName -> s.getLen).toMap
+        paths.map(f => f -> listed.getOrElse(new Path(f).getName, 0L))
+      }
+    files.map { case (path, rank) => (path, rank, lengths(path)) }
+  }
+
+  /** A driver-side list as a Dataset of [[graft.Sizing.chunkTasks]] slices,
+    * with no exchange: a chunker walks one file sequentially, so tasks
+    * follow the file count.
+    */
+  private[cawd] def spreadFiles[T: org.apache.spark.sql.Encoder](
+      spark: SparkSession, files: Seq[T]): Dataset[T] =
+    spark.createDataset(spark.sparkContext.parallelize(files,
+      graft.Sizing.chunkTasks(files.size, graft.Sizing.cores(spark)))(
+      implicitly[org.apache.spark.sql.Encoder[T]].clsTag))
+
+  /** [[chunkFiles]] over a distributed (path, fileRank, runOffset) Dataset,
+    * where `runOffset` is the sum of the lengths of the files ranked before
+    * it and `totalBytes` the sum of them all — the streaming engine's
+    * backfill, whose file list never lands on the driver.
+    */
+  def chunkPlaced(files: Dataset[(String, Int, Long)], totalBytes: Long, fmt: Format,
                   orcMode: OrcChunker.Mode = OrcChunker.StripeColumn,
                   withContent: Boolean = false): Dataset[FileChunk] = {
     val spark = files.sparkSession
     import spark.implicits._
-    val planned: Dataset[(FileChunk, Int)] =
-      files.flatMap { case (path, rank) =>
-        val t0 = System.currentTimeMillis()
-        val metas = planFile(path, rank, fmt, orcMode)
-        val planMs = System.currentTimeMillis() - t0
-        // timing side-channel row (ParsingOverhead source); parentSeq == -2
-        // keeps it out of dedup, exports, and bucket math
-        assignBuckets(metas) :+
-          (FileChunk(path, rank, -1, ChunkType.PlanStat, 0, planMs, -1, "", -2,
-            Array.emptyByteArray, Array.emptyByteArray), 0)
-      }
-    planned
-      .groupByKey { case (c, bucket) => (c.file, bucket) }
-      .flatMapGroups { (key: (String, Int), it: Iterator[(FileChunk, Int)]) =>
-        val (pseudo, real) = it.map(_._1).toArray.partition(_.parentSeq == -2)
-        val t0 = System.currentTimeMillis()
-        val hashed = RegionHash.hashChunks(key._1, real.sortBy(_.seq).toSeq, withContent)
-        val hashMs = System.currentTimeMillis() - t0
-        val rank = (pseudo ++ real).headOption.map(_.fileRank).getOrElse(0)
-        // per-bucket hash-stage duration (TransferTime source)
-        (hashed.iterator ++ pseudo.iterator) ++ Iterator.single(
-          FileChunk(key._1, rank, -1, ChunkType.HashStat, 0, hashMs, -1, "", -2,
-            Array.emptyByteArray, Array.emptyByteArray))
+    val (tasks, taskBytes) = hashStage(spark, totalBytes)
+    hashPlaced(files.flatMap { case (path, rank, offset) =>
+      val t0 = System.currentTimeMillis()
+      val metas = planFile(path, rank, fmt, orcMode)
+      val planMs = System.currentTimeMillis() - t0
+      val placed = cutBuckets(metas, offset, taskBytes, tasks)
+      // timing side-channel row (ParsingOverhead source) in the file's
+      // first bucket; parentSeq == -2 keeps it out of dedup, exports and
+      // hashing
+      val (task, bucket) = placed.headOption.fold((0, 0))(p => (p._2, p._3))
+      placed :+ ((FileChunk(path, rank, -1, ChunkType.PlanStat, 0, planMs, -1, "", -2,
+        Array.emptyByteArray, Array.emptyByteArray), task, bucket))
+    }, tasks, withContent)
+  }
+
+  /** The hash tasks of a run of `totalBytes` file bytes
+    * ([[graft.Sizing.hashTasks]]) and the bytes of each one's even share.
+    */
+  private[cawd] def hashStage(spark: SparkSession, totalBytes: Long): (Int, Long) = {
+    val tasks = graft.Sizing.hashTasks(totalBytes, graft.Sizing.cores(spark))
+    (tasks, math.max(1L, (totalBytes + tasks - 1) / tasks))
+  }
+
+  /** The hash stage: (meta, task, bucket) rows cross ONE exchange to
+    * partition `task` of `tasks` (`repartitionById`, whose count AQE keeps:
+    * it is sized by bytes the exchange does not see), sort by (file,
+    * bucket, seq) — spillable, no task buffers more than one run — and each
+    * (file, bucket) run is hashed in one [[RegionHash.hashChunks]] pass.
+    * A run's timing rows pass through, and a [[ChunkType.HashStat]] row
+    * carries its hash time (TransferTime source).
+    */
+  private[cawd] def hashPlaced(placed: Dataset[(FileChunk, Int, Int)], tasks: Int,
+                         withContent: Boolean): Dataset[FileChunk] = {
+    import placed.sparkSession.implicits._
+    placed
+      .repartitionById(tasks, col("_2"))
+      .sortWithinPartitions(col("_1.file"), col("_3"), col("_1.seq"))
+      .mapPartitions { rows =>
+        val in = rows.buffered
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val (head, _, bucket) = in.head
+          val run = scala.collection.mutable.ArrayBuffer.empty[FileChunk]
+          while (in.hasNext && in.head._3 == bucket && in.head._1.file == head.file)
+            run += in.next()._1
+          val (timing, metas) = run.partition(_.parentSeq == -2)
+          val t0 = System.currentTimeMillis()
+          val hashed = RegionHash.hashChunks(head.file, metas.toSeq, withContent)
+          val hashMs = System.currentTimeMillis() - t0
+          hashed.iterator ++ timing.iterator ++ Iterator.single(
+            FileChunk(head.file, head.fileRank, -1, ChunkType.HashStat, 0, hashMs,
+              -1, "", -2, Array.emptyByteArray, Array.emptyByteArray))
+        }
       }
   }
 
@@ -175,19 +246,35 @@ object CawdEngine {
           Array.emptyByteArray, Array.emptyByteArray))
     }
 
-  /** Bucket metas into ~[[SplitBytes]] byte ranges. Cuts only at top-level
-    * chunk boundaries (`parentSeq == -1`), so Column subchunks — which
-    * overlay their stripe's data region — always share their stripe's
-    * bucket and each bucket reads one contiguous range.
+  /** Place one file's metas on hash tasks and cut them into buckets:
+    * (meta, task, bucket). The run's files tile [0, total) in rank order,
+    * this one from `fileOffset`, and task k takes the stripes that start in
+    * [k·`taskBytes`, (k+1)·`taskBytes`) (the last task takes the rest). A
+    * stripe is a top-level chunk (`parentSeq == -1`) with the chunks linked
+    * to it — overlay columns, and in StripeColumn mode the stripe index
+    * before its data and the footer after it — and it is never cut. A new
+    * bucket starts at a stripe that enters a new task or follows ≥
+    * `target` top-level bytes of its bucket, so each bucket reads one
+    * contiguous range of one file on one task. The defaults (one task)
+    * cut by `target` alone.
     */
-  private[graft] def assignBuckets(metas: Seq[FileChunk],
-                                  target: Long = SplitBytes): Seq[(FileChunk, Int)] = {
+  private[graft] def cutBuckets(metas: Seq[FileChunk], fileOffset: Long = 0L,
+                               taskBytes: Long = Long.MaxValue, tasks: Int = 1,
+                               target: Long = SplitBytes): Seq[(FileChunk, Int, Int)] = {
+    def taskAt(pos: Long) = math.min(tasks - 1L, pos / taskBytes).toInt
+    var task = taskAt(fileOffset)
     var bucket = 0
     var acc = 0L
+    var stripe = Int.MinValue
     metas.map { m =>
-      if (m.parentSeq == -1 && acc >= target) { bucket += 1; acc = 0L }
+      val anchor = if (m.parentSeq == -1) m.seq else m.parentSeq
+      if (anchor != stripe) {
+        stripe = anchor
+        val t = taskAt(fileOffset + m.start)
+        if (t != task || acc >= target) { task = t; bucket += 1; acc = 0L }
+      }
       if (m.parentSeq == -1) acc += m.size
-      (m, bucket)
+      (m, task, bucket)
     }
   }
 
@@ -341,11 +428,17 @@ object CawdEngine {
     * (`net/SpeedupReceiver.java:87-161`). Rows stream through a
     * shuffle-sorted iterator — no whole-file buffer on any task. Returns
     * one row per file: (file, dest, bytes).
+    *
+    * The restore plans on its input session's [[ingestSession]]: its plan
+    * is the hash exchange and the exchange by file, both of a fixed width,
+    * so AQE had nothing to re-plan. What it did was run each exchange as a
+    * job of its own and coalesce the by-file exchange to one writer task.
     */
   def reconstructTo(chunks: Dataset[FileChunk], destDir: String): DataFrame = {
-    val spark = chunks.sparkSession
+    val spark = ingestSession(chunks.sparkSession)
     import spark.implicits._
-    chunks
+    new org.apache.spark.sql.classic.Dataset(spark, chunks.queryExecution.analyzed,
+      chunks.encoder)
       .filter(isCover)
       .repartition(col("file"))
       .sortWithinPartitions(col("file"), col("seq"))
@@ -396,10 +489,12 @@ object CawdEngine {
     * re-read — because its digest needed each file's bytes in seq order
     * on one task. This pass instead digests each maximal
     * BYTE-CONTIGUOUS same-file run of cover rows AS the parquet writer
-    * pulls them, keyed on the chunks' true file offsets (chunk output is
-    * hash-partitioned by (file, ~16 MB bucket), and a partition can hold
-    * NON-adjacent buckets of one file — the fifth-decade probe caught a
-    * seq-keyed merge silently concatenating ranges across such a gap), and
+    * pulls them, keyed on the chunks' true file offsets (a chunk
+    * partition of [[chunkFiles]] holds one contiguous byte range of its
+    * run, but a union of chunk relations, or any other producer, can put
+    * NON-adjacent ranges of one file in one partition — the fifth-decade
+    * probe caught a seq-keyed merge silently concatenating ranges across
+    * such a gap), and
     * writes the partials `(startOff, bytes, sha1, file)` to
     * [[digestSidecarDir]] — the content bytes never cross an exchange and
     * the export is never re-read. [[identityFromDigests]] verifies the
@@ -466,10 +561,8 @@ object CawdEngine {
               s"digestingExportWrite needs materialized content; " +
                 s"chunk $file#$seq carries ${content.length} of $size bytes")
             // a run extends only while the next chunk's offset continues
-            // the current byte range — a partition holds (file, bucket)
-            // groups sorted by key, and the bucket set for one file need
-            // NOT be consecutive, so same-file group boundaries can be
-            // byte-discontinuous
+            // the current byte range — a partition's same-file rows need
+            // NOT be byte-contiguous (see the scaladoc)
             if (file != curFile || start != runStart + runBytes) {
               finishRun()
               curFile = file

@@ -21,10 +21,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * its rolling hash on the previous segment's last 63 bytes, making
   * candidates bit-identical to a sequential scan). Stage 2 — applying
   * min/max bounds over the candidate POSITIONS — is sequential per file but
-  * touches metadata only (~one Long per ~2 KB of data). Stage 3 reuses
-  * [[RegionHash]]'s bucketed streaming hasher. Parallelism in stages 1 and
-  * 3 scales with bytes, not file count: a 10 GB file is ~640 concurrent
-  * tasks, never one straggler.
+  * touches metadata only (~one Long per ~2 KB of data). Stage 3 is the
+  * structural chunkers' hash stage ([[CawdEngine.hashPlaced]]).
+  * Parallelism in stages 1 and 3 scales with bytes, not file count: a
+  * 10 GB file is ~640 concurrent tasks, never one straggler.
   */
 object CdcChunker {
 
@@ -137,56 +137,46 @@ object CdcChunker {
   def chunkFiles(spark: SparkSession, files: Seq[(String, Int)],
                  withContent: Boolean = false): Dataset[FileChunk] = {
     import spark.implicits._
-    // file lengths resolved ON EXECUTORS (one serial driver-side RPC per
-    // file would be the exact startup bottleneck the structural planner
-    // avoids), then exploded into ~SplitBytes segment work units
-    // (path, rank, segStart, segEnd, fileLen) and respread across tasks.
-    val segs = CawdEngine.spreadFiles(spark, files)
-      .flatMap { case (path, rank) =>
-        val p = new Path(path)
-        val len = p.getFileSystem(graft.HadoopConf.shared).getFileStatus(p).getLen
-        if (len == 0) Iterator.single((path, rank, 0L, 0L, 0L))
-        else (0L until len by CawdEngine.SplitBytes).iterator.map { s =>
-          (path, rank, s, math.min(s + CawdEngine.SplitBytes, len), len)
-        }
+    // file lengths from one listing per directory, the run offsets in rank
+    // order, and the ~SplitBytes segment work units (path, rank, runOffset,
+    // fileLen, segStart, segEnd) cut on the driver
+    val (sized, total) = CawdEngine.runOffsets(CawdEngine.withLengths(files))
+    val segs = sized.flatMap { case (path, rank, off, len) =>
+      if (len == 0) Seq((path, rank, off, 0L, 0L, 0L))
+      else (0L until len by CawdEngine.SplitBytes).map { s =>
+        (path, rank, off, len, s, math.min(s + CawdEngine.SplitBytes, len))
       }
-      .repartition(graft.Sizing.cores(spark))
-    // candidate rows (path, rank, fileLen, cutPos); the segment at offset 0
-    // also emits a cutPos = -1 sentinel so every file — including ones with
-    // no candidates at all — reaches the stage-2 group
-    val candidates = segs
-      .flatMap { case (path, rank, s, e, len) =>
-        val sentinel = if (s == 0) Iterator.single((path, rank, len, -1L))
+    }
+    // candidate rows (path, rank, runOffset, fileLen, cutPos); the segment
+    // at offset 0 also emits a cutPos = -1 sentinel so every file —
+    // including ones with no candidates at all — reaches the stage-2 group
+    val candidates = CawdEngine.spreadFiles(spark, segs)
+      .flatMap { case (path, rank, off, len, s, e) =>
+        val sentinel = if (s == 0) Iterator.single((path, rank, off, len, -1L))
                        else Iterator.empty
         val cuts = if (len == 0) Iterator.empty
-          else candidatesInSegment(path, s, e).iterator.map(c => (path, rank, len, c))
+          else candidatesInSegment(path, s, e).iterator.map(c => (path, rank, off, len, c))
         sentinel ++ cuts
       }
     // Stage 2 groups ~one Long per ~2 KB of file data per file — metadata
     // only; the heavy byte work stays in stages 1 and 3. Candidates buffer
     // as PRIMITIVE longs (a 10 GB file is ~5M candidates = ~40 MB), never
-    // as row tuples.
-    val metas = candidates
-      .groupByKey { case (path, _, _, _) => path }
+    // as row tuples. Each file's chunks are placed on the hash tasks of
+    // the run as [[CawdEngine.chunkFiles]] places stripes.
+    val (tasks, taskBytes) = CawdEngine.hashStage(spark, total)
+    val placed = candidates
+      .groupByKey(_._1)
       .flatMapGroups { (path, it) =>
-        val first = it.next()
-        val (_, rank, len, c0) = first
+        val (_, rank, off, len, c0) = it.next()
         val buf = scala.collection.mutable.ArrayBuilder.make[Long] // unboxed
         if (c0 >= 0) buf += c0
-        it.foreach { r => if (r._4 >= 0) buf += r._4 }
-        cutsToMetas(path, rank, len,
-          selectCuts(scala.collection.immutable.ArraySeq.unsafeWrapArray(buf.result()), len)).iterator
+        it.foreach { r => if (r._5 >= 0) buf += r._5 }
+        CawdEngine.cutBuckets(cutsToMetas(path, rank, len,
+          selectCuts(scala.collection.immutable.ArraySeq.unsafeWrapArray(buf.result()), len)),
+          off, taskBytes, tasks).iterator
       }
-    // Stage 3: bucketed streaming hash, one task per ~SplitBytes of content.
-    // A chunk is bucketed by its start; RegionHash reads each group's exact
-    // covered range, so a chunk straddling a bucket edge just extends its
-    // group's read slightly past the edge.
-    metas
-      .groupByKey(c => (c.file, (c.start / CawdEngine.SplitBytes).toInt))
-      .flatMapGroups { (key: (String, Int), it: Iterator[FileChunk]) =>
-        RegionHash.hashChunks(key._1, it.toArray.sortBy(_.seq).toSeq,
-          withContent).iterator
-      }
+    // Stage 3: the byte-balanced hash stage; CDC emits no timing rows
+    CawdEngine.hashPlaced(placed, tasks, withContent).filter(_.parentSeq != -2)
   }
 
   private def cutsToMetas(path: String, rank: Int, len: Long,

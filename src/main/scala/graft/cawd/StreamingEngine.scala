@@ -295,24 +295,25 @@ object StreamingEngine {
     // ranks are per-batch; earlier batches' chunks are already in the store,
     // so cross-batch ordering is enforced by store membership, not rank.
     // Rank strategy = ONE bounded collect (replaces the old count action +
-    // window-rank job): paths up to the 2²⁰ cap land on the driver — the
-    // same ≤ ~100 MB budget the old single-task window sort already spent —
-    // get ranked in UTF-8 byte order, and re-parallelize without a shuffle.
-    // Larger backfills fall back to the fully distributed range-partitioned
-    // sort (no driver collect beyond the capped probe, no exact count —
-    // the cap probe IS the strategy pick).
-    val headPaths = batch.select(col("path"))
-      .limit(maxRankFiles + 1)
-      .collect().map(_.getString(0).replaceFirst("^file:", ""))
-    if (headPaths.isEmpty) return
-    val small = headPaths.length <= maxRankFiles
+    // window-rank job): (path, length) rows up to the 2²⁰ cap land on the
+    // driver — the same ≤ ~100 MB budget the old single-task window sort
+    // already spent — get ranked in UTF-8 byte order, and re-parallelize
+    // without a shuffle; the file source's lengths size the hash stage, so
+    // a micro-batch stats no file. Larger backfills fall back to the fully
+    // distributed range-partitioned sort (no driver collect beyond the
+    // capped probe, no exact count — the cap probe IS the strategy pick).
+    val head = batch.select(col("path"), col("length"))
+      .limit(maxRankFiles + 1).collect()
+      .map(r => (r.getString(0).replaceFirst("^file:", ""), r.getLong(1)))
+    if (head.isEmpty) return
+    val small = head.length <= maxRankFiles
     // Large backfills must NOT inherit the latency posture this batch's
     // session may carry (the stream runs ON the latency child, whose last
     // micro-batch can have left shuffle.partitions as low as 2): a
     // million-file backfill wants AQE back on (skew/coalesce rescue) and
     // full-width shuffles, so it runs on its own default-posture child.
     val sess =
-      if (small) latencySession(spark, tag, headPaths.length)
+      if (small) latencySession(spark, tag, head.length)
       else graft.GraftSession.child(spark, "stream-backfill", aqe = true,
         shufflePartitions = Some(graft.Sizing.cores(spark)),
         listingThreshold = Some(ListingThreshold))
@@ -325,26 +326,39 @@ object StreamingEngine {
     }
     val chunked =
       if (small)
-        variant.chunk(sess, headPaths.sortBy(_.getBytes("UTF-8"))(CawdEngine.Utf8Order)
-          .toSeq.zipWithIndex)
-      else
+        variant.chunkSized(sess, head.sortBy(_._1.getBytes("UTF-8"))(CawdEngine.Utf8Order)
+          .toSeq.zipWithIndex.map { case ((path, len), rank) => (path, rank, len) })
+      else {
         // Bind the WHOLE pipeline to the backfill child: building this via
         // the incoming `batch`'s lineage (spark.implicits' .toDF) would plan
         // chunk/probe/write under the latency child's SQLConf — AQE off,
         // shuffle.partitions as low as the last micro-batch left them — and
         // only the store read would see the backfill posture (round-8
-        // advice). Dropping to the RDD severs the old lineage; createDataFrame
+        // advice). Dropping to the RDD severs the old lineage; createDataset
         // on `sess` re-roots it.
-        variant.chunkDs(sess.createDataFrame(
-          batch.select(col("path")).as[String].rdd
-            .map(_.replaceFirst("^file:", ""))
-            .sortBy(_.getBytes("UTF-8"))(CawdEngine.Utf8Order,
-              scala.reflect.classTag[Array[Byte]])
-            .zipWithIndex()
-            .map { case (p, i) => (p, i.toInt) }
-            .repartition(graft.Sizing.cores(spark)))
-          .toDF("path", "fileRank")
-          .as[(String, Int)](org.apache.spark.sql.Encoders.product[(String, Int)]))
+        val sorted = batch.select(col("path"), col("length")).as[(String, Long)].rdd
+          .map { case (p, len) => (p.replaceFirst("^file:", ""), len) }
+          .sortBy(_._1.getBytes("UTF-8"))(CawdEngine.Utf8Order,
+            scala.reflect.classTag[Array[Byte]])
+        // (files, bytes) per sorted partition, one job: each partition's
+        // first rank and run offset, as zipWithIndex counts its ranks
+        val sums = sorted.mapPartitions { it =>
+          var (n, bytes) = (0L, 0L)
+          it.foreach { case (_, len) => n += 1; bytes += len }
+          Iterator.single((n, bytes))
+        }.collect()
+        val firsts = sums.scanLeft((0L, 0L)) { case ((n0, b0), (n, b)) => (n0 + n, b0 + b) }
+        val placed = sorted.mapPartitionsWithIndex { (i, it) =>
+          var (rank, offset) = firsts(i)
+          it.map { case (path, len) =>
+            val p = (path, rank.toInt, offset)
+            rank += 1; offset += len
+            p
+          }
+        }.repartition(graft.Sizing.cores(spark))
+        variant.chunkPlaced(sess.createDataset(placed)(
+          org.apache.spark.sql.Encoders.product[(String, Int, Long)]), firsts.last._2)
+      }
     // Large backfills take the clustered store write: their miss count is
     // unbounded, so they get one bounded shuffle into ≤ NumSigBuckets
     // sorted files. Micro-batches keep the no-shuffle latency path.

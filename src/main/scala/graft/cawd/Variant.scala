@@ -41,8 +41,9 @@ object Variant {
       Dedup.flatStatus(chunks, dedupable, threshold, store)
   }
 
-  /** A flat variant chunked by file structure; the streaming engine's
-    * backfill path runs these over a distributed file list ([[chunkDs]]).
+  /** A flat variant chunked by file structure; the streaming engine runs
+    * these over files whose lengths it holds ([[chunkSized]]), or over a
+    * distributed list whose byte offsets it ranked ([[chunkPlaced]]).
     */
   sealed abstract class Structural(name: String, suffix: String,
                                    fmt: CawdEngine.Format, orcMode: OrcChunker.Mode,
@@ -51,8 +52,10 @@ object Variant {
     def chunk(spark: SparkSession, files: Seq[(String, Int)],
               withContent: Boolean = false): Dataset[FileChunk] =
       CawdEngine.chunkFiles(spark, files, fmt, orcMode, withContent)
-    def chunkDs(files: Dataset[(String, Int)]): Dataset[FileChunk] =
-      CawdEngine.chunkFileDs(files, fmt, orcMode)
+    def chunkSized(spark: SparkSession, files: Seq[(String, Int, Long)]): Dataset[FileChunk] =
+      CawdEngine.chunkSized(spark, files, fmt, orcMode)
+    def chunkPlaced(files: Dataset[(String, Int, Long)], totalBytes: Long): Dataset[FileChunk] =
+      CawdEngine.chunkPlaced(files, totalBytes, fmt, orcMode)
   }
 
   /** S1: whole stripes and the file footer (`orc/net/NaiveORCStreamer.java:124-141`). */

@@ -33,8 +33,9 @@ import graft.cawd.{CawdEngine, FileChunk, OrcChunker, RegionHash}
   *     through a bounded window (hash-only dedup mode);
   *   - `content` → chunk bytes are materialized (reconstruction mode).
   *
-  * Partition planning mirrors [[CawdEngine.chunkFiles]]: one input
-  * partition per ~[[CawdEngine.SplitBytes]] byte-range bucket, so read
+  * Partition planning cuts each file as [[CawdEngine.cutBuckets]] does on
+  * one task: one input partition per ~[[CawdEngine.SplitBytes]] byte-range
+  * bucket, so read
   * parallelism scales with bytes, not file count. Footers are read on the
   * driver during planning — fine for query-shaped use; the engine's
   * distributed two-stage path remains the bulk-pipeline entry.
@@ -188,8 +189,8 @@ private[sources] class ChunkScan(props: Map[String, String], required: StructTyp
       .filter { case (f, _) => filePred(f) }
     def planOne(file: String, rank: Int): Seq[ChunkInputPartition] =
       CawdEngine.planFile(file, rank, fmt, orcMode)
-        .pipe(ms => CawdEngine.assignBuckets(ms))
-        .groupBy(_._2).toSeq.sortBy(_._1)
+        .pipe(ms => CawdEngine.cutBuckets(ms))
+        .groupBy(_._3).toSeq.sortBy(_._1)
         .map { case (_, ms) =>
           ChunkInputPartition(file, ms.map(_._1).filter(m => typePred(m.chunkType)).toArray)
         }

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * expected side is the site's own formula written out here, so a change
   * to any count has to change this table. The sites whose count is the
   * core count itself (the session default, stream-backfill, stream-stats,
-  * Media.spread, the CDC segment and restore respreads) take
-  * [[Sizing.cores]] and have no formula to pin.
+  * Media.spread, the restore respread) take [[Sizing.cores]] and have no
+  * formula to pin.
   */
 class SizingSpec extends AnyFunSuite {
 
@@ -54,6 +54,10 @@ class SizingSpec extends AnyFunSuite {
     Site("CawdEngine/CdcChunker/StreamingEngine chunk tasks, files", 10L, 2000L,
       (n, c) => Sizing.chunkTasks(n.toInt, c),
       (n, c) => math.max(1L, math.min(n, c.toLong))),
+    Site("CawdEngine/CdcChunker hash tasks, file bytes", 63L * MiB, 100000L * MiB,
+      (b, c) => Sizing.hashTasks(b, c),
+      (b, c) => math.max(math.min(c.toLong, (b + MiB - 1) / MiB),
+        (b + 16 * MiB - 1) / (16 * MiB))),
     Site("ChunkDataSource planning slices, files", 10L, 2000L,
       (n, c) => Sizing.planSlices(n.toInt, c),
       (n, c) => math.min(n, 4L * c)),
@@ -76,6 +80,13 @@ class SizingSpec extends AnyFunSuite {
     assert(Sizing.denseVectors(2000L, 32) == 4)
     assert(Sizing.denseVectors(2000000L, 32) == 32)
     assert(Sizing.forInput(810 * MiB, 2 * MiB, 32) == 405)
+    // hash tasks: the 63 MB orc_versions run fills 4 cores, a 0.23 MB
+    // stream wave and an empty run take one task, and past the cores each
+    // task reads at most one 16 MiB split
+    assert(Sizing.hashTasks(63L * MiB, 4) == 4)
+    assert(Sizing.hashTasks(230L * 1024, 4) == 1)
+    assert(Sizing.hashTasks(0L, 4) == 1)
+    assert(Sizing.hashTasks(100L * 1024 * MiB, 32) == 6400)
     // the session default reads the same core count GraftSession.get used
     assert(Sizing.localCores == sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
       .getOrElse(math.max(2, Runtime.getRuntime.availableProcessors())))

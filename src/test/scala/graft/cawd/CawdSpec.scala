@@ -387,38 +387,60 @@ class CawdSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(copy.getOrElse("hit", 0L) > 0L)
   }
 
-  test("assignBuckets: splits by bytes at top-level boundaries; overlays stay with their stripe") {
+  test("cutBuckets: splits by bytes and tasks at stripe boundaries; " +
+    "overlays and linked chunks stay with their stripe") {
     def mk(seq: Int, t: String, start: Long, size: Long, parent: Int) =
       FileChunk("f", 0, seq, t, start, size, -1, "", parent,
         Array.emptyByteArray, Array.emptyByteArray)
-    // 6 stripes of 10 MB, each with 2 column overlays + linked footer
+    // 6 stripes of 10 MB as StripeColumn lays them out: the stripe index
+    // linked BEFORE its data, 2 column overlays and a linked footer after
     var seq = -1
     val metas = (0 until 6).flatMap { s =>
       val base = s * 10L * (1 << 20)
+      val indexSeq = { seq += 1; seq }
       val stripeSeq = { seq += 1; seq }
-      Seq(mk(stripeSeq, ChunkType.StripeData, base, 10L << 20, -1),
-        mk({ seq += 1; seq }, ChunkType.Column, base, 5L << 20, stripeSeq),
-        mk({ seq += 1; seq }, ChunkType.Column, base + (5L << 20), 5L << 20, stripeSeq),
-        mk({ seq += 1; seq }, ChunkType.StripeFooter, base + (10L << 20) - 100, 100, stripeSeq))
+      Seq(mk(indexSeq, ChunkType.StripeIndex, base, 100, stripeSeq),
+        mk(stripeSeq, ChunkType.StripeData, base + 100, (10L << 20) - 200, -1),
+        mk({ seq += 1; seq }, ChunkType.Column, base + 100, 5L << 20, stripeSeq),
+        mk({ seq += 1; seq }, ChunkType.Column, base + 100 + (5L << 20),
+          (5L << 20) - 200, stripeSeq),
+        mk({ seq += 1; seq }, ChunkType.StripeFooter, base + (10L << 20) - 100, 100,
+          stripeSeq))
     }
-    val buckets = CawdEngine.assignBuckets(metas, target = 16L << 20)
-    val byBucket = buckets.groupMap(_._2)(_._1)
-    assert(byBucket.size > 1, "60 MB of top-level bytes must split at 16 MB target")
-    // every overlay/linked chunk shares its stripe's bucket
-    val stripeBucket = buckets.collect {
-      case (m, b) if m.chunkType == ChunkType.StripeData => m.seq -> b
-    }.toMap
-    buckets.foreach { case (m, b) =>
-      if (m.parentSeq >= 0)
-        assert(b == stripeBucket(m.parentSeq), s"chunk ${m.seq} split from its stripe")
-    }
-    // buckets cover disjoint, contiguous byte ranges in order
-    val ranges = byBucket.toSeq.sortBy(_._1).map { case (_, ms) =>
-      (ms.map(_.start).min, ms.map(m => m.start + m.size).max)
-    }
-    ranges.sliding(2).foreach {
-      case Seq(a, b) => assert(a._2 <= b._1, s"bucket ranges overlap: $a $b")
-      case _ =>
+    // alone on one task, 60 MB of stripes split at the 16 MB target; in a
+    // run that puts this file at 7 MB and gives each of 5 tasks 14 MB,
+    // every task boundary cuts a bucket too
+    for ((offset, taskBytes, tasks) <- Seq((0L, Long.MaxValue, 1), (7L << 20, 14L << 20, 5))) {
+      val placed = CawdEngine.cutBuckets(metas, offset, taskBytes, tasks, target = 16L << 20)
+      val byBucket = placed.groupMap(_._3)(_._1)
+      assert(byBucket.size > 1, "60 MB of top-level bytes must split at 16 MB target")
+      // every overlay/linked chunk shares its stripe's bucket
+      val stripeBucket = placed.collect {
+        case (m, _, b) if m.chunkType == ChunkType.StripeData => m.seq -> b
+      }.toMap
+      placed.foreach { case (m, _, b) =>
+        if (m.parentSeq >= 0)
+          assert(b == stripeBucket(m.parentSeq), s"chunk ${m.seq} split from its stripe")
+      }
+      // buckets cover disjoint, contiguous byte ranges in order
+      val ranges = byBucket.toSeq.sortBy(_._1).map { case (_, ms) =>
+        (ms.map(_.start).min, ms.map(m => m.start + m.size).max)
+      }
+      ranges.sliding(2).foreach {
+        case Seq(a, b) => assert(a._2 <= b._1, s"bucket ranges overlap: $a $b")
+        case _ =>
+      }
+      // no bucket straddles a task boundary, and each stripe sits on the
+      // task its start falls in
+      placed.groupMap(_._3)(_._2).foreach { case (b, ts) =>
+        assert(ts.distinct.size == 1, s"bucket $b spans tasks ${ts.distinct}")
+      }
+      placed.foreach { case (m, t, _) =>
+        if (m.parentSeq == -1)
+          assert(t == math.min(tasks - 1L, (offset + m.start - 100) / taskBytes),
+            s"stripe ${m.seq} on task $t")
+      }
+      if (tasks > 1) assert(placed.map(_._2).distinct.size == tasks)
     }
   }
 

@@ -7,8 +7,16 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+  AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSession
@@ -84,6 +92,51 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  /** `paths` as the binaryFile source hands them to a micro-batch:
+    * (path, length) rows.
+    */
+  private def arrivals(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    import spark.implicits._
+    paths.map(p => (p, new java.io.File(p.stripPrefix("file:")).length()))
+      .toDF("path", "length")
+  }
+
+  /** (partitions, coalesced) of every read of a by-id exchange (the hash
+    * stage's) in the final plans `sess` ran while `body` ran, through AQE
+    * stages and cached relations.
+    */
+  private def hashExchangeReads(sess: SparkSession)(body: => Unit): Seq[(Int, Boolean)] = {
+    def passThrough(p: SparkPlan): Option[Int] = p match {
+      case s: ShuffleQueryStageExec => s.shuffle.outputPartitioning match {
+        case x: ShufflePartitionIdPassThrough => Some(x.numPartitions)
+        case _ => None
+      }
+      case _ => None
+    }
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => Nil
+    }) ++ p.children).flatMap(walk)
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val nodes = walk(qe.executedPlan)
+        val coalesced = nodes.collect {
+          case r: AQEShuffleReadExec if passThrough(r.child).isDefined => r.child
+        }
+        nodes.foreach(n => passThrough(n).foreach(k =>
+          reads.add((k, coalesced.exists(_ eq n)))))
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sess.listenerManager.register(listener)
+    try { body; ListenerBusDrain.drain(sess.sparkContext) }
+    finally sess.listenerManager.unregister(listener)
+    reads.asScala.toSeq
+  }
+
   private def storeSignatures(spark: org.apache.spark.sql.SparkSession,
                               store: String): Seq[String] =
     spark.read.parquet(store)
@@ -155,7 +208,7 @@ class StreamingSpec extends AnyFunSuite {
     val statsBefore = spark.read.parquet(stats).collect().map(_.toString).sorted
     val storeBefore = storeSnapshot()
     import spark.implicits._
-    val replay = Seq(s"file:$inDir/b.parquet").toDF("path")
+    val replay = arrivals(spark, Seq(s"file:$inDir/b.parquet"))
     StreamingEngine.processBatch(spark, replay, lastBatch, store, stats,
       CawdEngine.Parquet)
     assert(spark.read.parquet(stats).collect().map(_.toString).sorted
@@ -206,10 +259,12 @@ class StreamingSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("backfill-spec").toString
     val inDir = s"$root/in"; new java.io.File(inDir).mkdirs()
     val store = s"$root/store"; val stats = s"$root/stats"
-    // three distinct small parquet files
+    // three distinct parquet files of ~1 MB, so the backfill's bytes need
+    // more than one hash task
     (0 until 3).foreach { i =>
-      spark.range(i * 1000, i * 1000 + 500).select(col("id"),
-        concat(lit(s"w$i-"), col("id")).as("s"))
+      spark.range(i * 10000, i * 10000 + 8000).select(col("id"),
+        concat(lit(s"w$i-"), col("id")).as("s"),
+        sha2(concat(lit(s"w$i-"), col("id")), 512).as("h"))
         .coalesce(1).write.mode("overwrite").parquet(s"$root/src$i")
       val f = new java.io.File(s"$root/src$i").listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -221,7 +276,7 @@ class StreamingSpec extends AnyFunSuite {
       // small branch first (f0 only): latency posture, no AdaptiveSparkPlan
       graft.StreamingPlanCapture.reset()
       StreamingEngine.processBatch(spark,
-        paths.filter(_.endsWith("f0.parquet")).toSeq.toDF("path"), 0L,
+        arrivals(spark, paths.filter(_.endsWith("f0.parquet")).toSeq), 0L,
         store, stats, CawdEngine.Parquet)
       val smallPlans = graft.StreamingPlanCapture.all.map(_._2).mkString("\n")
       assert(!smallPlans.contains("AdaptiveSparkPlan"),
@@ -233,11 +288,22 @@ class StreamingSpec extends AnyFunSuite {
       // (AQE ON) — round-8 advice: building `ranked` from the incoming
       // batch's lineage left everything on the latency child's SQLConf.
       graft.StreamingPlanCapture.reset()
-      StreamingEngine.processBatch(spark, paths.toSeq.toDF("path"), 1L,
-        store, stats, CawdEngine.Parquet, maxRankFiles = 2)
+      val backfill = GraftSession.child(spark, "stream-backfill", aqe = true)
+      val reads = hashExchangeReads(backfill) {
+        StreamingEngine.processBatch(spark, arrivals(spark, paths.toSeq), 1L,
+          store, stats, CawdEngine.Parquet, maxRankFiles = 2)
+      }
       val bigPlans = graft.StreamingPlanCapture.all.map(_._2).mkString("\n")
       assert(bigPlans.contains("AdaptiveSparkPlan"),
         "backfill batch must plan on the AQE-on backfill child")
+      // its hash stage runs one task per share of the batch's bytes, and
+      // AQE coalesces none of them
+      val tasks = graft.Sizing.hashTasks(
+        paths.map(p => new java.io.File(p.stripPrefix("file:")).length()).sum,
+        graft.Sizing.cores(spark))
+      assert(tasks > 1)
+      assert(reads.nonEmpty && reads.forall(_ == ((tasks, false))),
+        s"hash exchange reads $reads, want $tasks uncoalesced partitions")
       // identical dedup semantics on both branches: batch 1 re-saw batch
       // 0's bytes, so every dedupable chunk hits
       val s = spark.read.parquet(stats)
@@ -312,7 +378,7 @@ class StreamingSpec extends AnyFunSuite {
             .otherwise(col("value")))
         .collect().map(_.toString).toSeq.sorted
       spark.catalog.clearCache()
-      StreamingEngine.processBatch(spark, Seq(s"file:${file.getPath}").toDF("path"),
+      StreamingEngine.processBatch(spark, arrivals(spark, Seq(s"file:${file.getPath}")),
         0L, s2, stats, CawdEngine.Parquet)
       assert(spark.sharedState.cacheManager.isEmpty,
         "processBatch left a cached relation behind")
